@@ -48,13 +48,20 @@ def _is_parquet_dir(path: str) -> bool:
     return any(n.endswith(".parquet") or n.startswith("part-") for n in names)
 
 
+def _fs(spark: SparkSession, path: str):
+    """(FileSystem, Path, jvm) for ``path`` through the Hadoop FS API —
+    the one lookup every driver-side file operation goes through, so
+    file://, hdfs:// and s3a:// roots take the same code path."""
+    jvm = spark._jvm
+    p = jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p, jvm
+
+
 def _hadoop_path_exists(spark: SparkSession, path: str) -> bool:
     """Existence check through the Hadoop FileSystem API: driver-local
     os.path.exists is always False for s3a://... / hdfs://... roots,
     which silently turned mode='ignore' into recompute-and-overwrite."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, p, _ = _fs(spark, path)
     return bool(fs.exists(p))
 
 

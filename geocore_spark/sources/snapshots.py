@@ -19,10 +19,10 @@ Why this shape survives 100 TB:
   rename is the single atomic step. A crash anywhere earlier leaves
   orphan files no reader can see — readers always plan from a committed
   manifest, so every read is a consistent snapshot even while a writer
-  is mid-commit. (Contrast operators/compact.py and operators/upsert.py,
-  which mutate a LIVE parquet dir and can only promise
-  duplicates-not-loss; under the commit log those same rewrites become
-  atomic: new files + new manifest, old files retained for time travel.)
+  is mid-commit. Maintenance commits (MERGE, compaction, rewrite) are
+  atomic the same way: new files + new manifest, old files retained
+  for time travel — never a live-directory swap that could expose
+  duplicates.
 - **Optimistic concurrency.** A commit stages its manifest, renames it
   into the version slot, then reads the slot back and checks its own
   commit uuid landed — rename refuses an existing destination on HDFS
@@ -98,6 +98,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from geocore_spark.sources.io import _fs
+
 # reserved column names inside delete-vector files (never collide with a
 # user schema — readers join on them and drop them before returning rows)
 _DV_FILE = "_gc_file"
@@ -129,12 +131,6 @@ class _AlreadyApplied(Exception):
 # ---------------------------------------------------------------------------
 # filesystem plumbing (Hadoop FS API: same code on file://, hdfs://, s3a://)
 # ---------------------------------------------------------------------------
-
-
-def _fs(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p, jvm
 
 
 def _write_text(spark: SparkSession, path: str, text: str) -> None:
@@ -812,19 +808,17 @@ def merge_into(
     row whose key matches a source row is tombstoned via positional
     delete vectors, every source row lands as new data files — WHEN
     MATCHED THEN UPDATE (whole-row replace), WHEN NOT MATCHED THEN
-    INSERT, with zero target files rewritten. The operators/upsert.py
-    semantics under the commit log, where they gain atomic visibility
-    (a reader sees pre-merge or post-merge, never the half-state a raw-
-    dir upsert exposes mid-swap) and time travel.
+    INSERT, with zero target files rewritten. Visibility is atomic (a
+    reader sees pre-merge or post-merge, never a half-state) and the
+    pre-merge version stays readable by time travel.
 
     At 100 TB: O(batch) bytes written, and the victim lookup scans only
     the files the batch can possibly hit when ``key_stats`` is given —
     a per-file [min, max] manifest of ``keys[0]`` (build once per
-    maintenance cycle with :func:`snapshot_file_stats`, the
-    operators/upsert.py manifest move). Hit files are picked by
-    searchsorted of the batch's (bounded) key set against each file's
-    range; on a key-clustered layout (``rewrite_files``/
-    ``compact_snapshot`` with order_col=key) a batch hits few files.
+    maintenance cycle with :func:`snapshot_file_stats`). Hit files are
+    picked by searchsorted of the batch's (bounded) key set against
+    each file's range; on a key-clustered layout (``rewrite_files``
+    with order_col=key) a batch hits few files.
     On a HASH layout every file's range covers the key space and range
     stats prune nothing — pass ``key_blooms`` (a persisted
     :func:`snapshot_file_blooms` sidecar of ``keys[0]``) and victim
@@ -1007,9 +1001,12 @@ def compact_snapshot(
     commit is invisible to :func:`read_changes`, like rewrite.
     Non-rebaseable (rewrite_files guard). ``order_col``: sort each
     merged file on this column (AFTER the coalesce — concatenated sorted
-    runs are not sorted, the operators/compact.py lesson) so a clustered
-    layout keeps its per-file sortedness, which is what write-side
-    stats pruning feeds on. Returns
+    runs are not sorted) so a clustered layout keeps its per-file
+    sortedness, which is what write-side stats pruning feeds on. Bins
+    are packed in manifest order, not curve order: a merged file's
+    range is the union of its members' ranges, so re-cluster with
+    :func:`rewrite_files` (``order_col``) when ranges have drifted wide.
+    Returns
     {"files_compacted", "files_written", "version"} — version unchanged
     and no commit when fewer than two live files qualify."""
     if target_bytes < small_bytes:

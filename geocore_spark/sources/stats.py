@@ -17,7 +17,8 @@ byte of data. This module is the manifest for a raw-parquet lake:
   reader over ONLY those files plus a report of what was skipped.
 
 Pairs with functions/layout (Z-ordering is what makes per-file ranges
-TIGHT) and operators/compact (which preserves them). Pruning is sound,
+TIGHT) and sources/snapshots.rewrite_files (``order_col`` re-clusters a
+snapshot table so its ranges stay tight). Pruning is sound,
 never exact: a kept file may still hold no matching rows (the range
 intersects, the rows don't), so the caller applies the real predicate
 on the pruned frame — correctness never depends on the stats, only

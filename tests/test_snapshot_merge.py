@@ -6,15 +6,24 @@ Load-bearing physics pinned here:
 
 - merge is ONE atomic commit: matched rows tombstoned via positional
   vectors + the batch appended — ZERO pre-existing files rewritten;
-- the source-batch uniqueness gate (duplicate/null keys raise);
+- the source-batch uniqueness gate (duplicate/null keys raise); an
+  empty batch commits nothing;
 - exactly-once under batch re-delivery (txn token), and loud
   ConcurrentCommit on a real race, with staged files cleaned up;
 - read_changes renders a merge as deletes-then-inserts and skips
   compaction commits entirely (no logical change);
 - compaction rewrites ONLY the small files, applies existing delete
   vectors while doing so (new positions ≠ old positions), and leaves
-  time travel intact.
+  time travel intact;
+- compaction racing MERGE or keyed erasure in another JVM loses no
+  update and never makes an erased key readable again.
 """
+
+import os
+import subprocess
+import sys
+import time
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -106,7 +115,16 @@ def test_merge_source_validation(spark, root):
         snap.merge_into(
             spark, root, _batch(spark, 0, 5, 1).withColumn("v", F.lit(1)), ["id"]
         )
-    # failed validations left no orphan staged files visible to a rewrite
+    # an empty batch is a no-op: no commit, nothing written
+    v0 = snap.latest_version(spark, root)
+    m, stats = snap.merge_into(
+        spark, root, spark.createDataFrame([], "id bigint, v bigint"), ["id"]
+    )
+    assert m is None
+    assert (stats["rows_written"], stats["rows_tombstoned"]) == (0, 0)
+    assert snap.latest_version(spark, root) == v0
+    # failed validations and the empty batch left no orphan staged files
+    # visible to a rewrite
     m = snap.load_manifest(spark, root)
     on_disk = {p for p, _, _ in snap._list_dir(spark, root + "/data")}
     assert on_disk == set(m["data_files"])
@@ -421,6 +439,69 @@ def test_merge_bloom_validation(spark, root):
         snap.merge_into(spark, froot, fbatch, ["k"], key_blooms=fbl)
 
 
+# ---------------------------------------------------------------------------
+# cross-process races against compact_snapshot
+# ---------------------------------------------------------------------------
+
+# every race worker: its own JVM, argv = (root, n, tag); touches
+# root/.ready-<tag> once its session is up, then waits for root/.go
+_WORKER_PREAMBLE = """
+import os, sys, time
+from pyspark.sql import functions as F
+from geocore_spark.session import get_spark
+from geocore_spark.sources import snapshots as snap
+
+root, n, tag = sys.argv[1], int(sys.argv[2]), sys.argv[3]
+spark = get_spark("race-" + tag, master="local[2]", shuffle_partitions=2)
+open(f"{root}/.ready-{tag}", "w").close()
+while not os.path.exists(root + "/.go"):
+    time.sleep(0.05)
+"""
+
+
+def _run_race(root, tmp_path, workers):
+    """Launch each ``(tag, body, n)`` worker and release them together
+    only after every session is up, so the operation windows genuinely
+    overlap. Returns each worker's stdout."""
+    env = dict(os.environ, PYTHONPATH=str(Path(__file__).resolve().parents[1]))
+    procs = []
+    for tag, body, n in workers:
+        script = tmp_path / f"race-{tag}.py"
+        script.write_text(_WORKER_PREAMBLE + body)
+        procs.append(subprocess.Popen(
+            [sys.executable, str(script), root, str(n), tag],
+            env=env, stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True,
+        ))
+    try:
+        deadline = time.time() + 300
+        while not all(os.path.exists(f"{root}/.ready-{t}") for t, _, _ in workers):
+            assert time.time() < deadline, "workers never came up"
+            time.sleep(0.2)
+        open(root + "/.go", "w").close()
+        outs = []
+        for p in procs:
+            out, err = p.communicate(timeout=600)
+            assert p.returncode == 0, f"worker failed:\n{out}\n{err[-3000:]}"
+            outs.append(out)
+        return outs
+    finally:
+        for p in procs:
+            if p.poll() is None:
+                p.kill()
+                p.wait()
+
+
+def _history(spark, root):
+    """Operation of every version 1..latest, asserting the chain is
+    contiguous."""
+    ops = []
+    for v in range(1, snap.latest_version(spark, root) + 1):
+        m = snap.load_manifest(spark, root, v)
+        assert m["version"] == v
+        ops.append(m["operation"])
+    return ops
+
+
 def test_concurrent_compact_vs_merge_race(spark, root, tmp_path):
     """r4 verdict item #6 — the classic MoR conflict, cross-process:
     one JVM repeatedly MERGEs (tombstoning rows in files a concurrent
@@ -431,28 +512,10 @@ def test_concurrent_compact_vs_merge_race(spark, root, tmp_path):
     sequential merge algebra, every merge landed exactly once (txn
     tokens), and the history is a contiguous create/merge/compact
     chain."""
-    import os
-    import subprocess
-    import sys
-    import time as _time
-
     df = spark.range(0, 100).withColumn("v", F.col("id") * 3)
     snap.create_table(spark, root, df.repartition(6))
     n_merges, n_compacts = 4, 8
-
-    merger = tmp_path / "merger.py"
-    merger.write_text(
-        """
-import sys, time
-from pyspark.sql import functions as F
-from geocore_spark.session import get_spark
-from geocore_spark.sources import snapshots as snap
-
-root, n = sys.argv[1], int(sys.argv[2])
-spark = get_spark("race-merge", master="local[2]", shuffle_partitions=2)
-open(root + "/.ready-m", "w").close()
-while not __import__("os").path.exists(root + "/.go"):
-    time.sleep(0.05)
+    merger = """
 aborts = 0
 for i in range(n):
     batch = spark.range(0, 50).select(
@@ -468,62 +531,24 @@ for i in range(n):
     time.sleep(0.2)
 print("MERGER-OK", aborts)
 """
-    )
-    compactor = tmp_path / "compactor.py"
-    compactor.write_text(
-        """
-import sys, time
-from geocore_spark.session import get_spark
-from geocore_spark.sources import snapshots as snap
-
-root, n = sys.argv[1], int(sys.argv[2])
-spark = get_spark("race-compact", master="local[2]", shuffle_partitions=2)
-open(root + "/.ready-c", "w").close()
-while not __import__("os").path.exists(root + "/.go"):
-    time.sleep(0.05)
+    compactor = """
 aborts = done = 0
 for i in range(n):
     try:
-        rep = snap.compact_snapshot(
-            spark, root, small_bytes=1 << 30, target_bytes=2 << 30
-        )
+        snap.compact_snapshot(spark, root, small_bytes=1 << 30, target_bytes=2 << 30)
         done += 1
     except snap.ConcurrentCommit:
         aborts += 1
     time.sleep(0.1)
 print("COMPACTOR-OK", done, aborts)
 """
+    outs = _run_race(
+        root, tmp_path, [("m", merger, n_merges), ("c", compactor, n_compacts)]
     )
-    env = dict(os.environ, PYTHONPATH="/root/repo")
-    procs = [
-        subprocess.Popen(
-            [sys.executable, str(p), root, str(n)],
-            env=env, stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True,
-        )
-        for p, n in ((merger, n_merges), (compactor, n_compacts))
-    ]
-    # barrier: release both only after both sessions are up, so the
-    # operation windows genuinely overlap
-    deadline = _time.time() + 300
-    while not (os.path.exists(root + "/.ready-m")
-               and os.path.exists(root + "/.ready-c")):
-        assert _time.time() < deadline, "workers never came up"
-        _time.sleep(0.2)
-    open(root + "/.go", "w").close()
-    outs = []
-    for p in procs:
-        out, err = p.communicate(timeout=600)
-        assert p.returncode == 0, f"worker failed:\n{out}\n{err[-3000:]}"
-        outs.append(out)
     assert "MERGER-OK" in outs[0] and "COMPACTOR-OK" in outs[1]
 
     # contiguous history, every merge landed exactly once
-    latest = snap.latest_version(spark, root)
-    ops = []
-    for v in range(1, latest + 1):
-        m = snap.load_manifest(spark, root, v)
-        assert m["version"] == v
-        ops.append(m["operation"])
+    ops = _history(spark, root)
     assert ops[0] == "create"
     assert ops.count("merge") == n_merges
     assert set(ops) <= {"create", "merge", "compact"}
@@ -538,3 +563,72 @@ print("COMPACTOR-OK", done, aborts)
         + [(i, i * 3) for i in range(50, 100)]
     )
     assert got == want
+
+
+def test_concurrent_compact_vs_delete_by_key_race(spark, root, tmp_path):
+    """Erasure racing compaction, cross-process: one JVM erases disjoint
+    key batches with delete_by_key while another appends one small file
+    and compacts every file, over and over (the append keeps each
+    compaction rewriting the file that holds the erasure victims). A
+    delete whose victim files were compacted away refuses to commit
+    (ConcurrentCommit from the liveness check) and is retried against
+    the new files; a compaction that lost the race aborts. If neither
+    loses, both land in sequence. Either way no erased key is ever
+    readable again: every version holds exactly the rows the sequential
+    create/append/erase algebra leaves at that point."""
+    df = spark.range(0, 100).withColumn("v", F.col("id") * 3)
+    snap.create_table(spark, root, df.repartition(6))
+    n_deletes, n_compacts = 4, 8
+    # batch i erases ids 10*i .. 10*i+4
+    deleter = """
+aborts = 0
+for i in range(n):
+    keys = spark.range(10 * i, 10 * i + 5)
+    while True:
+        try:
+            m, st = snap.delete_by_key(spark, root, keys, "id")
+            assert m is not None and st["rows_deleted"] == 5, (i, st)
+            break
+        except snap.ConcurrentCommit:
+            aborts += 1
+    time.sleep(0.2)
+print("DELETER-OK", aborts)
+"""
+    # append i adds id 1000+i, never an erased key
+    feeder = """
+aborts = done = 0
+for i in range(n):
+    snap.append(
+        spark, root, spark.range(1000 + i, 1001 + i).withColumn("v", F.col("id") * 3)
+    )
+    try:
+        snap.compact_snapshot(spark, root, small_bytes=1 << 30, target_bytes=2 << 30)
+        done += 1
+    except snap.ConcurrentCommit:
+        aborts += 1
+    time.sleep(0.1)
+print("COMPACTOR-OK", done, aborts)
+"""
+    outs = _run_race(
+        root, tmp_path, [("d", deleter, n_deletes), ("c", feeder, n_compacts)]
+    )
+    assert "DELETER-OK" in outs[0] and "COMPACTOR-OK" in outs[1]
+
+    ops = _history(spark, root)
+    assert ops[0] == "create"
+    assert ops.count("delete") == n_deletes
+    assert ops.count("append") == n_compacts
+    assert set(ops) <= {"create", "append", "delete", "compact"}
+    # each worker is sequential, so the k-th delete commit is batch k and
+    # the j-th append is id 1000+j
+    ids = set(range(100))
+    n_del = n_app = 0
+    for v, op in enumerate(ops, start=1):
+        if op == "delete":
+            ids -= set(range(10 * n_del, 10 * n_del + 5))
+            n_del += 1
+        elif op == "append":
+            ids.add(1000 + n_app)
+            n_app += 1
+        got = _rows(snap.read_snapshot(spark, root, v))
+        assert got == [(i, i * 3) for i in sorted(ids)], (v, op)

@@ -3,46 +3,32 @@
 The comparator is evidence infrastructure: a bug here silently green-lights
 a wrong oracle (or red-flags a right one). Pins the r4-ADVICE fix — drift
 that straddles the rounded-rendering sort boundary (9.999999995e-01 vs
-1.000000001e+00) misaligns the zipped tolerance pass; the greedy re-match
+1.000000001e+00) misaligns the zipped tolerance pass; the re-match
 fallback must still pass those rows, while genuinely different values must
-still fail.
+still fail. The re-match is a maximum bipartite matching because tolerance
+is not transitive: a first-fit pick can strand a row that had a partner.
 """
 
 from __future__ import annotations
 
 import importlib.util
 import sys
+from pathlib import Path
 
+_REPO = Path(__file__).resolve().parents[1]
 spec = importlib.util.spec_from_file_location(
-    "_vl", "/root/repo/tools/verify_local.py"
+    "_vl", _REPO / "tools" / "verify_local.py"
 )
 _vl = importlib.util.module_from_spec(spec)
 # verify_local imports __spark_entry__ at module load (cheap: no session)
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(_REPO))
 spec.loader.exec_module(_vl)
 
 
 def _compare_rowsets(srows, orows, cols):
     """Drive the post-collect half of _vl.compare on in-memory rows."""
-    sms, _ = _vl._rows_to_multiset(srows, cols)
-    oms, _ = _vl._rows_to_multiset(orows, cols)
-    if sms == oms:
-        return True, "exact"
-    mism = [
-        i
-        for i, (a, b) in enumerate(zip(sms, oms))
-        if not all(_vl._approx_equal(x, y) for x, y in zip(a, b))
-    ]
-    if not mism:
-        return True, "approx"
-    rem = [oms[i] for i in mism]
-    for i in mism:
-        a = sms[i]
-        hit = next((j for j, b in enumerate(rem) if _vl._approx_equal(a, b)), None)
-        if hit is None:
-            return False, "values"
-        rem.pop(hit)
-    return True, "greedy"
+    how, _ = _vl.compare_rows(srows, cols, orows, cols)
+    return how != "values", how
 
 
 def test_exact_match():
@@ -99,3 +85,16 @@ def test_greedy_does_not_double_match():
     o = [(1.0,), (5.0,)]
     ok, _ = _compare_rowsets(s, o, ["v"])
     assert not ok
+
+
+def test_rematch_is_not_first_fit():
+    """Tolerance is not transitive (tol = 1e-6 here): spark row s1
+    (y=4e-7) is within tolerance of two oracle rows, o2 (y=0) and
+    o3 (y=8e-7), while s3 (y=-6e-7) matches only o2. The ``a`` column
+    orders the rows so every zipped pair mismatches and first-fit hands
+    o2 to s1, stranding s3. The multisets ARE tolerance-equal
+    (s1-o3, s2-o1, s3-o2), so the compare must pass."""
+    s = [(1.00000001, 4e-7), (1.00000002, 1e-5), (1.00000003, -6e-7)]
+    o = [(1.00000001, 1e-5), (1.00000002, 0.0), (1.00000003, 8e-7)]
+    ok, how = _compare_rowsets(s, o, ["a", "y"])
+    assert (ok, how) == (True, "rematch")

@@ -81,6 +81,69 @@ def _approx_equal(a, b, tol=1e-6):
     return a == b
 
 
+def _unmatched_rows(sms, oms, idx):
+    """Maximum bipartite matching between the spark rows ``sms[i]`` and
+    the oracle rows ``oms[j]`` for i, j in ``idx``, edges being
+    :func:`_approx_equal` — Kuhn's augmenting paths, iterative so a
+    long path cannot hit the recursion limit. Tolerance is not
+    transitive, so a first-fit pick can spend the oracle row a later
+    spark row needed; augmenting re-routes earlier picks instead.
+    Returns the spark rows left without a partner."""
+    adj = [[j for j in idx if _approx_equal(sms[i], oms[j])] for i in idx]
+    owner = {}  # oracle row -> position (in idx) of the spark row holding it
+    held = {}  # position -> oracle row it holds
+    unmatched = []
+    for root in range(len(idx)):
+        via = {}  # oracle row -> position whose search reached it
+        stack, free = [root], None
+        while stack and free is None:
+            pos = stack.pop()
+            for j in adj[pos]:
+                if j in via:
+                    continue
+                via[j] = pos
+                if j not in owner:
+                    free = j
+                    break
+                stack.append(owner[j])
+        if free is None:
+            unmatched.append(sms[idx[root]])
+            continue
+        # flip the path root -> ... -> free: each spark row on it takes
+        # the oracle row that reached it, releasing the one it held
+        j = free
+        while j is not None:
+            pos = via[j]
+            prev = held.get(pos)
+            owner[j], held[pos] = pos, j
+            j = prev
+    return unmatched
+
+
+def compare_rows(srows, scols, orows, ocols):
+    """Order-insensitive multiset compare of collected rows with equal
+    counts. Returns (how, unmatched): how is "exact", "approx" (zipped
+    tolerance pass), "rematch" (tolerance-equal after re-matching the
+    rows the zipped pass rejected) or "values" (``unmatched`` lists the
+    spark rows with no oracle partner)."""
+    sms, _ = _rows_to_multiset(srows, scols)
+    oms, _ = _rows_to_multiset(orows, ocols)
+    if sms == oms:
+        return "exact", []
+    mismatches = [
+        i
+        for i, (a, b) in enumerate(zip(sms, oms))
+        if not all(_approx_equal(x, y) for x, y in zip(a, b))
+    ]
+    if not mismatches:
+        return "approx", []
+    # drift that straddles the rounded-rendering sort boundary can
+    # misalign the zipped compare even though the multisets are
+    # tolerance-equal: re-match only the rows the zipped pass rejected
+    unmatched = _unmatched_rows(sms, oms, mismatches)
+    return ("values" if unmatched else "rematch"), unmatched
+
+
 def compare(name, spark, con) -> tuple[bool, str]:
     t0 = time.time()
     sdf = entrymod.queries()[name](spark, SF_DIR)
@@ -96,36 +159,15 @@ def compare(name, spark, con) -> tuple[bool, str]:
         return False, f"SCHEMA spark={sorted(scols)} oracle={sorted(ocols)}"
     if len(srows) != len(orows):
         return False, f"ROWCOUNT spark={len(srows)} oracle={len(orows)} [{timing}]"
-    sms, _ = _rows_to_multiset(srows, scols)
-    oms, _ = _rows_to_multiset(orows, ocols)
-    if sms == oms:
+    how, unmatched = compare_rows(srows, scols, orows, ocols)
+    if how == "exact":
         return True, f"OK exact {len(srows)} rows [{timing}]"
-    # tolerance pass
-    mismatches = []
-    for i, (a, b) in enumerate(zip(sms, oms)):
-        if not all(_approx_equal(x, y) for x, y in zip(a, b)):
-            mismatches.append(i)
-    if not mismatches:
+    if how == "approx":
         return True, f"OK approx (float drift, {len(srows)} rows) [{timing}]"
-    # Greedy re-matching fallback (r4 ADVICE): drift that straddles the
-    # rounded-rendering sort boundary can misalign the zipped compare
-    # even though the multisets are tolerance-equal. Re-match only the
-    # rows the zipped pass rejected — O(k^2) in the mismatch count.
-    rem = [oms[i] for i in mismatches]
-    unmatched = []
-    for i in mismatches:
-        a = sms[i]
-        hit = next(
-            (j for j, b in enumerate(rem) if _approx_equal(a, b)), None
-        )
-        if hit is None:
-            unmatched.append((a, rem[0] if rem else None))
-        else:
-            rem.pop(hit)
-    if not unmatched:
+    if how == "rematch":
         return True, (
-            f"OK approx (greedy re-match, {len(mismatches)} rows drifted "
-            f"across sort boundary, {len(srows)} rows) [{timing}]"
+            f"OK approx (re-matched rows drifted across sort boundary, "
+            f"{len(srows)} rows) [{timing}]"
         )
     return (
         False,
