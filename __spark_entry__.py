@@ -1574,9 +1574,16 @@ FROM r
 
 
 def q_knn(spark, sf_dir):
-    """W7: exact k=5 nearest neighbors per supplier point."""
+    """W7: exact k=5 nearest neighbors per supplier point.
+
+    ``knn_join`` accepts a query's top-k once it lies inside the ring's
+    covered radius, ``ring * edge * cos(|lat| + ring * edge)``. res 4 /
+    ring 1 converges every supplier query in the first round at
+    sf0.001-0.1. At res 2 / ring 4 the cos term is 0 for every query, so
+    all of them would take the brute-force fallback.
+    """
     pts = _supplier_points(spark, sf_dir)
-    out = knn.knn_join_simple(pts, pts, k=5, res=2, k_ring=4)
+    out = knn.knn_join(pts, pts, k=5, res=4, k_ring=1)
     return out.select("id", "neighbor_id", F.round("dist_km", 6).alias("dist_km"), "rank")
 
 

@@ -220,9 +220,9 @@ def rings_for_km(distance_km: float, res: int, max_abs_lat: float = 66.0) -> int
     """Ring count k such that grid_disk(cell, k) covers ``distance_km``.
 
     Uses the narrowest cell width in the latitude band (cos shrinks
-    east-west extent). The distance-join planner (G7) calls this to size the
-    k-ring cover; callers working above ``max_abs_lat`` must pass their
-    actual band.
+    east-west extent). ``spatial_join.ring_plan`` calls this to size the
+    k-ring cover of the distance joins (G7); those joins raise on rows
+    above ``max_abs_lat``, so callers with polar data pass their band.
     """
     km_per_deg = 111.195  # mean earth radius great-circle km per degree
     width = edge_deg(res) * km_per_deg * max(np.cos(np.radians(max_abs_lat)), 1e-9)

@@ -6,14 +6,14 @@ O(B^2) distance matrix (/root/reference/modeling/cross_validators/block.py:
 window-top-k plan:
 
   1. index query and corpus points to cells (pure Column arithmetic);
-  2. corpus explodes to a k-ring cover sized so any query's k neighbors
-     are inside the ring with high probability (ring radius from a density
-     estimate, or caller-fixed);
-  3. equi-join on cell, exact haversine, ``row_number() <= k`` per query.
+  2. corpus explodes to a caller-fixed k-ring cover and equi-joins on
+     cell (:func:`spatial_join.ring_join`, shared with the distance join);
+  3. exact haversine, ``row_number() <= k`` per query.
 
-Rows whose ring under-delivered (< k candidates) are detected and re-run
-with a wider ring — the iterative expansion of SURVEY §4.3 — so results
-are exact, not approximate.
+Queries whose ring under-delivered (< k candidates, or a k-th distance
+beyond the ring's covered radius) are re-run with a wider ring — the
+iterative expansion of SURVEY §4.3 — and the rest go to an exact
+brute-force fallback, so results are exact, not approximate.
 """
 
 from __future__ import annotations
@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from geocore_spark.functions import tiling as tl
 from geocore_spark.functions.geodesy import haversine_km
+from geocore_spark.operators.spatial_join import ring_join
 
 _LOG = logging.getLogger(__name__)
 
@@ -33,35 +34,6 @@ _LOG = logging.getLogger(__name__)
 # the previous call's frames, so repeated gate/bench runs in one context
 # never accumulate input-sized caches
 _LIVE: dict[str, list] = {}
-
-
-def knn_candidates(
-    queries: DataFrame,
-    corpus: DataFrame,
-    query_id: str,
-    corpus_id: str,
-    k_ring: int,
-    res: int,
-    lat: str = "lat",
-    lon: str = "lon",
-) -> DataFrame:
-    """Candidate pairs within ``k_ring`` cells, with exact distance."""
-    q = queries.withColumn("__qcell", tl.latlng_to_cell(F.col(lat), F.col(lon), res))
-    c = corpus.select(
-        F.col(corpus_id).alias("__nid"),
-        F.col(lat).alias("__nlat"),
-        F.col(lon).alias("__nlon"),
-    ).withColumn(
-        "__ccover",
-        F.explode(
-            tl.grid_disk(tl.latlng_to_cell(F.col("__nlat"), F.col("__nlon"), res), k_ring)
-        ),
-    )
-    pairs = q.join(c, q["__qcell"] == c["__ccover"], "inner")
-    return pairs.withColumn(
-        "dist_km",
-        haversine_km(F.col(lat), F.col(lon), F.col("__nlat"), F.col("__nlon")),
-    ).drop("__qcell", "__ccover")
 
 
 def knn_join(
@@ -101,8 +73,13 @@ def knn_join(
     remaining = queries
     results = []
     ring = k_ring
+    nbrs = corpus.select(
+        F.col(corpus_id).alias("__nid"), F.col(lat).alias("__nlat"), F.col(lon).alias("__nlon")
+    )
+    dist = haversine_km(F.col(lat), F.col(lon), F.col("__nlat"), F.col("__nlon"))
     for _ in range(max_expansions):
-        cand = knn_candidates(remaining, corpus, query_id, corpus_id, ring, res, lat, lon)
+        cand = ring_join(remaining, nbrs, lat, lon, "__nlat", "__nlon", res, ring)
+        cand = cand.withColumn("dist_km", dist)
         if exclude_self:
             cand = cand.filter(F.col(query_id) != F.col("__nid"))
         w = Window.partitionBy(query_id).orderBy(F.col("dist_km").asc(), F.col("__nid").asc())
@@ -282,33 +259,6 @@ def _brute_force_stragglers(
     w = Window.partitionBy(query_id).orderBy(F.col("dist_km").asc(), F.col("__nid").asc())
     return (
         pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(F.col(query_id), F.col("__nid").alias("neighbor_id"), "dist_km", "rank")
-    )
-
-
-def knn_join_simple(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 10,
-    query_id: str = "id",
-    corpus_id: str = "id",
-    lat: str = "lat",
-    lon: str = "lon",
-    res: int = 6,
-    k_ring: int = 2,
-    exclude_self: bool = True,
-) -> DataFrame:
-    """Single-pass variant (no expansion loop): exact within the ring,
-    callers choose res/k_ring from known density. This is the
-    oracle-checkable form — one deterministic plan, no data-dependent
-    control flow."""
-    cand = knn_candidates(queries, corpus, query_id, corpus_id, k_ring, res, lat, lon)
-    if exclude_self:
-        cand = cand.filter(F.col(query_id) != F.col("__nid"))
-    w = Window.partitionBy(query_id).orderBy(F.col("dist_km").asc(), F.col("__nid").asc())
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select(F.col(query_id), F.col("__nid").alias("neighbor_id"), "dist_km", "rank")
     )

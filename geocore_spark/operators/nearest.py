@@ -6,10 +6,6 @@ take a moment"), in raw degree units against the 110m coastline. Here the
 geometry layer is broadcast once and each Arrow batch runs the fully
 vectorized point-to-segment kernel (geometry/pip.py) — O(batch x segments)
 in numpy, ~1000x the reference's throughput per core.
-
-For layers too large to broadcast (millions of segments), the scale path
-is the cell-bucketed variant: segments bucketed to cells by bbox, points
-join on grid_disk rings and refine — same shape as distance_join (G7).
 """
 
 from __future__ import annotations

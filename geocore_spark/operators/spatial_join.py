@@ -287,95 +287,73 @@ def pip_polygon_join(
     return hits.join(F.broadcast(polygons.drop("wkb")), "polygon_id", "left")
 
 
-def pip_polygon_join_partitioned(
-    points: DataFrame,
-    polygons: DataFrame,
-    lat: str = "lat",
-    lon: str = "lon",
-    res: int = tl.DEFAULT_RES,
-    max_cover_cells: int = 2048,
-) -> DataFrame:
-    """PIP join for LARGE polygon layers (SURVEY §7 stage 5's partitioned
-    variant).
-
-    The broadcast variant collects the layer to the driver — right for
-    an 85 KB coastline, wrong for millions of parcels. Here the cover
-    table is computed EXECUTOR-side (``mapInPandas`` over polygon
-    partitions, same kernel), persisted, and shuffle-joined with the
-    points on (res, cell); boundary cover rows carry their polygon's WKB
-    so the refine needs no driver-side lookup table. The layer never
-    passes through the driver and nothing is broadcast (AQE may still
-    choose a broadcast join if the cover turns out small — that's the
-    right call when it happens).
-
-    Results are identical to :func:`pip_polygon_join` (both are exact).
-    """
-    spark = points.sparkSession
-
-    def _covers(batches):
-        for pdf in batches:
-            sub = polygon_cover_cells(pdf, res, max_cover_cells)
-            if not len(sub):
-                continue
-            wkb_by_id = {int(r["polygon_id"]): bytes(r["wkb"]) for _, r in pdf.iterrows()}
-            out = sub.copy()
-            out["wkb"] = [
-                None if full else wkb_by_id[int(pid)]
-                for pid, full in zip(sub["polygon_id"], sub["full"])
-            ]
-            yield out[["res", "cell", "polygon_id", "full", "wkb"]]
-
-    cover = polygons.select("polygon_id", "wkb").mapInPandas(
-        _covers, "res int, cell string, polygon_id long, full boolean, wkb binary"
-    )
-    # persisted: the distinct-res probe below and the join both read it;
-    # at 100 TB this would be a staged table (plans/checkpoint.py)
-    cover = cover.persist()
-    resolutions = sorted(r["res"] for r in cover.select("res").distinct().collect())
-
-    @F.pandas_udf("boolean")
-    def _refine_wkb(lat_s: pd.Series, lon_s: pd.Series, wkb_s: pd.Series) -> pd.Series:
-        lats = lat_s.to_numpy(float)
-        lons = lon_s.to_numpy(float)
-        out = np.zeros(len(lats), dtype=bool)
-        keys = wkb_s.map(lambda b: bytes(b) if b is not None else None)
-        for wkb, grp in pd.RangeIndex(len(keys)).to_series().groupby(keys):
-            m = grp.to_numpy()
-            out[m] = pip_mod.points_in_wkb(lons[m], lats[m], wkb)
-        return pd.Series(out)
-
-    pts = points.withColumn(
-        "__rc",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(r).alias("res"),
-                        tl.latlng_to_cell(F.col(lat), F.col(lon), r).alias("cell"),
-                    )
-                    for r in resolutions
-                ]
-            )
-        ),
-    )
-    cand = pts.join(
-        cover,
-        (pts["__rc.res"] == cover["res"]) & (pts["__rc.cell"] == cover["cell"]),
-        "inner",
-    ).drop(cover["res"]).drop(cover["cell"])
-    hits = cand.filter(
-        F.col("full") | _refine_wkb(F.col(lat), F.col(lon), F.col("wkb"))
-    ).drop("__rc", "full", "wkb")
-    return hits.join(polygons.drop("wkb"), "polygon_id", "left")
-
-
 # ---------------------------------------------------------------------------
 # Distance theta-join + buffer anti-join (k-ring cover + haversine refine)
+#
+# ring_join is the one k-ring candidate generator: distance_join,
+# buffer_anti_join, plans/rewrite.rewrite_dwithin and operators/knn use it.
 # ---------------------------------------------------------------------------
 
 
-def _with_cell(df: DataFrame, lat: str, lon: str, res: int, name: str) -> DataFrame:
-    return df.withColumn(name, tl.latlng_to_cell(F.col(lat), F.col(lon), res))
+def ring_plan(
+    distance_km: float, res: int | None = None, max_abs_lat: float = 66.0
+) -> tuple[int, int]:
+    """(res, k) of the k-ring cover for a ``distance_km`` join.
+
+    ``k`` comes from :func:`tl.rings_for_km`. Without a caller ``res`` the
+    finest res down to 3 whose ``k <= 2`` is picked, so each right row
+    explodes to at most 25 cells. The cover is a superset of the pairs only
+    for data within ``max_abs_lat``; :func:`within_band` enforces that.
+    """
+    fixed = res is not None
+    res = tl.DEFAULT_RES if res is None else res
+    while True:
+        k = tl.rings_for_km(distance_km, res, max_abs_lat)
+        if fixed or res <= 3 or k <= 2:
+            return res, k
+        res -= 1
+
+
+def within_band(df: DataFrame, lat: str, max_abs_lat: float) -> DataFrame:
+    """``df`` with a row check that raises when ``|lat| > max_abs_lat``.
+
+    A plan filter (no extra job): the query fails at execution instead of
+    returning a cover that silently misses pairs. NULL latitudes pass.
+    """
+    over = F.abs(F.col(lat)) > F.lit(float(max_abs_lat))
+    msg = (
+        f"|{lat}| above max_abs_lat={max_abs_lat}: the k-ring cover would "
+        "miss pairs; pass a max_abs_lat that bounds the data"
+    )
+    return df.filter(F.when(over, F.raise_error(F.lit(msg))).otherwise(F.lit(True)))
+
+
+def ring_join(
+    left: DataFrame,
+    right: DataFrame,
+    left_lat: str,
+    left_lon: str,
+    right_lat: str,
+    right_lon: str,
+    res: int,
+    k: int,
+) -> DataFrame:
+    """Every (left, right) pair whose res-``res`` cells are within ``k``
+    rings: right rows explode to their ``grid_disk`` cover, then one
+    equi-join on the cell id. Output is left's columns then right's; the
+    caller refines the candidates.
+    """
+    cell = tl.latlng_to_cell(F.col(left_lat), F.col(left_lon), res)
+    cover = tl.grid_disk(tl.latlng_to_cell(F.col(right_lat), F.col(right_lon), res), k)
+    return (
+        left.withColumn("__ring_cell", cell)
+        .join(
+            right.withColumn("__ring_cover", F.explode(cover)),
+            F.col("__ring_cell") == F.col("__ring_cover"),
+            "inner",
+        )
+        .drop("__ring_cell", "__ring_cover")
+    )
 
 
 def distance_join(
@@ -390,34 +368,22 @@ def distance_join(
     """All (left, right) pairs within ``distance_km`` great-circle km.
 
     The reference's J4 (LEFT JOIN ... WHERE ST_DWITHIN with *no ON clause*,
-    build.py:170-176) done scalably: right rows explode to their k-ring
-    cover (ring count sized by :func:`tl.rings_for_km`), equi-join on the
-    cell id, exact haversine refine. Columns from ``right`` come back
-    suffixed ``_r``.
-
-    Resolution choice is a density/ring-count tradeoff: default picks the
-    coarsest res whose cell edge >= distance (ring k<=2), keeping the
-    cover expansion factor <= 9.
+    build.py:170-176) done scalably: :func:`ring_join` on the
+    :func:`ring_plan` cover, then an exact haversine refine. Columns from
+    ``right`` come back suffixed ``_r``. A row of either side with
+    ``|lat| > max_abs_lat`` makes the query raise (:func:`within_band`).
     """
-    if res is None:
-        res = tl.DEFAULT_RES
-        while res > 3 and tl.rings_for_km(distance_km, res, max_abs_lat) > 2:
-            res -= 1
-    k = tl.rings_for_km(distance_km, res, max_abs_lat)
-    lcell = _with_cell(left, lat, lon, res, "__lcell")
-    rcell = right.select(
-        *[F.col(c).alias(f"{c}_r") for c in right.columns],
-    ).withColumn(
-        "__rcover",
-        F.explode(
-            tl.grid_disk(tl.latlng_to_cell(F.col(f"{lat}_r"), F.col(f"{lon}_r"), res), k)
-        ),
+    res, k = ring_plan(distance_km, res, max_abs_lat)
+    right_r = right.select(*[F.col(c).alias(f"{c}_r") for c in right.columns])
+    joined = ring_join(
+        within_band(left, lat, max_abs_lat),
+        within_band(right_r, f"{lat}_r", max_abs_lat),
+        lat, lon, f"{lat}_r", f"{lon}_r", res, k,
     )
-    joined = lcell.join(rcell, lcell["__lcell"] == rcell["__rcover"], "inner")
     return joined.filter(
         haversine_km(F.col(lat), F.col(lon), F.col(f"{lat}_r"), F.col(f"{lon}_r"))
         <= F.lit(distance_km)
-    ).drop("__lcell", "__rcover")
+    )
 
 
 def buffer_anti_join(
@@ -436,12 +402,12 @@ def buffer_anti_join(
     (build.py:165-177,201); here it is a left-anti join against the
     distance-join candidates — same semantics, no cartesian.
 
-    ``max_abs_lat`` forwards to distance_join's cover sizing — data above
-    it would get an undersized k-ring cover and silently RETAIN rows that
-    are actually within the buffer (broken train/test separation). The
-    anti-join condition is NULL-SAFE on every left column: plain equality
-    would never match a row carrying a NULL attribute, silently keeping
-    it no matter how close it sits to a right row.
+    ``max_abs_lat`` forwards to distance_join's cover sizing; a row of
+    either side above it makes the query raise, since an undersized cover
+    would RETAIN rows that are within the buffer. The anti-join condition
+    is NULL-SAFE on every left column: plain equality would never match a
+    row carrying a NULL attribute, silently keeping it no matter how close
+    it sits to a right row.
     """
     near = distance_join(
         left, right, distance_km, lat, lon, res, max_abs_lat=max_abs_lat

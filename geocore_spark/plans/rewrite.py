@@ -18,11 +18,12 @@ rule — no JVM extension jar needed, same effect):
     ==>
   refine(cover_join(L, R, km))  [+ rest re-applied]
 
-where ``cover_join`` is the k-ring cell equi-join of
-:func:`geocore_spark.operators.spatial_join.distance_join`.  The original
-distance predicate is RE-APPLIED verbatim after the cover join, so the
-rewrite is exact whenever the cover is a superset of qualifying pairs
-(guaranteed within ``max_abs_lat``; see ``tl.rings_for_km``) — and the
+where ``cover_join`` is :func:`geocore_spark.operators.spatial_join.ring_join`
+on the ``ring_plan`` cover, the candidate generator of ``distance_join``.
+The original distance predicate is RE-APPLIED verbatim after the cover
+join, so the rewrite is exact whenever the cover is a superset of
+qualifying pairs. That holds within ``max_abs_lat`` (see
+``tl.rings_for_km``); a row above it makes the rewritten query raise. The
 rewrite never changes the output schema or column order.
 
 Matching is deliberately conservative: the haversine conjunct must be
@@ -38,8 +39,8 @@ import re
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from geocore_spark.functions import tiling as tl
 from geocore_spark.functions.geodesy import EARTH_RADIUS_KM, haversine_km
+from geocore_spark.operators.spatial_join import ring_join, ring_plan, within_band
 
 _ID = r"`?[\w.]+`?"
 _NUM = r"[0-9]+(?:\.[0-9]+)?(?:[Ee][+-]?[0-9]+)?"
@@ -148,7 +149,8 @@ def rewrite_dwithin(
     Returns ``df`` unchanged (the same object) when the plan doesn't match
     — callers can apply this unconditionally, like an optimizer rule.
     Exact within ``max_abs_lat`` (cover superset bound; the distance
-    predicate itself is re-applied either way).
+    predicate itself is re-applied either way). A row of either side with
+    ``|lat| > max_abs_lat`` makes the rewritten query raise at execution.
     """
     spark = df.sparkSession
     try:
@@ -209,29 +211,15 @@ def rewrite_dwithin(
     else:
         llat, llon, rlat, rlon = lat2, lon2, lat1, lon1
 
-    if res is None:
-        res = tl.DEFAULT_RES
-        while res > 3 and tl.rings_for_km(km, res, max_abs_lat) > 2:
-            res -= 1
-    k = tl.rings_for_km(km, res, max_abs_lat)
-
-    lcell = left_df.withColumn(
-        "__dw_cell", tl.latlng_to_cell(F.col(llat), F.col(llon), res)
-    )
-    rcov = right_df.withColumn(
-        "__dw_cover",
-        F.explode(
-            tl.grid_disk(tl.latlng_to_cell(F.col(rlat), F.col(rlon), res), k)
-        ),
-    )
+    res, k = ring_plan(km, res, max_abs_lat)
     dist = haversine_km(F.col(llat), F.col(llon), F.col(rlat), F.col(rlon))
     # re-apply the predicate with the ORIGINAL comparison operator: a strict
     # '<' must stay strict or pairs at exactly km would be wrongly included.
-    out = (
-        lcell.join(rcov, F.col("__dw_cell") == F.col("__dw_cover"), "inner")
-        .drop("__dw_cell", "__dw_cover")
-        .filter(dist < F.lit(km) if strict else dist <= F.lit(km))
-    )
+    out = ring_join(
+        within_band(left_df, llat, max_abs_lat),
+        within_band(right_df, rlat, max_abs_lat),
+        llat, llon, rlat, rlon, res, k,
+    ).filter(dist < F.lit(km) if strict else dist <= F.lit(km))
     for c in rest:  # re-apply the non-distance conjuncts
         try:
             out = out.filter(F.expr(_strip_d_suffix(c.sql())))

@@ -19,29 +19,35 @@ def _clean_registries():
     reg.TEST_REGISTRY.update(saved[2])
 
 
+def _cell(i: int) -> str:
+    """Res-13 cell i on a diagonal near the equator (the buffer join raises
+    on rows above its max_abs_lat, so fixture cells stay off the poles)."""
+    return f"13:{i}:{4000 + i}"
+
+
 def _setup(spark):
     @reg.register(reg.FEATURES_REGISTRY, "f_base")
     def f_base(s):
         return s.createDataFrame(
-            [(f"13:{i}:{i}", float(i)) for i in range(10)], "cell string, f_a double"
+            [(_cell(i), float(i)) for i in range(10)], "cell string, f_a double"
         )
 
     @reg.register(reg.FEATURES_REGISTRY, "f_partial")
     def f_partial(s):
         return s.createDataFrame(
-            [(f"13:{i}:{i}", i * 10.0) for i in range(5)], "cell string, f_b double"
+            [(_cell(i), i * 10.0) for i in range(5)], "cell string, f_b double"
         )
 
     @reg.register(reg.LABEL_REGISTRY, "l_main")
     def l_main(s):
         return s.createDataFrame(
-            [("13:1:1", 1, 0.9, "KNOWN"), ("13:2:2", 0, 0.5, "KNOWN")],
+            [(_cell(1), 1, 0.9, "KNOWN"), (_cell(2), 0, 0.5, "KNOWN")],
             "cell string, label int, weight double, type string",
         )
 
     @reg.register(reg.TEST_REGISTRY, "t_held")
     def t_held(s):
-        return s.createDataFrame([("13:3:3",)], "cell string")
+        return s.createDataFrame([(_cell(3),)], "cell string")
 
 
 def test_build_dataset_end_to_end(spark):
@@ -49,10 +55,10 @@ def test_build_dataset_end_to_end(spark):
     cfg = reg.DatasetConfig(features=["f_base", "f_partial"], labels=["l_main"], tests=["t_held"])
     train, app = reg.build_dataset(spark, cfg)
     t = {r["cell"]: r for r in train.collect()}
-    assert set(t) == {"13:1:1", "13:2:2"}
-    assert t["13:1:1"]["label"] == 1 and t["13:1:1"]["f_b"] == 10.0
+    assert set(t) == {_cell(1), _cell(2)}
+    assert t[_cell(1)]["label"] == 1 and t[_cell(1)]["f_b"] == 10.0
     assert app.count() == 8  # unlabeled cells
-    assert app.filter(F.col("cell") == "13:3:3").first()["is_test"] == 1
+    assert app.filter(F.col("cell") == _cell(3)).first()["is_test"] == 1
 
 
 def test_categorical_cast_config(spark):

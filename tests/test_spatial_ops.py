@@ -2,12 +2,14 @@
 
 import numpy as np
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from geocore_spark.functions import tiling as tl
-from geocore_spark.functions.geodesy import EARTH_RADIUS_KM
+from geocore_spark.functions.geodesy import EARTH_RADIUS_KM, haversine_km
 from geocore_spark.geometry import pip as pip_mod
 from geocore_spark.operators import knn, skew, spatial_join, zonal
+from geocore_spark.plans.rewrite import rewrite_dwithin
 from geocore_spark.sources import polygons as pgn
 from geocore_spark.sources import raster as rst
 
@@ -58,17 +60,19 @@ def test_pip_rect_join_matches_brute_force(spark):
 
 def test_pip_polygon_join_matches_numpy(spark):
     pts, lat, lon = _points_df(spark, 500, seed=6)
-    polys = pgn.polygon_layer(spark, 24)
-    got = {
-        (r["id"], r["polygon_id"])
-        for r in spatial_join.pip_polygon_join(pts, polys).select("id", "polygon_id").collect()
-    }
-    want = set()
-    for pr in polys.select("polygon_id", "wkb").collect():
-        inside = pip_mod.points_in_wkb(lon, lat, bytes(pr["wkb"]))
-        want |= {(int(i), pr["polygon_id"]) for i in np.nonzero(inside)[0]}
-    assert got == want
-    assert len(want) > 0
+    # 120 polygons: a larger layer whose cover spans more resolutions
+    for n_polys in (24, 120):
+        polys = pgn.polygon_layer(spark, n_polys)
+        got = {
+            (r["id"], r["polygon_id"])
+            for r in spatial_join.pip_polygon_join(pts, polys).select("id", "polygon_id").collect()
+        }
+        want = set()
+        for pr in polys.select("polygon_id", "wkb").collect():
+            inside = pip_mod.points_in_wkb(lon, lat, bytes(pr["wkb"]))
+            want |= {(int(i), pr["polygon_id"]) for i in np.nonzero(inside)[0]}
+        assert got == want, n_polys
+        assert len(want) > 0, n_polys
 
 
 def test_pip_polygon_join_carries_attrs(spark):
@@ -175,24 +179,57 @@ def test_buffer_anti_join_null_attributes_still_excluded(spark):
     assert kept == {2}
 
 
+def test_distance_family_raises_above_max_abs_lat(spark):
+    """The k-ring cover is sized for |lat| <= max_abs_lat (66 by default).
+    At 80 deg it misses a 44 km pair under a 50 km query, so the distance
+    join, the buffer anti-join and the dwithin rewrite must raise, not
+    return the short answer. NULL coordinates pass the guard."""
+    schema = "id long, lat double, lon double"
+    a = spark.createDataFrame([(1, 80.0, 10.0)], schema)
+    b = spark.createDataFrame([(2, 80.0, 12.3)], schema)
+    assert _haversine_np(80.0, 10.0, 80.0, 12.3) < 50.0
+    naive = (
+        a.toDF("aid", "alat", "alon")
+        .crossJoin(b.toDF("bid", "blat", "blon"))
+        .filter(haversine_km(F.col("alat"), F.col("alon"), F.col("blat"), F.col("blon")) <= 50.0)
+    )
+    assert naive.count() == 1
+    rewritten = rewrite_dwithin(naive)
+    assert rewritten is not naive
+    for df in (
+        spatial_join.distance_join(a, b, 50.0),
+        spatial_join.buffer_anti_join(a, b, 50.0),
+        rewritten,
+    ):
+        with pytest.raises(Exception, match="max_abs_lat"):
+            df.collect()
+    # a band that bounds the data makes the cover exact again
+    assert spatial_join.distance_join(a, b, 50.0, max_abs_lat=85.0).count() == 1
+    assert spatial_join.buffer_anti_join(a, b, 50.0, max_abs_lat=85.0).count() == 0
+    mid = spark.createDataFrame([(3, 10.0, 10.0), (4, None, None)], schema)
+    near = spark.createDataFrame([(5, 10.0, 10.2)], schema)
+    assert [r["id"] for r in spatial_join.buffer_anti_join(mid, near, 50.0).collect()] == [4]
+
+
 def test_knn_simple_matches_brute_force(spark):
     pts, lat, lon = _points_df(spark, 120, seed=11, lat_range=(30, 50))
-    # restrict to a band so a modest ring covers k=5 neighbors
-    got = {}
-    out = knn.knn_join_simple(pts, pts, k=5, res=4, k_ring=3).collect()
-    for r in out:
-        got.setdefault(r["id"], []).append((r["rank"], r["neighbor_id"]))
     dm = _haversine_np(lat[:, None], lon[:, None], lat[None, :], lon[None, :])
     np.fill_diagonal(dm, np.inf)
-    ok = 0
-    for i in range(len(lat)):
-        order = np.lexsort((np.arange(len(lat)), dm[i]))[:5]
-        want = [int(j) for j in order]
-        have = [nid for _, nid in sorted(got.get(i, []))]
-        if have == want:
-            ok += 1
-    # ring coverage at res4/k_ring3 is ~15 deg; all neighbors in-band
-    assert ok == len(lat), f"only {ok}/{len(lat)} exact"
+    # ring 3 covers every neighbor at once; ring 1 leaves 18 of the 120
+    # queries with a short or wrong first-round list, which the
+    # convergence check must catch and re-run
+    for k_ring in (3, 1):
+        got = {}
+        for r in knn.knn_join(pts, pts, k=5, res=4, k_ring=k_ring).collect():
+            got.setdefault(r["id"], []).append((r["rank"], r["neighbor_id"]))
+        ok = 0
+        for i in range(len(lat)):
+            order = np.lexsort((np.arange(len(lat)), dm[i]))[:5]
+            want = [int(j) for j in order]
+            have = [nid for _, nid in sorted(got.get(i, []))]
+            if have == want:
+                ok += 1
+        assert ok == len(lat), f"k_ring={k_ring}: only {ok}/{len(lat)} exact"
 
 
 def test_knn_full_exactness_with_expansion(spark):
@@ -404,23 +441,6 @@ def test_mega_cell_split_reparent_roundtrip(spark):
     # and the split actually went finer
     finer = split.filter(F.col("work_cell") != F.col("cell")).count()
     assert finer == 500
-
-
-def test_pip_partitioned_matches_broadcast(spark):
-    """The large-layer variant (executor-side covers, no broadcast, no
-    driver collect of the layer) must produce exactly the broadcast
-    variant's rows — both are exact."""
-    import __spark_entry__ as em
-
-    pts = em._event_points(spark, "/root/testdata/sf0.01")
-    for n_polys in (24, 120):
-        polys = pgn.polygon_layer(spark, n_polys)
-        a = spatial_join.pip_polygon_join(pts, polys)
-        b = spatial_join.pip_polygon_join_partitioned(pts, polys)
-        key = lambda r: (r["id"], r["polygon_id"])
-        ra = sorted(key(r) for r in a.collect())
-        rb = sorted(key(r) for r in b.collect())
-        assert ra == rb and len(ra) > 0, (n_polys, len(ra), len(rb))
 
 
 def test_knn_fallback_accumulates_across_arrow_batches(spark):

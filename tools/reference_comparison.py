@@ -138,10 +138,17 @@ def main():
     ref_knn(kpdf)
     ref_rate = kn / (time.time() - t0)
     ksdf = spark.createDataFrame(kpdf)
-    kq = knn_mod.knn_join_simple(ksdf, ksdf, k=10, query_id="id", corpus_id="id", res=4, k_ring=2)
-    kq.write.format("noop").mode("overwrite").save()
+
+    def eng_knn():
+        # knn_join runs its convergence rounds while it builds the frame,
+        # so the call is timed together with the write; res 5 / ring 2
+        # converges every query of this point set in the first round
+        kq = knn_mod.knn_join(ksdf, ksdf, k=10, res=5, k_ring=2)
+        kq.write.format("noop").mode("overwrite").save()
+
+    eng_knn()  # warm
     t0 = time.time()
-    kq.write.format("noop").mode("overwrite").save()
+    eng_knn()
     eng_rate = kn / (time.time() - t0)
     results.append(("kNN k=10 (W7)", ref_rate, eng_rate))
 
