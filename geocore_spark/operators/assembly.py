@@ -18,11 +18,13 @@ from __future__ import annotations
 
 from functools import reduce
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from geocore_spark.functions import tiling as tl
 from geocore_spark.operators.spatial_join import distance_join
+from geocore_spark.session import release_previous
 
 META_COLUMNS = ("weight", "lat", "lon", "cell_center_lat", "cell_center_lon", "type")
 
@@ -31,28 +33,24 @@ class BadTable(Exception):
     """Port of the reference's BadTable gate (base.py:11-22)."""
 
 
-def assert_unique_index(df: DataFrame, index_col: str, name: str = "layer") -> None:
-    """count(*) == count(distinct idx) — joins must stay 1:1 (base.py:82-99)."""
-    row = df.agg(
-        F.count("*").alias("n"), F.count_distinct(F.col(index_col)).alias("d")
-    ).first()
-    if row["n"] != row["d"]:
-        raise BadTable(f"{name}: {row['n']} rows but {row['d']} distinct {index_col}")
-
-
-def assert_uniform_resolution(layers: list[DataFrame], index_col: str = "cell") -> int:
-    """All layers must share one grid resolution (build.py:330-341).
-
-    Cheap metadata probe: one row per layer (limit 1), not a full scan.
-    """
-    resolutions = []
-    for layer in layers:
-        row = layer.select(tl.cell_resolution(F.col(index_col)).alias("r")).first()
-        resolutions.append(row["r"] if row else None)
-    present = {r for r in resolutions if r is not None}
+def _check_layers(layers: list[DataFrame], index_col: str) -> None:
+    """The BadTable gates in one Spark action: count(*) == count(distinct
+    idx) per layer, so joins stay 1:1 (base.py:82-99), and one grid
+    resolution over every row of every layer (build.py:330-341)."""
+    res = tl.cell_resolution(F.col(index_col))
+    aggs = [
+        layer.agg(
+            F.lit(i), F.count("*"), F.count_distinct(F.col(index_col)), F.min(res), F.max(res)
+        )
+        for i, layer in enumerate(layers)
+    ]
+    stats = sorted(tuple(r) for r in reduce(DataFrame.union, aggs).collect())
+    for i, n, d, _, _ in stats:
+        if n != d:
+            raise BadTable(f"layer[{i}]: {n} rows but {d} distinct {index_col}")
+    present = {v for r in stats for v in r[3:] if v is not None}
     if len(present) > 1:
         raise BadTable(f"mixed grid resolutions across layers: {sorted(present)}")
-    return present.pop() if present else -1
 
 
 def assert_no_meta_leak(feature_cols: list[str]) -> None:
@@ -62,21 +60,23 @@ def assert_no_meta_leak(feature_cols: list[str]) -> None:
         raise BadTable(f"meta columns leaked into features: {sorted(leak)}")
 
 
-def join_features(
-    layers: list[DataFrame], index_col: str = "cell", check: bool = True
-) -> DataFrame:
+def join_features(layers: list[DataFrame], index_col: str = "cell") -> DataFrame:
     """N-way left join on the cell index; first layer anchors (J1).
 
-    The reference generates one SQL string with N LEFT JOINs
-    (build.py:46-109); here the fold produces a single Catalyst plan that
-    AQE turns into broadcast joins for small layers and sort-merge for
-    large ones. With pre-checked unique indexes the joins are 1:1, so row
-    count is invariant (the BadTable guarantee).
+    Like the reference, which materializes and gates every layer before
+    its generated N LEFT JOINs (build.py:46-109), each layer not already
+    cached is persisted MEMORY_AND_DISK (one row per cell), and one Spark
+    action fills those caches and runs the BadTable gates. Later actions
+    read the cached layers instead of re-running their sources, and
+    downstream filters stop at the cache. The next call in this Spark
+    application unpersists them. The fold is one Catalyst plan; AQE picks
+    broadcast or sort-merge per join, and unique indexes keep it 1:1.
     """
-    if check:
-        for i, layer in enumerate(layers):
-            assert_unique_index(layer, index_col, f"layer[{i}]")
-        assert_uniform_resolution(layers, index_col)
+    held = release_previous("join_features", layers[0].sparkSession)
+    for layer in layers:
+        if layer.storageLevel == StorageLevel.NONE:
+            held.append(layer.persist(StorageLevel.MEMORY_AND_DISK))
+    _check_layers(layers, index_col)
     return reduce(lambda a, b: a.join(b, on=index_col, how="left"), layers)
 
 

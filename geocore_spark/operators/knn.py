@@ -26,14 +26,9 @@ from pyspark.sql import functions as F
 from geocore_spark.functions import tiling as tl
 from geocore_spark.functions.geodesy import haversine_km
 from geocore_spark.operators.spatial_join import ring_join
+from geocore_spark.session import release_previous
 
 _LOG = logging.getLogger(__name__)
-
-# per-round persisted top-k frames, keyed by applicationId (the bounded
-# registry pattern of operators/metrics.py): each knn_join call releases
-# the previous call's frames, so repeated gate/bench runs in one context
-# never accumulate input-sized caches
-_LIVE: dict[str, list] = {}
 
 
 def knn_join(
@@ -63,13 +58,7 @@ def knn_join(
     via the slower path. Ties broken by neighbor id for determinism
     (matches the SQL oracle).
     """
-    app = queries.sparkSession.sparkContext.applicationId
-    for kk in list(_LIVE):
-        if kk != app:  # stopped contexts: their JVM cache died with them
-            _LIVE.pop(kk)
-    for old in _LIVE.setdefault(app, []):
-        old.unpersist()
-    _LIVE[app] = []
+    live = release_previous("knn", queries.sparkSession)
     remaining = queries
     results = []
     ring = k_ring
@@ -86,11 +75,11 @@ def knn_join(
         # persisted: referenced by counts, the results join AND (via
         # done_ids) the next round's anti-join — unpersisted, round i
         # re-executes every previous round's candidate join; released
-        # on the next knn_join call in this context (bounded registry)
+        # on the next knn_join call in this context
         topk = cand.withColumn("rank", F.row_number().over(w)).filter(
             F.col("rank") <= k
         ).persist()
-        _LIVE[app].append(topk)
+        live.append(topk)
         # guaranteed covered radius at this query's latitude: ring *
         # edge, shrunk by cos of the worst-case |lat| inside the disk
         edge_deg = tl.edge_deg(res)

@@ -35,20 +35,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from geocore_spark.session import release_previous
+
 _PID = "__mx_pid"
 _LRN = "__mx_lrn"
 _OFF = "__mx_off"
-
-# internally-owned persisted frames, keyed by applicationId (the cover-
-# cache pattern, operators/spatial_join.py): when the caller passes no
-# ``cache`` hook there is nobody to unpersist the ranged frame after the
-# terminal action, so each new call releases the previous call's frame —
-# bounding the module's live cache at ONE input-sized frame per context
-# instead of accumulating one per invocation (verify/bench loops run
-# the three metric queries dozens of times in one long-lived session).
-# Releasing is safe for still-held result DataFrames: an evicted/
-# unpersisted range partitioning recomputes deterministically.
-_LIVE: dict[str, list] = {}
 
 
 def with_global_rank(
@@ -78,13 +69,8 @@ def with_global_rank(
     if cache is not None:
         cache["ranged"] = ranged  # caller takes ownership of the release
     else:
-        app = spark.sparkContext.applicationId
-        for k in list(_LIVE):
-            if k != app:  # stopped contexts: their JVM cache died with them
-                _LIVE.pop(k)
-        for old in _LIVE.setdefault(app, []):
-            old.unpersist()
-        _LIVE[app] = [ranged]
+        # nobody else can unpersist it: the next call in this context does
+        release_previous("metrics", spark).append(ranged)
     counts = sorted(
         (r[0], r[1])
         for r in ranged.groupBy(_PID).agg(F.count(F.lit(1))).collect()

@@ -343,6 +343,7 @@ def rfm(
     from pyspark.sql import functions as F  # noqa: F811 (module import)
 
     from geocore_spark.operators import metrics
+    from geocore_spark.session import release_previous
 
     if n_tiles < 1:
         raise ValueError("rfm: n_tiles must be >= 1")
@@ -389,13 +390,9 @@ def rfm(
         out, [(-F.col("monetary")), F.col("_c")], n_tiles,
         col="m_score", cache=caches[2],
     )
-    app = df.sparkSession.sparkContext.applicationId
-    for k in list(metrics._LIVE):
-        if k != app:
-            metrics._LIVE.pop(k)
-    for old_frame in metrics._LIVE.get(app, []):
-        old_frame.unpersist()
-    metrics._LIVE[app] = [c["ranged"] for c in caches if "ranged" in c]
+    release_previous("metrics", df.sparkSession).extend(
+        c["ranged"] for c in caches if "ranged" in c
+    )
     return out.select(
         F.col("_c").alias(customer_col),
         F.col("recency_us").cast("long").alias("recency_us"),

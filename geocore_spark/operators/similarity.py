@@ -25,6 +25,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from geocore_spark.session import release_previous
+
 
 def _dot(a: Column, b: Column) -> Column:
     """Ordered-fold dot product of two array columns as double."""
@@ -49,21 +51,12 @@ def cosine(a: Column, b: Column) -> Column:
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
-# bounded per-application registry of persisted frames (the
-# operators/metrics.py pattern): each new call releases the previous
-# call's frames so gate/bench loops never accumulate input-sized caches
-_LIVE: dict[str, list] = {}
-
-
 def _release_then_track(df: DataFrame) -> DataFrame:
-    app = df.sparkSession.sparkContext.applicationId
-    for k in list(_LIVE):
-        if k != app:  # stopped contexts: their JVM cache died with them
-            _LIVE.pop(k)
-    for old in _LIVE.setdefault(app, []):
-        old.unpersist()
+    # each new call releases the previous call's frame so gate/bench
+    # loops never accumulate input-sized caches
+    live = release_previous("similarity", df.sparkSession)
     out = df.persist()
-    _LIVE[app] = [out]
+    live.append(out)
     return out
 
 

@@ -16,7 +16,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -81,3 +81,23 @@ def stop_spark() -> None:
     active = SparkSession.getActiveSession()
     if active is not None:
         active.stop()
+
+
+# frames persisted by an engine call, keyed by (owner, applicationId)
+_LIVE: dict[tuple[str, str], list[DataFrame]] = {}
+
+
+def release_previous(owner: str, spark: SparkSession) -> list[DataFrame]:
+    """Unpersist the frames ``owner``'s previous call persisted in this
+    Spark application; return the list this call adds its own to.
+
+    So repeated gate/bench runs in one long-lived context hold one call's
+    caches per owner, not one per invocation. Result frames still held by
+    callers stay correct: an unpersisted plan recomputes deterministically.
+    """
+    app = spark.sparkContext.applicationId
+    for key in [k for k in _LIVE if k[1] != app]:
+        _LIVE.pop(key)  # stopped contexts: their JVM cache died with them
+    for old in _LIVE.pop((owner, app), []):
+        old.unpersist()
+    return _LIVE.setdefault((owner, app), [])

@@ -164,7 +164,6 @@ def main(argv: list[str] | None = None) -> None:
 
     def build_features():
         cells = tiled.groupBy("cell").agg(F.count("*").alias("n_pages"))
-        assembly.assert_unique_index(cells, "cell", "page_cells")
         sampled = zonal.cell_centroid_samples(cells).withColumnRenamed(
             "value", "f_raster"
         )
@@ -172,7 +171,7 @@ def main(argv: list[str] | None = None) -> None:
             F.count("*").alias("n_poly_hits"),
             F.count_distinct("polygon_id").alias("n_polygons"),
         )
-        return assembly.join_features([sampled, hits], check=False).na.fill(
+        return assembly.join_features([sampled, hits]).na.fill(
             {"n_poly_hits": 0, "n_polygons": 0}
         )
 

@@ -3,6 +3,7 @@
 import datetime
 
 import pytest
+from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
 from geocore_spark.operators import assembly, temporal
@@ -29,6 +30,73 @@ def test_join_features_rejects_mixed_resolution(spark):
     b = spark.createDataFrame([("11:1:1", 1.0)], "cell string, f_b double")
     with pytest.raises(assembly.BadTable, match="resolution"):
         assembly.join_features([a, b])
+    # one layer mixing resolutions, its first row at res 13: every row
+    # counts, not just the first
+    mixed = spark.createDataFrame(
+        [("13:1:1", 1.0), ("11:1:1", 2.0)], "cell string, f double"
+    ).coalesce(1)
+    with pytest.raises(assembly.BadTable, match="resolution"):
+        assembly.join_features([mixed])
+
+
+def test_join_features_evaluates_each_layer_once(spark):
+    # the layer's cell comes out of a Python UDF that counts its calls:
+    # the guards and every later action must read one materialization
+    calls = spark.sparkContext.accumulator(0)
+
+    @F.udf("string")
+    def to_cell(i):
+        calls.add(1)
+        return f"13:{i}:{i}"
+
+    n = 40
+    layer = spark.range(n).select(to_cell("id").alias("cell"), F.col("id").alias("f_a"))
+    other = spark.createDataFrame([("13:1:1", 10.0)], "cell string, f_b double")
+    out = assembly.join_features([layer, other])
+    assert out.count() == n
+    assert sum(r["f_b"] is not None for r in out.collect()) == 1
+    assert calls.value == n
+
+
+def test_join_features_releases_previous_layers(spark):
+    a = spark.createDataFrame([("13:1:1", 1.0)], "cell string, f_a double")
+    b = spark.createDataFrame([("13:1:1", 2.0)], "cell string, f_b double")
+    assembly.join_features([a, b])
+    assert a.storageLevel == StorageLevel.MEMORY_AND_DISK
+    assert b.storageLevel == StorageLevel.MEMORY_AND_DISK
+    c = spark.createDataFrame([("13:2:2", 3.0)], "cell string, f_c double")
+    # a layer the caller cached stays the caller's to release
+    own = spark.createDataFrame([("13:2:2", 4.0)], "cell string, f_d double").persist()
+    assembly.join_features([c, own])
+    assert a.storageLevel == StorageLevel.NONE
+    assert b.storageLevel == StorageLevel.NONE
+    assert c.storageLevel == StorageLevel.MEMORY_AND_DISK
+    assembly.join_features([a])
+    assert c.storageLevel == StorageLevel.NONE
+    assert own.storageLevel != StorageLevel.NONE
+    own.unpersist()
+
+
+def test_mask_bad_train_guard_stays_out_of_the_layer_scan(spark, tmp_path):
+    # the polar guard of mask_bad_train's distance join must not be
+    # pushed into a source FileScan: it would inline the layer's whole
+    # projection into the scan filter
+    path = str(tmp_path / "layer")
+    spark.createDataFrame(
+        [("13:1:1", 40.0, -74.0, 1), ("13:2:2", 45.0, -100.0, 0)],
+        "cell string, lat double, lon double, label int",
+    ).write.parquet(path)
+    feats = assembly.join_features([spark.read.parquet(path)])
+    test_cells = spark.createDataFrame([("13:1:1",)], "cell string")
+    test_pts = spark.createDataFrame([(40.001, -74.001)], "lat double, lon double")
+    masked = assembly.mask_bad_train(
+        assembly.flag_test_cells(feats, test_cells), test_pts, buffer_km=5.0
+    )
+    plan = masked._jdf.queryExecution().executedPlan().toString()
+    scans = [ln for ln in plan.splitlines() if "FileScan" in ln]
+    assert scans
+    assert not [ln for ln in scans if "raise_error" in ln], scans
+    assert {r["cell"]: r["label"] for r in masked.collect()} == {"13:1:1": 1, "13:2:2": 0}
 
 
 def test_meta_leak_guard():
