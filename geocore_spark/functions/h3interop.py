@@ -136,10 +136,6 @@ def resolution_sql(cell: str) -> str:
     return f"CAST(({cell} >> {_RES_SHIFT}) & 15 AS INT)"
 
 
-def base_cell_sql(cell: str) -> str:
-    return f"CAST(({cell} >> {_BASE_SHIFT}) & 127 AS INT)"
-
-
 def parent_sql(cell: str, parent_res: int) -> str:
     """ANSI-SQL twin of :func:`h3_parent` over a BIGINT expression."""
     trailing = (1 << (3 * (15 - parent_res))) - 1

@@ -26,43 +26,27 @@ from pyspark.sql import functions as F
 _TAG_RE = re.compile(rb"<head\b.*?</head>|<[^>]*>", re.DOTALL)
 _WS_RE = re.compile(rb"[ \t\r\f\v]+")
 
-_GEO_META = r'<meta name="geo\.position" content="(-?\d+\.\d+);(-?\d+\.\d+)"/>'
 _TITLE = r"<title>(.*?)</title>"
 
 
 # -- geotag extraction: stays JVM-side ---------------------------------------
 
 
-def geo_lat(html_str: Column) -> Column:
-    """Latitude from the geo.position meta tag (Column regexp; '' -> null)."""
-    v = F.regexp_extract(html_str, _GEO_META, 1)
-    return F.when(v != "", v.cast("double"))
-
-
-def geo_lon(html_str: Column) -> Column:
-    v = F.regexp_extract(html_str, _GEO_META, 2)
-    return F.when(v != "", v.cast("double"))
-
-
 _GEO_META_ONE = r'<meta name="geo\.position" content="(-?\d+\.\d+;-?\d+\.\d+)"/>'
 
 
 def geo_latlon(html_str: Column) -> Column:
-    """Both coordinates in ONE regex pass: struct(lat, lon), nulls when
-    absent. geo_lat + geo_lon run the same pattern twice — on the geotag
-    flagship the regex IS the dominant cost, so pipelines should extract
-    once and project the struct fields. Value-identical to
-    geo_lat/geo_lon (pinned in tests)."""
+    """Both coordinates of the geo.position meta tag in ONE regex pass:
+    struct(lat, lon), nulls when absent. On the geotag flagship the regex
+    IS the dominant cost, so pipelines extract once and project the
+    struct fields. Value-identical to Python ``re`` over the same pattern
+    (pinned in tests)."""
     v = F.regexp_extract(html_str, _GEO_META_ONE, 1)
     parts = F.split(v, ";")
     return F.struct(
         F.when(v != "", F.element_at(parts, 1).cast("double")).alias("lat"),
         F.when(v != "", F.element_at(parts, 2).cast("double")).alias("lon"),
     )
-
-
-def title_of(html_str: Column) -> Column:
-    return F.regexp_extract(html_str, _TITLE, 1)
 
 
 # -- frozen html->text extractor (Arrow batch) -------------------------------
@@ -121,15 +105,9 @@ def stopword_ratio(text: Column) -> Column:
     return stop.cast("double") / F.greatest(F.size(toks), F.lit(1)).cast("double")
 
 
-def punct_ratio(text: Column) -> Column:
-    n = F.length(text)
-    stripped = F.length(F.regexp_replace(text, r"[^\p{P}]", ""))
-    return stripped.cast("double") / F.greatest(n, F.lit(1)).cast("double")
-
-
 def quality_score(text: Column) -> Column:
-    """Composite quality heuristic in [0, 1]: length band + low punctuation
-    + healthy stopword ratio. Deterministic arithmetic; SQL-twinned in the
+    """Composite quality heuristic in [0, 1]: length band + healthy
+    stopword ratio. Deterministic arithmetic; SQL-twinned in the
     oracle queries."""
     ln = F.length(text).cast("double")
     len_score = F.least(ln / F.lit(500.0), F.lit(1.0))

@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from geocore_spark.operators.decontam import _gram_rows
+from geocore_spark.sources.stats import _bloom_set, _bloom_test
 
 _MIN_BITS = 1024
 
@@ -57,14 +58,12 @@ def _params(capacity: int, fpr: float) -> tuple[int, int]:
     return m, k
 
 
-def _positions(h: np.ndarray, m_bits: int, k: int) -> np.ndarray:
-    """(len(h), k) bit positions via Kirsch-Mitzenmacher double hashing
-    over a 64-bit input hash (h1 = low 32, h2 = high 32 forced odd)."""
+def _split(h: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(h1, h2) of a 64-bit input hash for the shared double-hashing
+    kernel (sources/stats._bloom_set/_bloom_test): h1 = low 32 bits,
+    h2 = high 32 bits forced odd."""
     u = h.astype(np.int64).view(np.uint64)
-    h1 = u & np.uint64(0xFFFFFFFF)
-    h2 = (u >> np.uint64(32)) | np.uint64(1)
-    i = np.arange(k, dtype=np.uint64)
-    return (h1[:, None] + i[None, :] * h2[:, None]) % np.uint64(m_bits)
+    return u & np.uint64(0xFFFFFFFF), (u >> np.uint64(32)) | np.uint64(1)
 
 
 @dataclass(frozen=True)
@@ -77,14 +76,8 @@ class BloomFilter:
 
     def contains_np(self, h: np.ndarray) -> np.ndarray:
         """Vectorized membership test over an int64 hash array."""
-        if h.size == 0:
-            return np.zeros(0, dtype=bool)
         arr = np.frombuffer(self.bits, dtype=np.uint8)
-        pos = _positions(h, self.m_bits, self.k)
-        hit = arr[pos >> np.uint64(3)] & (
-            np.uint8(1) << (pos & np.uint64(7)).astype(np.uint8)
-        )
-        return (hit != 0).all(axis=1)
+        return _bloom_test(arr, *_split(h), self.k)
 
 
 def build_bloom(
@@ -108,12 +101,7 @@ def build_bloom(
             if h.size == 0:
                 continue
             seen = True
-            pos = _positions(h, m_bits, k).ravel()
-            np.bitwise_or.at(
-                local,
-                (pos >> np.uint64(3)).astype(np.int64),
-                (np.uint8(1) << (pos & np.uint64(7)).astype(np.uint8)),
-            )
+            _bloom_set(local, *_split(h), k)
         if seen:
             yield pd.DataFrame({"bits": [local.tobytes()]})
 

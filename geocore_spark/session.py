@@ -77,12 +77,6 @@ def get_spark(
     return spark
 
 
-def stop_spark() -> None:
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()
-
-
 # frames persisted by an engine call, keyed by (owner, applicationId)
 _LIVE: dict[tuple[str, str], list[DataFrame]] = {}
 

@@ -729,50 +729,33 @@ def _pruned_victim_files(
     the bitmap-broadcast kernel, the only pruner on hash layouts).
     Keys never reach the driver through either probe. Both manifests
     must cover every live file (stale = loud error, like a stale
-    Iceberg manifest would be corruption)."""
+    Iceberg manifest would be corruption): stats._check_covers reads
+    the rows the probe collects, so each manifest is evaluated once."""
     if (key_stats is None and key_blooms is None) or not live:
         return live
-    from geocore_spark.sources.stats import (
-        decode_file_url,
-        probe_victim_files,
-        probe_victim_files_bloom,
-    )
+    from geocore_spark.sources import stats as st
 
-    def _check_profiled(manifest, what, rebuild):
-        profiled = {
-            decode_file_url(r["file"])
-            for r in manifest.select("file").collect()
-        }
-        missing = [f for f in live if f not in profiled]
-        if missing:
-            raise ValueError(
-                f"{what} is stale: {len(missing)} live files "
-                f"unprofiled (rebuild with {rebuild}), "
-                f"e.g. {missing[:2]}"
-            )
-
+    spark = keys_df.sparkSession
     scan_files = live
     if key_stats is not None:
-        _check_profiled(key_stats, "key_stats", "snapshot_file_stats")
+        rows = st._range_rows(key_stats, prune_col)
+        st._check_covers(spark, rows, live, "key_stats", "snapshot_file_stats")
         # distributed victim probe: ranges broadcast INTO a mapInPandas
-        # searchsorted kernel over the keys — only hit file names reach
-        # the driver, so the batch may be arbitrarily large (the old
-        # path collected the whole batch key set driver-side)
-        hitset = probe_victim_files(
-            keys_df.select(prune_col), prune_col, key_stats
-        )
+        # searchsorted kernel over the keys — only hit file indices are
+        # collected, so the batch may be arbitrarily large
+        hitset = st._probe_ranges(keys_df.select(prune_col), prune_col, rows)
         scan_files = [f for f in live if f in hitset]
     if key_blooms is not None and scan_files:
-        _check_profiled(key_blooms, "key_blooms", "snapshot_file_blooms")
+        rows = st._bloom_rows(key_blooms, prune_col)
+        st._check_covers(
+            spark, rows, live, "key_blooms", "snapshot_file_blooms"
+        )
         # point-lookup probe over the range survivors only: the bitmap
         # broadcast is bounded by the candidate set, and on a hash
         # layout (ranges prune nothing) this is what keeps a point-key
         # write from scanning every live file
-        bloomset = probe_victim_files_bloom(
-            keys_df.select(prune_col),
-            prune_col,
-            key_blooms,
-            candidates=set(scan_files),
+        bloomset = st._probe_blooms(
+            keys_df.select(prune_col), prune_col, rows, set(scan_files)
         )
         scan_files = [f for f in scan_files if f in bloomset]
     return scan_files
@@ -1466,51 +1449,28 @@ def read_snapshot_pruned(
     driver state. ``stats`` must cover every live file of the version
     being read (build with :func:`snapshot_file_stats` after commits) —
     a stale manifest raises instead of silently skipping unprofiled
-    files or reading expired ones."""
+    files or reading expired ones. One collect of ``stats`` serves the
+    coverage check (stats._check_covers), the prune and the report; the
+    kept files are read by :func:`_read_with_pos`, like every other
+    snapshot read."""
     from geocore_spark.sources import stats as st
 
     m = load_manifest(spark, root, version)
-    live = set(m["data_files"])
-    # one evaluation of the (possibly lazily-built) stats frame serves
-    # the coverage check, the prune and the report
-    stats = stats.persist()
-    try:
-        profiled = {
-            st.decode_file_url(r["file"]) for r in stats.select("file").collect()
-        }
-        missing = live - profiled
-        if missing:
-            raise ValueError(
-                f"stats manifest is stale: {len(missing)} live files "
-                f"unprofiled (rebuild with snapshot_file_stats), e.g. "
-                f"{sorted(missing)[:2]}"
-            )
-        kept_all, _ = st.prune_files(stats, ranges)
-        kept_set = set(kept_all) & live  # drop files expired since profiling
-        kept = sorted(kept_set)
-        rep = st.PruneReport(
-            files_total=len(live),
-            files_read=len(kept),
-            rows_possible=sum(
-                r["n_rows"]
-                for r in stats.select("file", "n_rows").collect()
-                if st.decode_file_url(r["file"]) in kept_set
-            ),
-        )
-    finally:
-        stats.unpersist()
-    schema = StructType.fromJson(json.loads(m["schema"]))
-    if not kept:
-        return spark.createDataFrame([], schema), rep
-    # explicit manifest schema, like _read_with_pos: evolution-safe
-    df = spark.read.schema(schema).parquet(*kept).select(
-        "*",
-        F.col("_metadata.file_path").alias(_DV_FILE),
-        F.col("_metadata.row_index").alias(_DV_POS),
+    live = sorted(m["data_files"])
+    # one collect of the stats frame serves the coverage check, the
+    # prune and the report
+    rows = st._range_keep_rows(stats, ranges)
+    st._check_covers(spark, rows, live, "stats manifest", "snapshot_file_stats")
+    # files expired since profiling are dropped
+    kept_set = {f for f, _, keep in rows if keep} & set(live)
+    kept = sorted(kept_set)
+    rep = st.PruneReport(
+        files_total=len(live),
+        files_read=len(kept),
+        rows_possible=sum(n for f, n, _ in rows if f in kept_set),
     )
-    if m["delete_files"]:
-        dv = spark.read.schema(_DV_SCHEMA).parquet(*m["delete_files"])
-        df = df.join(F.broadcast(dv), on=[_DV_FILE, _DV_POS], how="left_anti")
+    # vector rows for pruned-away files are anti-join no-ops
+    df = _read_with_pos(spark, dict(m, data_files=kept))
     return df.drop(_DV_FILE, _DV_POS), rep
 
 

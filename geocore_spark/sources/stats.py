@@ -39,7 +39,7 @@ from urllib.parse import unquote
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
@@ -119,6 +119,13 @@ def prune_files(
     ``col -> (lo, hi)`` range (closed; pass None for an open bound).
     Conservative on NULL stats (file kept). Driver-side result is the
     kept file list — bounded by the file count, like any manifest."""
+    return _kept(_range_keep_rows(stats, ranges))
+
+
+def _range_keep_rows(
+    stats: DataFrame, ranges: dict[str, tuple]
+) -> list[tuple[str, int, bool]]:
+    """The range prune's ``(decoded file, n_rows, keep)`` rows."""
     cond = F.lit(True)
     for c, (lo, hi) in ranges.items():
         col_ok = F.lit(True)
@@ -128,14 +135,44 @@ def prune_files(
             col_ok = col_ok & (F.col(f"max_{c}") >= F.lit(lo))
         # NULL min/max (all-null file) -> condition NULL -> keep via coalesce
         cond = cond & F.coalesce(col_ok, F.lit(True))
-    rows = stats.select("file", "n_rows", cond.alias("__keep")).collect()
-    kept = [decode_file_url(r["file"]) for r in rows if r["__keep"]]
-    rep = PruneReport(
+    return _rows(stats, "n_rows", cond)
+
+
+def _rows(sidecar: DataFrame, *cols) -> list[tuple]:
+    """A manifest's one collect: ``(decoded file, *cols)`` per
+    row (1 row/file: manifest-bounded, never key-bounded). The coverage
+    check and the probe or prune read the same list, so a lazily-built
+    sidecar is evaluated once per call."""
+    rows = sidecar.select("file", *cols).collect()
+    return [(decode_file_url(r[0]), *r[1:]) for r in rows]
+
+
+def _kept(rows: list[tuple[str, int, bool]]) -> tuple[list[str], PruneReport]:
+    kept = [f for f, _, keep in rows if keep]
+    return kept, PruneReport(
         files_total=len(rows),
         files_read=len(kept),
-        rows_possible=sum(r["n_rows"] for r in rows if r["__keep"]),
+        rows_possible=sum(n for _, n, keep in rows if keep),
     )
-    return kept, rep
+
+
+def _check_covers(
+    spark: SparkSession, rows, live: list[str], what: str, rebuild: str
+) -> None:
+    """The one "sidecar covers every live file" check, over the rows a
+    probe or prune already collected (decoded file path first in each
+    row). A live file the sidecar never profiled would be silently
+    skipped, so a stale manifest raises instead. Unprofiled files that
+    hold no rows are covered: the per-file aggregates never see them,
+    and Spark writes partition 0 of every write even when it is empty,
+    so a commit can list a zero-row file."""
+    profiled = {r[0] for r in rows}
+    missing = [f for f in live if f not in profiled]
+    if missing and not spark.read.parquet(*missing).isEmpty():
+        raise ValueError(
+            f"{what} is stale: {len(missing)} live files "
+            f"unprofiled (rebuild with {rebuild}), e.g. {missing[:2]}"
+        )
 
 
 def _probe_arr(vals) -> np.ndarray:
@@ -172,20 +209,18 @@ def probe_victim_files(
     NULL keys are ignored (key columns are non-null by the callers'
     uniqueness contract). Returns DECODED file paths.
     """
-    stat_col = stat_col or key_col
-    rows = stats.select(
-        "file", f"min_{stat_col}", f"max_{stat_col}"
-    ).collect()  # 1 row/file: manifest-bounded, never key-bounded
-    unknown = {
-        decode_file_url(r["file"])
-        for r in rows
-        if r[f"min_{stat_col}"] is None or r[f"max_{stat_col}"] is None
-    }
-    known = [
-        (decode_file_url(r["file"]), r[f"min_{stat_col}"], r[f"max_{stat_col}"])
-        for r in rows
-        if r[f"min_{stat_col}"] is not None and r[f"max_{stat_col}"] is not None
-    ]
+    return _probe_ranges(keys, key_col, _range_rows(stats, stat_col or key_col))
+
+
+def _range_rows(stats: DataFrame, col: str) -> list[tuple]:
+    return _rows(stats, f"min_{col}", f"max_{col}")
+
+
+def _probe_ranges(keys: DataFrame, key_col: str, rows) -> set[str]:
+    """:func:`probe_victim_files` over already-collected
+    :func:`_range_rows`."""
+    unknown = {f for f, lo, hi in rows if lo is None or hi is None}
+    known = [(f, lo, hi) for f, lo, hi in rows if lo is not None and hi is not None]
     if not known:
         return unknown
     files = [f for f, _, _ in known]
@@ -235,11 +270,19 @@ def _probe_frame(
 # bounded sidecar (~2 bytes/row at the default 10 bits/key), pruning
 # point lookups to ~the files that actually hold the keys.
 #
-# Hashing is Spark's JVM xxhash64, computed BEFORE the per-file aggregate
-# and again (by the same JVM function, over literals of the same type) at
-# probe time — build/probe consistency holds by construction, no Python
-# reimplementation to drift. Bit positions follow Kirsch-Mitzenmacher
-# double hashing: pos_i = (h1 + i*h2) mod m.
+# Build/probe consistency holds because each step the build and the
+# probes share has ONE definition here:
+# - hash: _bloom_hash_cols, Spark's JVM xxhash64 of the value and of
+#   (value, salt). The build applies it before the per-file aggregate;
+#   the probes apply the same Column expression to keys cast to the
+#   sidecar's recorded type. No Python reimplementation to drift.
+# - bits: _bloom_positions, Kirsch-Mitzenmacher double hashing
+#   pos_i = (h1 + i*h2) mod m; _bloom_set and _bloom_test do the byte/bit
+#   addressing for the build and every probe (operators/bloom.py reuses
+#   both for its decontamination filter).
+# - params: _bloom_params refuses a sidecar whose rows disagree on the
+#   hash count or a column's recorded type.
+# - coverage: _check_covers refuses a sidecar that misses a live file.
 #
 # Soundness contract (same as the range stats): the filter may say
 # "might contain" for an absent value (false positive -> wasted read),
@@ -248,24 +291,66 @@ def _probe_frame(
 
 _BLOOM_SALT = "gc_bloom_h2"  # second-hash chain salt (see _bloom_hash_cols)
 _NULL_HASH_SENTINEL = 42  # xxhash64's seed == its output for NULL input
+_SET_CHUNK = 1 << 16  # rows per bit-setting step: bounds the (rows, k) temporaries
 
 
-def _bloom_hash_cols(c: str) -> list:
-    """Two independent 64-bit hashes of column ``c``: Spark's xxhash64 of
-    the value, and of (value, salt) — chaining a constant second operand
-    re-mixes the state, giving an independent stream. NULL values hash to
-    the seed (42) on both streams; rather than let a pandas int64->float64
-    null conversion destroy hash precision (ints above 2^53 round!), the
-    JVM side coalesces NULL hashes to that same sentinel — the file's
-    bloom gains one spurious "null fingerprint" bit pattern, which can
-    only ever ADD false positives, never prune wrongly."""
-    v = F.col(c)
-    return [
-        F.coalesce(F.xxhash64(v), F.lit(_NULL_HASH_SENTINEL)).alias(f"__h1_{c}"),
-        F.coalesce(
-            F.xxhash64(v, F.lit(_BLOOM_SALT)), F.lit(_NULL_HASH_SENTINEL)
-        ).alias(f"__h2_{c}"),
-    ]
+def _bloom_hash_cols(v: Column) -> tuple[Column, Column]:
+    """The one ``(h1, h2)`` definition: two independent 64-bit hashes of
+    ``v`` — Spark's xxhash64 of the value, and of (value, salt); chaining
+    a constant second operand re-mixes the state, giving an independent
+    stream. NULL values hash to the seed (42) on both streams; rather
+    than let a pandas int64->float64 null conversion destroy hash
+    precision (ints above 2^53 round!), the JVM side coalesces NULL
+    hashes to that same sentinel — the file's bloom gains one spurious
+    "null fingerprint" bit pattern, which can only ever ADD false
+    positives, never prune wrongly."""
+    null = F.lit(_NULL_HASH_SENTINEL)
+    return (
+        F.coalesce(F.xxhash64(v), null),
+        F.coalesce(F.xxhash64(v, F.lit(_BLOOM_SALT)), null),
+    )
+
+
+def _u64(h) -> np.ndarray:
+    """int64 hashes as uint64: astype wraps two's-complement, a pure
+    reinterpretation with no precision loss (NULLs never arrive: they
+    are coalesced JVM-side, see _bloom_hash_cols)."""
+    return np.asarray(h, dtype=np.int64).astype(np.uint64)
+
+
+def _bloom_positions(h1: np.ndarray, h2: np.ndarray, k: int, m: int) -> np.ndarray:
+    """``(len(h1), k)`` bit positions ``(h1 + i*h2) mod m``, i < k, over
+    uint64 hash arrays — the one double-hashing formula. uint64
+    wraparound IS the arithmetic."""
+    i = np.arange(k, dtype=np.uint64)
+    with np.errstate(over="ignore"):
+        return (h1[:, None] + i[None, :] * h2[:, None]) % np.uint64(m)
+
+
+def _bloom_addr(bits: np.ndarray, h1, h2, k: int):
+    """(byte index, bit mask) of each hash's k positions in ``bits``."""
+    pos = _bloom_positions(h1, h2, k, len(bits) * 8)
+    return (
+        (pos >> np.uint64(3)).astype(np.int64),
+        np.uint8(1) << (pos & np.uint64(7)).astype(np.uint8),
+    )
+
+
+def _bloom_set(bits: np.ndarray, h1, h2, k: int) -> None:
+    """Set every hash's k bits in the uint8 bitmap ``bits``, in place."""
+    for lo in range(0, len(h1), _SET_CHUNK):
+        byte, mask = _bloom_addr(
+            bits, h1[lo:lo + _SET_CHUNK], h2[lo:lo + _SET_CHUNK], k
+        )
+        # bitwise_or.at: unbuffered, duplicate positions in one batch
+        # all land (|= would drop repeats)
+        np.bitwise_or.at(bits, byte.ravel(), mask.ravel())
+
+
+def _bloom_test(bits: np.ndarray, h1, h2, k: int) -> np.ndarray:
+    """Per hash: are all k of its bits set in ``bits``? (bool array)"""
+    byte, mask = _bloom_addr(bits, h1, h2, k)
+    return ((bits[byte] & mask) != 0).all(axis=1)
 
 
 def file_blooms(
@@ -297,7 +382,12 @@ def file_blooms(
     )
     types = {c: df.schema[c].dataType.simpleString() for c in cols}
     hashed = df.select(
-        "__file", *[h for c in cols for h in _bloom_hash_cols(c)]
+        "__file",
+        *[
+            h.alias(f"__h{i}_{c}")
+            for c in cols
+            for i, h in enumerate(_bloom_hash_cols(F.col(c)), 1)
+        ],
     )
     out_fields = [
         StructField("file", StringType()),
@@ -321,27 +411,32 @@ def file_blooms(
         }
         for c in cols:
             bits = np.zeros(m // 8, dtype=np.uint8)
-            # int64 -> uint64 astype wraps two's-complement: a pure
-            # reinterpretation, no precision loss (nulls never arrive:
-            # coalesced JVM-side, see _bloom_hash_cols)
-            h1 = pdf[f"__h1_{c}"].to_numpy(np.int64).astype(np.uint64)
-            h2 = pdf[f"__h2_{c}"].to_numpy(np.int64).astype(np.uint64)
-            # uint64 wraparound IS the double-hash arithmetic
-            with np.errstate(over="ignore"):
-                for i in range(num_hashes):
-                    pos = (h1 + np.uint64(i) * h2) % np.uint64(m)
-                    # bitwise_or.at: unbuffered, duplicate positions in
-                    # one batch all land (|= would drop repeats)
-                    np.bitwise_or.at(
-                        bits,
-                        (pos >> np.uint64(3)).astype(np.int64),
-                        (np.uint64(1) << (pos & np.uint64(7))).astype(np.uint8),
-                    )
+            _bloom_set(
+                bits, _u64(pdf[f"__h1_{c}"]), _u64(pdf[f"__h2_{c}"]), num_hashes
+            )
             row[f"type_{c}"] = [types[c]]
             row[f"bloom_{c}"] = [bits.tobytes()]
         return pd.DataFrame(row)
 
     return hashed.groupBy("__file").applyInPandas(build, out_schema)
+
+
+def _bloom_params(rows, cols: list[str]) -> tuple[int, dict[str, str]]:
+    """The one mixed-sidecar guard, over collected ``(hashes, type_<c>
+    for c in cols)`` rows: returns the hash count and each column's
+    recorded type. Probing file A's bitmap with file B's hash count (or
+    a different recorded column type) would be UNSOUND — a true victim
+    could be pruned. Mixed sidecars mean someone unioned two builds;
+    rebuild one coherent manifest instead."""
+    ks = sorted({r[0] for r in rows})
+    types = [sorted({r[1 + i] for r in rows}) for i in range(len(cols))]
+    if len(ks) > 1 or any(len(t) > 1 for t in types):
+        shown = types[0] if len(cols) == 1 else dict(zip(cols, types))
+        raise ValueError(
+            f"mixed bloom sidecar params: hashes={ks} types={shown} — "
+            "rebuild the sidecar with one file_blooms call"
+        )
+    return int(ks[0]), {c: t[0] for c, t in zip(cols, types)}
 
 
 def probe_victim_files_bloom(
@@ -360,14 +455,13 @@ def probe_victim_files_bloom(
     Distributed like :func:`probe_victim_files`, with the probe
     direction the r4 verdict prescribed: the per-file BITMAPS are
     broadcast into a ``mapInPandas`` kernel that runs over the keys
-    DataFrame in place — keys are hashed JVM-side by the SAME xxhash64
-    chain the sidecar build used (build/probe consistency by
-    construction), each partition tests every pending file's k bit
-    positions with vectorized numpy probes, and only distinct hit FILE
-    INDICES cross to the driver (``_probe_frame_bloom``'s output schema
-    is ``idx long`` by construction, plan-pinnable like
-    ``_probe_frame``). The batch may be arbitrarily large; no key ever
-    reaches the driver.
+    DataFrame in place — keys are hashed JVM-side by the SAME
+    :func:`_bloom_hash_cols` the sidecar build used, each partition
+    tests every pending file's k bit positions with the shared
+    :func:`_bloom_test` kernel, and only distinct hit FILE INDICES are
+    collected (``_probe_frame_bloom``'s output schema is ``idx long``
+    by construction, plan-pinnable like ``_probe_frame``). The batch
+    may be arbitrarily large; no key is ever collected.
 
     Scale bound: the broadcast payload is the sidecar bitmaps —
     ~``bits_per_row/8`` bytes per ROW of the profiled files (1.25 B/row
@@ -383,47 +477,38 @@ def probe_victim_files_bloom(
     probed (and broadcast). Pass the range-probe's survivors to compose
     the two manifests: range first (tiny), blooms only on what's left.
     """
-    rows = blooms.select(
-        "file", "hashes", f"type_{key_col}", f"bloom_{key_col}"
-    ).collect()  # 1 row/file: manifest-bounded, never key-bounded
-    decoded = [(decode_file_url(r["file"]), r) for r in rows]
+    return _probe_blooms(keys, key_col, _bloom_rows(blooms, key_col), candidates)
+
+
+def _bloom_rows(blooms: DataFrame, col: str) -> list[tuple]:
+    return _rows(blooms, "hashes", f"type_{col}", f"bloom_{col}")
+
+
+def _probe_blooms(
+    keys: DataFrame, key_col: str, rows, candidates: set[str] | None = None
+) -> set[str]:
+    """:func:`probe_victim_files_bloom` over already-collected
+    :func:`_bloom_rows`."""
     if candidates is not None:
-        decoded = [(f, r) for f, r in decoded if f in candidates]
-    unknown = {f for f, r in decoded if r[f"bloom_{key_col}"] is None}
-    known = [
-        (f, bytes(r[f"bloom_{key_col}"]))
-        for f, r in decoded
-        if r[f"bloom_{key_col}"] is not None
-    ]
+        rows = [r for r in rows if r[0] in candidates]
+    unknown = {r[0] for r in rows if r[3] is None}
+    known = [r for r in rows if r[3] is not None]
     if not known:
         return unknown
-    with_blob = [r for _, r in decoded if r[f"bloom_{key_col}"] is not None]
-    ks = {int(r["hashes"]) for r in with_blob}
-    ktypes = {r[f"type_{key_col}"] for r in with_blob}
-    if len(ks) > 1 or len(ktypes) > 1:
-        # probing file A's bitmap with file B's hash count (or a
-        # different recorded column type) would be UNSOUND — a true
-        # victim could be pruned. Mixed sidecars mean someone unioned
-        # two builds; rebuild one coherent manifest instead.
-        raise ValueError(
-            f"mixed bloom sidecar params: hashes={sorted(ks)} "
-            f"types={sorted(ktypes)} — rebuild the sidecar with one "
-            "file_blooms call"
-        )
-    k = ks.pop()
-    ktype = ktypes.pop()
-    files = [f for f, _ in known]
-    sc = keys.sparkSession.sparkContext
-    blobs_bc = sc.broadcast([b for _, b in known])
+    k, types = _bloom_params([r[1:3] for r in known], [key_col])
+    blobs_bc = keys.sparkSession.sparkContext.broadcast(
+        [bytes(r[3]) for r in known]
+    )
     try:
         hit_idx = {
             int(r["idx"])
-            for r in _probe_frame_bloom(keys, key_col, ktype, blobs_bc, k)
-            .collect()
+            for r in _probe_frame_bloom(
+                keys, key_col, types[key_col], blobs_bc, k
+            ).collect()
         }
     finally:
         blobs_bc.destroy()
-    return unknown | {files[j] for j in hit_idx}
+    return unknown | {known[j][0] for j in hit_idx}
 
 
 def _probe_frame_bloom(
@@ -434,72 +519,62 @@ def _probe_frame_bloom(
     the key column never crosses the Python→driver boundary. Hashing
     runs JVM-side (cast to the sidecar's recorded column type, so an
     INT batch against a BIGINT table hashes like the build did)."""
-    v = F.col(key_col).cast(_parse_type(key_type))
-    hashed = keys.select(
-        F.coalesce(F.xxhash64(v), F.lit(_NULL_HASH_SENTINEL)).alias("__h1"),
-        F.coalesce(
-            F.xxhash64(v, F.lit(_BLOOM_SALT)), F.lit(_NULL_HASH_SENTINEL)
-        ).alias("__h2"),
-    )
+    h1, h2 = _bloom_hash_cols(F.col(key_col).cast(_parse_type(key_type)))
+    hashed = keys.select(h1.alias("__h1"), h2.alias("__h2"))
 
     def probe(batches):
-        blobs = blobs_bc.value
-        arrs = [np.frombuffer(b, dtype=np.uint8) for b in blobs]
-        ms = [np.uint64(len(a) * 8) for a in arrs]
+        arrs = [np.frombuffer(b, dtype=np.uint8) for b in blobs_bc.value]
         pending = set(range(len(arrs)))
-        hit: set[int] = set()
-        with np.errstate(over="ignore"):
-            for pdf in batches:
-                if not pending:
-                    break
-                h1 = pdf["__h1"].to_numpy(np.int64).astype(np.uint64)
-                h2 = pdf["__h2"].to_numpy(np.int64).astype(np.uint64)
-                if not len(h1):
-                    continue
-                for j in sorted(pending):
-                    ok = np.ones(len(h1), dtype=bool)
-                    for i in range(k):
-                        pos = (h1 + np.uint64(i) * h2) % ms[j]
-                        byte = arrs[j][(pos >> np.uint64(3)).astype(np.int64)]
-                        bit = (
-                            byte >> (pos & np.uint64(7)).astype(np.uint8)
-                        ) & np.uint8(1)
-                        ok &= bit.astype(bool)
-                        if not ok.any():
-                            break
-                    if ok.any():
-                        hit.add(j)
-                        pending.discard(j)
-        yield pd.DataFrame({"idx": sorted(hit)}, dtype="int64")
+        for pdf in batches:
+            if not pending:
+                break
+            h1, h2 = _u64(pdf["__h1"]), _u64(pdf["__h2"])
+            for j in sorted(pending):
+                if _bloom_test(arrs[j], h1, h2, k).any():
+                    pending.discard(j)
+        hit = sorted(set(range(len(arrs))) - pending)
+        yield pd.DataFrame({"idx": hit}, dtype="int64")
 
     return hashed.mapInPandas(probe, "idx long").distinct()
 
 
 def _probe_hashes(
     spark: SparkSession, values: list, spark_type: str
-) -> list[tuple[int, int]]:
-    """(h1, h2) per probe value, computed by the SAME JVM xxhash64 the
-    build used, over literals cast to the column's recorded type — the
-    only way int-vs-bigint / physical-type hashing can never skew. One
-    tiny local job (len(values) rows)."""
+) -> tuple[np.ndarray, np.ndarray]:
+    """uint64 ``(h1, h2)`` arrays over ``values``, computed by the SAME
+    :func:`_bloom_hash_cols` the build used, over literals cast to the
+    column's recorded type — the only way int-vs-bigint / physical-type
+    hashing can never skew. One tiny local job (len(values) rows)."""
     vdf = spark.createDataFrame(
         [(v,) for v in values],
         StructType([StructField("v", _parse_type(spark_type))]),
     )
-    rows = vdf.select(
-        F.coalesce(F.xxhash64(F.col("v")), F.lit(_NULL_HASH_SENTINEL)).alias("h1"),
-        F.coalesce(
-            F.xxhash64(F.col("v"), F.lit(_BLOOM_SALT)),
-            F.lit(_NULL_HASH_SENTINEL),
-        ).alias("h2"),
-    ).collect()
-    return [(r["h1"], r["h2"]) for r in rows]
+    rows = vdf.select(*_bloom_hash_cols(F.col("v"))).collect()
+    return _u64([r[0] for r in rows]), _u64([r[1] for r in rows])
 
 
 def _parse_type(simple: str):
     from pyspark.sql.types import _parse_datatype_string
 
     return _parse_datatype_string(simple)
+
+
+def _might_contain(h1s: np.ndarray, h2s: np.ndarray, k: int):
+    """Boolean pandas UDF over a ``bloom_<c>`` column: might the file
+    hold ANY of the probe hashes? A NULL blob (unknown sidecar) keeps
+    the file."""
+
+    @F.pandas_udf(BooleanType())
+    def might_contain(blob: pd.Series) -> pd.Series:
+        return pd.Series(
+            [
+                b is None
+                or bool(_bloom_test(np.frombuffer(b, np.uint8), h1s, h2s, k).any())
+                for b in blob
+            ]
+        )
+
+    return might_contain
 
 
 def prune_files_bloom(
@@ -514,89 +589,39 @@ def prune_files_bloom(
     pandas UDF per row's bytes); only kept file NAMES come back to the
     driver, so the manifest itself never needs collecting — at 800k
     files x 16 KiB the sidecars are ~13 GB, driver-collectable never,
-    one executor pass always. NULL probe values are rejected (equality
-    never matches NULL; use the n_rows/nnull stats for IS NULL)."""
+    one executor pass always. The hash count and column types are read
+    by one small distinct collect (no bitmaps) and checked by the same
+    guard :func:`probe_victim_files_bloom` uses. NULL probe values are
+    rejected (equality never matches NULL; use the n_rows/nnull stats
+    for IS NULL)."""
     if not probes:
         raise ValueError("probes must be non-empty")
+    cols = list(probes)
     # one evaluation serves the params read AND the membership scan — a
     # lazily-built sidecar (file_blooms output) would otherwise run its
     # per-file aggregate twice
     blooms = blooms.persist()
     try:
-        first = blooms.select(
-            "hashes", *[f"type_{c}" for c in probes]
-        ).first()
-        if first is None:  # empty sidecar table: nothing to keep
+        params = (
+            blooms.select("hashes", *[f"type_{c}" for c in cols])
+            .distinct()
+            .collect()
+        )
+        if not params:  # empty sidecar table: nothing to keep
             return [], PruneReport(0, 0, 0)
-        chk = blooms.agg(
-            F.count_distinct("hashes").alias("kk"),
-            *[
-                F.count_distinct(f"type_{c}").alias(f"t_{c}")
-                for c in probes
-            ],
-        ).first()
-        if chk["kk"] > 1 or any(chk[f"t_{c}"] > 1 for c in probes):
-            # probing one file's bitmap with another build's hash count
-            # or column type is UNSOUND (a present value could be
-            # pruned) — refuse unioned sidecars, rebuild one manifest
-            raise ValueError(
-                "mixed bloom sidecar params (hashes/type differ across "
-                "rows) — rebuild the sidecar with one file_blooms call"
-            )
-        k = first["hashes"]
-        cond = F.lit(True)
+        k, types = _bloom_params(params, cols)
+        keep = F.lit(True)
         for c, values in probes.items():
             if not values:
                 raise ValueError(f"empty probe list for column {c!r}")
             if any(v is None for v in values):
                 raise ValueError(f"NULL probe value for column {c!r}")
-            hp = _probe_hashes(spark, list(values), first[f"type_{c}"])
-            h1s = np.array([h for h, _ in hp], dtype=np.int64).astype(np.uint64)
-            h2s = np.array([h for _, h in hp], dtype=np.int64).astype(np.uint64)
-
-            def make_probe(h1s=h1s, h2s=h2s, k=k):
-                @F.pandas_udf(BooleanType())
-                def might_contain(blob: pd.Series) -> pd.Series:
-                    out = []
-                    # uint64 wraparound IS the double-hash arithmetic —
-                    # silence numpy's scalar-overflow warning for it
-                    with np.errstate(over="ignore"):
-                        for b in blob:
-                            if b is None:
-                                out.append(True)  # unknown sidecar: keep
-                                continue
-                            bits = np.frombuffer(b, dtype=np.uint8)
-                            m = np.uint64(len(bits) * 8)
-                            hit = False
-                            for h1, h2 in zip(h1s, h2s):
-                                ok = True
-                                for i in range(k):
-                                    pos = (h1 + np.uint64(i) * h2) % m
-                                    if not (
-                                        bits[int(pos >> np.uint64(3))]
-                                        >> int(pos & np.uint64(7))
-                                    ) & 1:
-                                        ok = False
-                                        break
-                                if ok:
-                                    hit = True
-                                    break
-                            out.append(hit)
-                    return pd.Series(out)
-
-                return might_contain
-
-            cond = cond & make_probe()(F.col(f"bloom_{c}"))
-        rows = blooms.select("file", "n_rows", cond.alias("__keep")).collect()
+            h1s, h2s = _probe_hashes(spark, list(values), types[c])
+            keep = keep & _might_contain(h1s, h2s, k)(F.col(f"bloom_{c}"))
+        rows = _rows(blooms, "n_rows", keep)
     finally:
         blooms.unpersist()
-    kept = [decode_file_url(r["file"]) for r in rows if r["__keep"]]
-    rep = PruneReport(
-        files_total=len(rows),
-        files_read=len(kept),
-        rows_possible=sum(r["n_rows"] for r in rows if r["__keep"]),
-    )
-    return kept, rep
+    return _kept(rows)
 
 
 def pruned_parquet_point(

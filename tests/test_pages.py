@@ -1,6 +1,7 @@
 """Pages generator determinism + byte-identical extraction invariant."""
 
 import hashlib
+import re
 
 from pyspark.sql import functions as F
 
@@ -18,9 +19,8 @@ def test_pages_deterministic(spark):
 def test_geotag_extraction_matches_truth(spark):
     df = pg.pages(spark, 500)
     bad = (
-        df.withColumn("h", F.decode("html", "UTF-8"))
-        .withColumn("lat", tx.geo_lat(F.col("h")))
-        .withColumn("lon", tx.geo_lon(F.col("h")))
+        df.withColumn("g", tx.geo_latlon(F.decode("html", "UTF-8")))
+        .select("lat_true", "lon_true", "g.lat", "g.lon")
         .filter(
             (F.abs(F.col("lat") - F.col("lat_true")) > 1e-5)
             | (F.abs(F.col("lon") - F.col("lon_true")) > 1e-5)
@@ -96,9 +96,9 @@ def test_lang_guess(spark):
     assert got == ["en", "de", "fr", "unknown"]
 
 
-def test_geo_latlon_matches_split_extractors(spark):
-    """Single-pass geo_latlon must equal geo_lat + geo_lon on tagged,
-    untagged, and malformed pages."""
+def test_geo_latlon_matches_python_re(spark):
+    """The JVM regex pass equals Python ``re`` with the same pattern on
+    tagged, untagged and malformed pages, and on generated pages."""
     rows = [
         ('<meta name="geo.position" content="40.7128;-74.0060"/>',),
         ('<meta name="geo.position" content="-33.9;151.2"/>',),
@@ -106,11 +106,12 @@ def test_geo_latlon_matches_split_extractors(spark):
         ('<meta name="geo.position" content="bad;data"/>',),
         ("",),
     ]
-    df = spark.createDataFrame(rows, "h string")
-    got = df.select(
-        tx.geo_lat(F.col("h")).alias("lat1"),
-        tx.geo_lon(F.col("h")).alias("lon1"),
-        tx.geo_latlon(F.col("h")).alias("g"),
-    ).collect()
+    df = spark.createDataFrame(rows, "h string").unionByName(
+        pg.pages(spark, 200).select(F.decode("html", "UTF-8").alias("h"))
+    )
+    got = df.select("h", tx.geo_latlon(F.col("h")).alias("g")).collect()
+    assert sum(r["g"]["lat"] is not None for r in got) >= 2
     for r in got:
-        assert r["lat1"] == r["g"]["lat"] and r["lon1"] == r["g"]["lon"], r
+        m = re.search(tx._GEO_META_ONE, r["h"])
+        want = tuple(map(float, m.group(1).split(";"))) if m else (None, None)
+        assert (r["g"]["lat"], r["g"]["lon"]) == want, r["h"][:200]

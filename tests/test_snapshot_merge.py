@@ -439,6 +439,74 @@ def test_merge_bloom_validation(spark, root):
         snap.merge_into(spark, froot, fbatch, ["k"], key_blooms=fbl)
 
 
+def test_keyed_writes_evaluate_an_unpersisted_sidecar_once(spark, root):
+    """The coverage check and the victim probe read ONE collect of the
+    sidecar: an unpersisted manifest (jobs/run_incremental passes one)
+    is built once per keyed write, not once per check."""
+    from pyspark.sql.types import StringType
+
+    n_files = 8
+    calls = spark.sparkContext.accumulator(0)
+
+    @F.pandas_udf(StringType())
+    def counted(f):
+        calls.add(len(f))
+        return f
+
+    sidecars = {
+        "key_blooms": snap.snapshot_file_blooms,
+        "key_stats": snap.snapshot_file_stats,
+    }
+    for kind, build in sidecars.items():
+        t = f"{root}_{kind}"
+        snap.create_table(
+            spark, t, spark.range(0, 800).withColumn("v", F.col("id") * 3)
+            .repartition(n_files, "id"),
+        )
+        # the delete adds no data file, so the table has n_files at both
+        for op in ("delete_by_key", "merge_into"):
+            side = build(spark, t, ["id"]).withColumn("file", counted("file"))
+            calls.value = 0
+            if op == "delete_by_key":
+                keys = spark.createDataFrame([(3,), (401,)], "id bigint")
+                snap.delete_by_key(spark, t, keys, "id", **{kind: side})
+            else:
+                snap.merge_into(
+                    spark, t, _batch(spark, 10, 12, 5), ["id"], **{kind: side}
+                )
+            assert calls.value == n_files, (kind, op, calls.value)
+
+
+def test_sidecar_after_merge_with_empty_partition_file(spark, root):
+    """Spark writes partition 0 of every write even when it is empty, so
+    a merge can commit a zero-row data file that no per-file aggregate
+    profiles. A sidecar built after that commit is not stale: the
+    zero-row file holds no victim. A sidecar missing a file WITH rows
+    still raises."""
+    snap.create_table(
+        spark, root, spark.range(0, 800).withColumn("v", F.col("id") * 3)
+        .repartition(8, "id"),
+    )
+    # 2 rows over the default 4 range partitions: partition 0 is empty
+    snap.merge_into(spark, root, _batch(spark, 10, 12, 5), ["id"])
+    for kind, build, key in (
+        ("key_stats", snap.snapshot_file_stats, 3),
+        ("key_blooms", snap.snapshot_file_blooms, 4),
+    ):
+        live = snap.load_manifest(spark, root)["data_files"]
+        empty = sum(spark.read.parquet(f).count() == 0 for f in live)
+        assert empty >= 1
+        side = build(spark, root, ["id"]).persist()
+        assert side.count() == len(live) - empty
+        keys = spark.createDataFrame([(key,), (11,)], "id bigint")
+        _, st = snap.delete_by_key(spark, root, keys, "id", **{kind: side})
+        assert st["rows_deleted"] == (2 if kind == "key_stats" else 1), kind
+        snap.append(spark, root, _batch(spark, 900 + key, 901 + key, 1))
+        with pytest.raises(ValueError, match=f"{kind} is stale"):
+            snap.delete_by_key(spark, root, keys, "id", **{kind: side})
+        side.unpersist()
+
+
 # ---------------------------------------------------------------------------
 # cross-process races against compact_snapshot
 # ---------------------------------------------------------------------------

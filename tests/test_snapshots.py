@@ -433,8 +433,10 @@ print("WRITER-OK", wid)
 """
     )
     import os
+    from pathlib import Path
 
-    env = dict(os.environ, PYTHONPATH="/root/repo")
+    # the writers import the engine under test, from this checkout
+    env = dict(os.environ, PYTHONPATH=str(Path(__file__).resolve().parents[1]))
     procs = [
         subprocess.Popen(
             [sys.executable, str(writer), root, str(w), str(n_commits),

@@ -359,6 +359,90 @@ def test_probe_victim_files_timestamp_keys(spark, tmp_path):
     assert st.probe_victim_files(far, "ts", stats) == set()
 
 
+# sha256 of every bloom_<c> blob of _pin_fixture's three files, per
+# file_blooms keyword set: sidecars are persisted next to tables, so
+# their byte layout must never change
+_PIN_DIGESTS = {
+    (): {
+        "a": ("5dc7268fe1c3c33e89c7a1a6d1d062f1dac525b9791b390b10b2345b64acd768",
+              "9281975940d9f04189adb37dd3cbaef7c56c5460f1ebca558c661110adc8f9ce"),
+        "b": ("a86b91f56c33d6ee8cfa6c86e285ea70adb951e31f6766a5b3600d81e32d02d0",
+              "583338f857b5212206d14daac1ccbe95ec8ac3c0c42a4579c0ab3cfed8621137"),
+        "c": ("ed47a240beaf7d9d8bbeba0cbad208723e180de2da58d78d89bee9c99ea83771",
+              "e5b823c41c9fb8b5c9122d0260535fcc9a5540e81c324cd7800eefaa51c361f0"),
+    },
+    (("bits_per_row", 16), ("num_hashes", 3)): {
+        "a": ("ba97216b4ab9883984f59fdc0f46c6fa37de159acbff0f857db928d8147dd0d3",
+              "45b70766dea484785aab2f4b367839d498609466c44db5a58e1632cd6034691e"),
+        "b": ("fd4d52c73a3b7294e433734e3a993eb606a1d42676cb124ef9f05e072edd21e3",
+              "72f9091d6ee891317a92e631bf7dd5cefcbd9566aa29cfd6f8ea52bb3b489c7e"),
+        "c": ("26cdcb1bb56500ac2de9bfa0452f6603f47c06a0613dc8514b3b4a959cd36b59",
+              "1a9b053d63b8a72b7350bba4bbd3257e2f0896dea089bafc61f71a4ae3d07390"),
+    },
+}
+
+
+def _pin_fixture(spark, tmp_path) -> list[str]:
+    """Three one-file tables: bigint keys (one above 2^53, where a
+    float64 round trip would lose bits), strings, and NULLs."""
+    big = 2**53 + 1
+    parts = {
+        "a": spark.createDataFrame(
+            [(1, "a"), (2, "b"), (big, None), (None, "\u00fc")],
+            "k bigint, s string",
+        ),
+        "b": spark.createDataFrame(
+            [(-5, "x"), (10**18, "y"), (3, "z")], "k bigint, s string"
+        ),
+        "c": spark.range(1000).select(
+            (F.col("id") * 7919 + F.lit(big)).alias("k"),
+            F.concat(F.lit("u"), F.col("id")).alias("s"),
+        ),
+    }
+    paths = []
+    for name, df in parts.items():
+        paths.append(str(tmp_path / name))
+        df.coalesce(1).write.parquet(paths[-1])
+    return paths
+
+
+def test_file_blooms_layout_is_pinned(spark, tmp_path):
+    """Persisted sidecar bytes are a format: the same rows must give
+    bit-identical bitmaps, and the probes must keep the same files."""
+    import hashlib
+
+    paths = _pin_fixture(spark, tmp_path)
+
+    def where(f):
+        return st.decode_file_url(f).rsplit("/", 2)[-2]
+
+    for kw, want in _PIN_DIGESTS.items():
+        got = {
+            where(r["file"]): tuple(
+                hashlib.sha256(bytes(r[f"bloom_{c}"])).hexdigest()
+                for c in ("k", "s")
+            )
+            for r in st.file_blooms(spark, paths, ["k", "s"], **dict(kw)).collect()
+        }
+        assert got == want, kw
+    bl = st.file_blooms(spark, paths, ["k", "s"]).cache()
+    try:
+        big = 2**53 + 1
+        for probe, kept in [
+            ({"k": [1]}, ["a"]),
+            ({"k": [big]}, ["a", "c"]),
+            ({"k": [big + 7919 * 10, 99]}, ["c"]),
+            ({"s": ["u5", "x"]}, ["b", "c"]),
+            ({"k": [3], "s": ["z"]}, ["b"]),
+            ({"k": [3], "s": ["a"]}, []),
+            ({"k": list(range(-50, 50))}, ["a", "b"]),
+        ]:
+            files, _ = st.prune_files_bloom(spark, bl, probe)
+            assert sorted(map(where, files)) == kept, probe
+    finally:
+        bl.unpersist()
+
+
 # ---------------------------------------------------------------------------
 # Distributed Bloom victim probe (r4 verdict item #2)
 # ---------------------------------------------------------------------------

@@ -23,10 +23,11 @@ convention as tools/dedup_eval.py).
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from geocore_spark.operators import dedup as dd  # noqa: E402
 from geocore_spark.session import get_spark  # noqa: E402
