@@ -7,7 +7,11 @@ process a whole Arrow batch of points against a broadcast geometry layer —
 the "no per-row Python" contract from BASELINE.json's input_hint.
 
 PIP is even-odd ray casting (public algorithm); boundary points follow the
-half-open edge rule so shared edges never double-count.
+half-open edge rule so shared edges never double-count. The PIP kernel
+serves the driver-side cover build (cell corner tests) and the tests, as
+the oracle: the polygon join refines with its Column twin,
+``operators/spatial_join._inside``, which runs the same operations in the
+same order in the JVM.
 """
 
 from __future__ import annotations
@@ -15,6 +19,17 @@ from __future__ import annotations
 import numpy as np
 
 from geocore_spark.geometry import wkb as wkb_mod
+
+
+def closed_ring(ring: np.ndarray) -> np.ndarray:
+    """``ring`` with its first vertex repeated at the end, when it is not.
+
+    External WKB with an unclosed ring is malformed per spec but common in
+    the wild: without the closing edge every point "inside via that edge"
+    flips to outside."""
+    if len(ring) and not np.array_equal(ring[0], ring[-1]):
+        return np.vstack([ring, ring[:1]])
+    return ring
 
 
 def points_in_ring(lon: np.ndarray, lat: np.ndarray, ring: np.ndarray) -> np.ndarray:
@@ -26,11 +41,7 @@ def points_in_ring(lon: np.ndarray, lat: np.ndarray, ring: np.ndarray) -> np.nda
     x = np.asarray(lon, float)
     y = np.asarray(lat, float)
     inside = np.zeros(x.shape, dtype=bool)
-    if len(ring) and not np.array_equal(ring[0], ring[-1]):
-        # external WKB with an unclosed ring (malformed per spec, common in
-        # the wild): close it virtually, else the closing edge is missing
-        # and every point "inside via that edge" flips to outside
-        ring = np.vstack([ring, ring[:1]])
+    ring = closed_ring(ring)
     x0 = ring[:-1, 0]
     y0 = ring[:-1, 1]
     x1 = ring[1:, 0]

@@ -8,7 +8,12 @@ cartesian product at scale; this module replaces it with the cell-bucketed
 plan (cover cells -> equi-join -> exact refine) that stays shuffle-bounded:
 
   candidate generation:  O(points + layer_cover_cells)  [equi-join shuffle]
-  refine:                O(candidate pairs)             [codegen'd filter]
+  refine:                O(candidate pairs)             [JVM Column filter]
+
+Every refine is a Column expression: haversine for the distance joins,
+and for point-in-polygon a higher-order-function ray cast over the edges
+each cover cell's latitude strip keeps, read from the layer's one cached
+cover frame. No Python runs per row.
 
 At 100 TB the equi-join on cell ids is an AQE-planned shuffle join whose
 key cardinality (#cells) is controllable via resolution; nothing ever
@@ -17,12 +22,13 @@ materializes |points| x |polygons|.
 
 from __future__ import annotations
 
-from collections import OrderedDict
+from collections import Counter, OrderedDict
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from geocore_spark.functions import tiling as tl
 from geocore_spark.functions.geodesy import haversine_km
@@ -175,44 +181,176 @@ def polygon_cover_cells(
     )
 
 
-_COVER_CACHE: OrderedDict[tuple, tuple] = OrderedDict()
+_RINGS_TYPE = (
+    "array<struct<part:int, hole:boolean, x0:array<double>, y0:array<double>, "
+    "x1:array<double>, y1:array<double>>>"
+)
 
 
-def _cover_cached(spark, polygons: DataFrame, res: int):
-    """Driver-side cover table + broadcast WKB map, cached per
-    (layer plan semantic hash, res).
+def _ring_edges(wkb: bytes) -> list[tuple]:
+    """``(part, hole, x0, y0, x1, y1)`` per ring of a WKB Polygon or
+    MultiPolygon, in WKB order (each part's shell, then its holes). An
+    unclosed ring is closed virtually, as :func:`pip.points_in_ring` does."""
+    out = []
+    for part, rings in enumerate(wkb_mod.decode(wkb)[1]):
+        for k, ring in enumerate(rings):
+            ring = pip_mod.closed_ring(ring)
+            out.append((part, k > 0, ring[:-1, 0], ring[:-1, 1], ring[1:, 0], ring[1:, 1]))
+    return out
 
-    Layers are reused across many joins in a session; without the cache
-    every call pays the collect + cover construction + broadcast again
-    (~1 s for a 24-polygon layer — pure fixed cost). semanticHash keys
-    the *plan*, so a layer read from the same source hits; sources whose
-    content changes under an identical plan must construct a fresh
-    DataFrame (normal for parquet reads — new snapshot, new path).
 
-    The key includes the SparkContext's applicationId so entries can never
-    outlive their session (a broadcast created on a stopped context is
-    unusable). Evicted entries UNPERSIST (not destroy) their broadcast:
-    unpersist frees the executor copies but leaves the driver value
-    rebroadcastable, so a still-pending DataFrame built from an earlier
-    join keeps working if it executes after eviction; destroy() would
-    fail those tasks with "Attempted to use Broadcast after destroy".
+def _strip_rings(edges: list[tuple], lo: float, hi: float) -> list[tuple]:
+    """The ring entries of one boundary cover row: per ring, only the edges
+    whose y-range meets the strip ``[lo, hi]``.
+
+    Exact for every point whose latitude lies in the strip: a dropped edge
+    has both ends above it or both below, so ``(y0 > y) != (y1 > y)`` is
+    false and it never adds a crossing. A ring left with no edges has no
+    crossing there, so it is dropped: a hole subtracts nothing and a shell
+    rules out its whole part, holes included. Every kept ring has at least
+    one edge.
+    """
+    out, shell_kept = [], False
+    for part, hole, x0, y0, x1, y1 in edges:
+        keep = (np.maximum(y0, y1) >= lo) & (np.minimum(y0, y1) <= hi)
+        if not hole:
+            shell_kept = bool(keep.any())
+        if shell_kept and keep.any():
+            out.append((
+                part, hole,
+                x0[keep].tolist(), y0[keep].tolist(), x1[keep].tolist(), y1[keep].tolist(),
+            ))
+    return out
+
+
+def _strip_bounds(iy: int, res: int) -> tuple[float, float]:
+    """Latitude strip ``[lo, hi]`` holding every point that encodes to row
+    ``iy`` at ``res``. The row is ``[cy, cy + e)`` widened by a margin,
+    because :func:`tl.cell_iy` rounds ``(lat + 90) / e``: a latitude up to
+    ~4e-14 deg outside the row can encode into it, at any res. The grid's
+    first and last rows are open-ended, since ``cell_iy`` clamps
+    latitudes beyond the poles into them."""
+    e = tl.edge_deg(res)
+    cy = -90.0 + iy * e
+    margin = max(e * 1e-9, 1e-12)
+    lo = -np.inf if iy == 0 else cy - margin
+    hi = np.inf if iy == tl.nrows(res) - 1 else cy + e + margin
+    return lo, hi
+
+
+def _cover_frame(spark, polygons: DataFrame, res: int) -> tuple[DataFrame, list[int]]:
+    """Build and persist the cover frame of a polygon layer, and the
+    distinct cover resolutions.
+
+    One row per cover cell: ``res, cell, polygon_id, full, rings`` and the
+    layer's columns other than ``polygon_id`` and ``wkb``. ``rings`` is
+    NULL on full rows; on a boundary row it holds the polygon's rings cut
+    to the cell's latitude strip (:func:`_strip_rings`). The layer is read
+    once, by one collect; the first join that uses the frame fills it.
+    """
+    rows = polygons.collect()
+    ids = [r["polygon_id"] for r in rows]
+    dups = sorted(k for k, n in Counter(ids).items() if n > 1)
+    if dups:
+        raise ValueError(f"polygon layer has duplicate polygon_id values: {dups}")
+    blobs = [bytes(r["wkb"]) for r in rows]
+    cover = polygon_cover_cells(pd.DataFrame({"polygon_id": ids, "wkb": blobs}), res)
+    attrs = [f for f in polygons.schema.fields if f.name not in ("polygon_id", "wkb")]
+    values = {pid: tuple(r[f.name] for f in attrs) for pid, r in zip(ids, rows)}
+    edges = {pid: _ring_edges(blob) for pid, blob in zip(ids, blobs)}
+    strips = {}  # (polygon_id, iy) -> ring entries, shared by the cells of a row
+    out = []
+    for cell, pid, full, r in cover[["cell", "polygon_id", "full", "res"]].itertuples(index=False):
+        pid, full, r = int(pid), bool(full), int(r)
+        rings = None
+        if not full:
+            iy = int(cell.rsplit(":", 1)[1])
+            if (pid, iy) not in strips:
+                strips[(pid, iy)] = _strip_rings(edges[pid], *_strip_bounds(iy, r))
+            rings = strips[(pid, iy)]
+        out.append((r, cell, pid, full, rings, *values[pid]))
+    schema = T.StructType(
+        [
+            T.StructField("res", T.IntegerType()),
+            T.StructField("cell", T.StringType()),
+            T.StructField("polygon_id", T.LongType()),
+            T.StructField("full", T.BooleanType()),
+            T.StructField("rings", T.DataType.fromDDL(_RINGS_TYPE)),
+            *attrs,
+        ]
+    )
+    frame = spark.createDataFrame(out, schema, verifySchema=False).persist()
+    return frame, sorted(int(r) for r in cover["res"].unique())
+
+
+_COVER_CACHE: OrderedDict[tuple, tuple[DataFrame, list[int]]] = OrderedDict()
+_COVER_CACHE_SIZE = 16
+
+
+def _cover_cached(spark, polygons: DataFrame, res: int) -> tuple[DataFrame, list[int]]:
+    """:func:`_cover_frame` of a layer, cached per (session, layer plan
+    semantic hash, res), least recently used first out.
+
+    Layers are reused across many joins in a session; the cache builds a
+    layer's cover, its ring strips and its attribute columns once, in one
+    persisted frame, and later calls neither collect nor scan the layer
+    again. semanticHash keys the *plan*, so a layer read from the same
+    source hits; sources whose content changes under an identical plan
+    must construct a fresh DataFrame (normal for parquet reads — new
+    snapshot, new path). A layer with a duplicated ``polygon_id`` raises
+    ``ValueError``: its hits would be ambiguous.
+
+    The key includes the SparkContext's applicationId, so an entry never
+    outlives its session. An evicted entry's frame is unpersisted, which
+    only drops its cached blocks: a join frame built from it earlier
+    still runs, and recomputes the cover rows from the frame's plan.
     """
     key = (spark.sparkContext.applicationId, polygons.semanticHash(), res)
     hit = _COVER_CACHE.get(key)
     if hit is not None:
+        _COVER_CACHE.move_to_end(key)
         return hit
-    poly_pdf = polygons.select("polygon_id", "wkb").toPandas()
-    cover = polygon_cover_cells(poly_pdf, res)
-    wkb_by_id = {int(r["polygon_id"]): bytes(r["wkb"]) for _, r in poly_pdf.iterrows()}
-    bc = spark.sparkContext.broadcast(wkb_by_id)
-    if len(_COVER_CACHE) >= 16:
-        _, (_, old_bc) = _COVER_CACHE.popitem(last=False)
+    entry = _cover_frame(spark, polygons, res)
+    if len(_COVER_CACHE) >= _COVER_CACHE_SIZE:
+        _, (old, _) = _COVER_CACHE.popitem(last=False)
         try:
-            old_bc.unpersist(blocking=False)
+            old.unpersist(blocking=False)
         except Exception:
             pass  # its session may already be gone
-    _COVER_CACHE[key] = (cover, bc)
-    return cover, bc
+    _COVER_CACHE[key] = entry
+    return entry
+
+
+def _inside(rings: Column, x: Column, y: Column) -> Column:
+    """Column twin of :func:`pip.points_in_wkb` over a cover row's strip
+    rings: true when (x, y) is inside the polygon.
+
+    Per ring, an even-odd ray cast over its kept edges, with the same
+    operations in the same order as :func:`pip.points_in_ring`; JVM and
+    numpy doubles are both IEEE 754, so the two agree bit for bit. The
+    division sits under ``when(crosses, …)``: a crossing edge is never
+    horizontal, and ANSI mode raises DIVIDE_BY_ZERO on ``1.0d / 0.0d``.
+    The rings fold in one pass, in WKB order: a shell opens a part, each
+    hole removes itself from it, and the result is the OR over parts.
+    """
+
+    def ring_in(r: Column) -> Column:
+        def step(acc: Column, i: Column) -> Column:
+            x0, y0, x1, y1 = r["x0"][i], r["y0"][i], r["x1"][i], r["y1"][i]
+            crosses = (y0 > y) != (y1 > y)
+            xint = x0 + (y - y0) * (x1 - x0) / (y1 - y0)
+            return acc != F.when(crosses, x < xint).otherwise(F.lit(False))
+
+        return F.aggregate(F.sequence(F.lit(0), F.size(r["x0"]) - 1), F.lit(False), step)
+
+    def fold(acc: Column, r: Column) -> Column:
+        v = ring_in(r)
+        hole = F.struct(acc["done"].alias("done"), (acc["part"] & ~v).alias("part"))
+        shell = F.struct((acc["done"] | acc["part"]).alias("done"), v.alias("part"))
+        return F.when(r["hole"], hole).otherwise(shell)
+
+    start = F.struct(F.lit(False).alias("done"), F.lit(False).alias("part"))
+    return F.aggregate(rings, start, fold, lambda acc: acc["done"] | acc["part"])
 
 
 def pip_polygon_join(
@@ -222,46 +360,31 @@ def pip_polygon_join(
     lon: str = "lon",
     res: int = tl.DEFAULT_RES,
 ) -> DataFrame:
-    """Exact point-in-polygon join via cell-cover + vectorized refine.
+    """Exact point-in-polygon join via cell cover + JVM ray-cast refine.
+
+    ``polygons`` has ``polygon_id`` (unique), ``wkb`` and any attribute
+    columns. Output: ``polygon_id``, the point columns, then the layer's
+    attribute columns, one row per (point, containing polygon).
 
     Plan: points gain a cell id (pure Column arithmetic) -> equi-join with
-    the broadcast cover table -> rows in ``full`` cells pass immediately;
-    boundary-cell rows run the ray-cast refine inside an Arrow-batched
-    pandas UDF against the (broadcast) WKB blobs. Replaces the reference's
-    implicit cartesian ST_DWITHIN pattern (build.py:170-176) and its
-    row-at-a-time shapely apply (data_pipeline.py:45).
+    the layer's broadcast cover frame (:func:`_cover_cached`) -> rows in
+    ``full`` cells pass at once; boundary rows run :func:`_inside`, a
+    higher-order-function ray cast over the edges of the row's latitude
+    strip, so a candidate costs the edges in its strip, not the ring size.
+    No Python runs per row. Replaces the reference's implicit cartesian
+    ST_DWITHIN pattern (build.py:170-176) and its row-at-a-time shapely
+    apply (data_pipeline.py:45).
     """
-    spark = points.sparkSession
-    cover, bc = _cover_cached(spark, polygons, res)
-
-    @F.pandas_udf("boolean")
-    def _refine(lat_s: pd.Series, lon_s: pd.Series, pid_s: pd.Series) -> pd.Series:
-        lats = lat_s.to_numpy(float)
-        lons = lon_s.to_numpy(float)
-        pids = pid_s.to_numpy(np.int64)
-        out = np.zeros(len(lats), dtype=bool)
-        table = bc.value
-        for pid in np.unique(pids):
-            m = pids == pid
-            out[m] = pip_mod.points_in_wkb(lons[m], lats[m], table[int(pid)])
-        return pd.Series(out)
+    cover_df, resolutions = _cover_cached(points.sparkSession, polygons, res)
+    cover_df = F.broadcast(cover_df)
 
     # ONE equi-join for every cover resolution at once: each polygon
     # covers at exactly one res, so points explode to their cell id at
     # each distinct cover res (a handful) and join the broadcast cover on
     # (res, cell) — one scan of the points, one broadcast probe, instead
-    # of a join + union pair per resolution. Full-interior cells pass
-    # immediately; the exact refine runs in a single Arrow stage over the
-    # (small) candidate set. At 100 TB the explode factor is the distinct
-    # cover-res count (<= 4), applied before a broadcast join — no
-    # shuffle of the big side.
-    resolutions = sorted(int(r) for r in cover["res"].unique())
-    cover_df = F.broadcast(
-        spark.createDataFrame(
-            cover[["res", "cell", "polygon_id", "full"]],
-            "res int, cell string, polygon_id long, full boolean",
-        )
-    )
+    # of a join + union pair per resolution. At 100 TB the explode factor
+    # is the distinct cover-res count (<= 4), applied before a broadcast
+    # join — no shuffle of the big side.
     pts = points.withColumn(
         "__rc",
         F.explode(
@@ -280,11 +403,15 @@ def pip_polygon_join(
         cover_df,
         (pts["__rc.res"] == cover_df["res"]) & (pts["__rc.cell"] == cover_df["cell"]),
         "inner",
-    ).drop(cover_df["res"]).drop(cover_df["cell"])
-    hits = cand.filter(
-        F.col("full") | _refine(F.col(lat), F.col(lon), F.col("polygon_id"))
-    ).drop("__rc", "full")
-    return hits.join(F.broadcast(polygons.drop("wkb")), "polygon_id", "left")
+    )
+    attrs = [c for c in polygons.columns if c not in ("polygon_id", "wkb")]
+    return cand.filter(
+        cover_df["full"] | _inside(cover_df["rings"], pts[lon], pts[lat])
+    ).select(
+        cover_df["polygon_id"],
+        *[pts[c] for c in points.columns],
+        *[cover_df[c] for c in attrs],
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -89,10 +89,30 @@ def test_dedup_minhash_drops_signatures_before_shuffle(spark, sf_dir):
     assert "CartesianProduct" not in p and "NestedLoop" not in p
 
 
-def test_pip_polygon_join_broadcasts_cover(spark, sf_dir):
+def test_pip_rect_join_broadcasts_rects(spark, sf_dir):
     p = _formatted(em.q_pip_rect_join(spark, sf_dir))
     assert "CartesianProduct" not in p
     assert "BroadcastHashJoin" in p or "BroadcastExchange" in p
+
+
+def test_pip_polygon_join_refines_in_the_jvm(spark):
+    """The polygon join probes the broadcast cover frame with one hash
+    join and refines boundary candidates with a Column expression: the
+    executed plan has no Python evaluation node."""
+    from geocore_spark.operators import spatial_join
+    from geocore_spark.sources import polygons as pgn
+
+    pts = spark.createDataFrame(
+        [(i, -50.0 + i * 0.37, -170.0 + i * 1.3) for i in range(260)],
+        "id long, lat double, lon double",
+    )
+    out = spatial_join.pip_polygon_join(pts, pgn.polygon_layer(spark, 24))
+    out.collect()
+    p = _formatted(out)
+    assert "isFinalPlan=true" in p
+    assert "BroadcastHashJoin" in p and "CartesianProduct" not in p
+    for node in ("ArrowEvalPython", "BatchEvalPython", "PythonUDF"):
+        assert node not in p, node
 
 
 def test_embedding_topk_broadcast_no_shuffle_of_corpus(spark, sf_dir):

@@ -1,13 +1,17 @@
 """Spatial operators vs brute-force ground truth on synthetic points."""
 
+import struct
+
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
 from geocore_spark.functions import tiling as tl
 from geocore_spark.functions.geodesy import EARTH_RADIUS_KM, haversine_km
 from geocore_spark.geometry import pip as pip_mod
+from geocore_spark.geometry import wkb as wkb_mod
 from geocore_spark.operators import knn, skew, spatial_join, zonal
 from geocore_spark.plans.rewrite import rewrite_dwithin
 from geocore_spark.sources import polygons as pgn
@@ -113,7 +117,6 @@ def test_pip_slit_polygon_not_marked_full(spark):
     interior without touching any corner: the cover must NOT mark that
     cell full, and points inside the slit must NOT join (the corner-only
     full test silently emitted them)."""
-    from geocore_spark.geometry import wkb as wkb_mod
     from geocore_spark.operators.spatial_join import (
         pip_polygon_join,
         polygon_cover_cells,
@@ -149,6 +152,182 @@ def test_pip_slit_polygon_not_marked_full(spark):
     polys = spark.createDataFrame(pdf.assign(wkb=[bytearray(wkb)]))
     got = {r["id"] for r in pip_polygon_join(pts, polys, res=res).collect()}
     assert got == {1}
+
+
+def _multipolygon(*parts) -> bytes:
+    return struct.pack("<BII", 1, 6, len(parts)) + b"".join(
+        wkb_mod.encode_polygon(rings) for rings in parts
+    )
+
+
+def _unclosed_polygon(ring) -> bytes:
+    ring = np.asarray(ring, dtype="<f8")
+    return struct.pack("<BIII", 1, 3, 1, len(ring)) + ring.tobytes()
+
+
+def _wavy_ring(clon, clat, nv):
+    ang = np.linspace(0, 2 * np.pi, nv, endpoint=False)
+    rad = 1.0 + 0.25 * np.sin(17 * ang)
+    return np.column_stack([clon + rad * np.cos(ang), clat + rad * np.sin(ang)])
+
+
+def _square(x0, y0, x1, y1):
+    return np.array([(x0, y0), (x1, y0), (x1, y1), (x0, y1)])
+
+
+_HARD_LAYERS = {
+    # the two holes overlap: a point in both is still outside
+    "holes": [
+        wkb_mod.encode_polygon(
+            [
+                _square(10, 40, 13, 43),
+                [(11.5, 40.6), (12.4, 41.5), (11.5, 42.4), (10.6, 41.5)],
+                _square(11.8, 41.2, 12.8, 42.6),
+            ]
+        )
+    ],
+    # the parts overlap, and the second covers part of the first one's hole
+    "multipolygon_overlap": [
+        _multipolygon(
+            [_square(10, 40, 12.5, 42.5), _square(10.5, 40.5, 11.5, 41.5)],
+            [[(11.0, 41.0), (14.0, 41.2), (12.0, 43.5)]],
+        )
+    ],
+    "unclosed_ring": [
+        _unclosed_polygon([(10.0, 40.0), (13.0, 40.5), (13.5, 42.5), (11.5, 43.5), (10.2, 42.0)])
+    ],
+    # horizontal edges: an unguarded divide raises DIVIDE_BY_ZERO under ANSI
+    "axis_aligned_rects": [
+        wkb_mod.encode_polygon([_square(10, 40, 11, 41)]),
+        wkb_mod.encode_polygon([_square(10.5, 40.5, 12.75, 41.25)]),
+        wkb_mod.encode_polygon([_square(11.0, 41.0, 11.5, 43.0)]),
+    ],
+    "ring_2000_vertices": [wkb_mod.encode_polygon([_wavy_ring(12.0, 42.0, 2000)])],
+}
+
+
+def _hard_points(blobs, res, n=3000, seed=0):
+    """Random points over the layer's bbox, every vertex, every horizontal
+    edge's midpoint, and points on the cover's cell edges (both axes)."""
+    rng = np.random.default_rng(seed)
+    boxes = np.array([wkb_mod.polygon_bbox(b) for b in blobs])
+    x0, y0 = boxes[:, 0].min() - 0.2, boxes[:, 1].min() - 0.2
+    x1, y1 = boxes[:, 2].max() + 0.2, boxes[:, 3].max() + 0.2
+    xs, ys = [rng.uniform(x0, x1, n)], [rng.uniform(y0, y1, n)]
+    for b in blobs:
+        for rings in wkb_mod.decode(b)[1]:
+            for ring in rings:
+                xs.append(ring[:, 0])
+                ys.append(ring[:, 1])
+                flat = ring[:-1, 1] == ring[1:, 1]
+                xs.append((ring[:-1, 0][flat] + ring[1:, 0][flat]) / 2)
+                ys.append(ring[:-1, 1][flat])
+    pdf = pd.DataFrame({"polygon_id": range(len(blobs)), "wkb": blobs})
+    for r in spatial_join.polygon_cover_cells(pdf, res)["res"].unique():
+        e = tl.edge_deg(int(r))
+        lat_edges = -90.0 + e * np.arange(np.floor((y0 + 90) / e), np.ceil((y1 + 90) / e) + 1)
+        lon_edges = -180.0 + e * np.arange(np.floor((x0 + 180) / e), np.ceil((x1 + 180) / e) + 1)
+        k = min(len(lat_edges) * 20, 2000)
+        xs += [rng.uniform(x0, x1, k), rng.choice(lon_edges, k)]
+        ys += [rng.choice(lat_edges, k), rng.uniform(y0, y1, k)]
+    return np.concatenate(xs), np.concatenate(ys)
+
+
+def _assert_pip_join_matches_wkb(spark, blobs, lon, lat, res=tl.DEFAULT_RES):
+    pts = spark.createDataFrame(
+        pd.DataFrame({"id": np.arange(len(lon)), "lat": lat, "lon": lon})
+    )
+    polys = spark.createDataFrame(
+        [(i, bytearray(b)) for i, b in enumerate(blobs)], "polygon_id long, wkb binary"
+    )
+    got = sorted(
+        (r["id"], r["polygon_id"])
+        for r in spatial_join.pip_polygon_join(pts, polys, res=res).collect()
+    )
+    want = sorted(
+        (int(i), pid)
+        for pid, b in enumerate(blobs)
+        for i in np.flatnonzero(pip_mod.points_in_wkb(lon, lat, b))
+    )
+    assert got == want
+    assert 0 < len(want) < len(lon) * len(blobs)
+
+
+@pytest.mark.parametrize("name", sorted(_HARD_LAYERS))
+def test_pip_join_matches_points_in_wkb_on_hard_geometries(spark, name):
+    blobs = _HARD_LAYERS[name]
+    lon, lat = _hard_points(blobs, tl.DEFAULT_RES)
+    _assert_pip_join_matches_wkb(spark, blobs, lon, lat)
+
+
+def test_pip_join_strip_margin_keeps_edges_just_below_the_cell(spark):
+    """At res 3 (edge 22.5 deg) lat -1e-15 encodes to the row that starts
+    at 0.0, because -1e-15 + 90 rounds to 90. The edge (10, -2e-15) ->
+    (10, -5e-16) lies wholly below that row, yet the ray from
+    (5, -1e-15) crosses it: the row's strip must keep it."""
+    ring = [(0.0, -2e-15), (10.0, -2e-15), (10.0, -5e-16), (20.0, -5e-16),
+            (20.0, 11.25), (0.0, 11.25)]
+    blobs = [wkb_mod.encode_polygon([np.array(ring)])]
+    lat = np.array([-1e-15, -1e-15, -5e-16, 0.0, 0.0, 5.0, -3e-15])
+    lon = np.array([5.0, 15.0, 15.0, 5.0, 15.0, 5.0, 5.0])
+    assert pip_mod.points_in_wkb(lon[:1], lat[:1], blobs[0])[0]
+    _assert_pip_join_matches_wkb(spark, blobs, lon, lat, res=3)
+
+
+def test_pip_join_rejects_duplicate_polygon_ids(spark):
+    """Two polygons sharing an id would label each hit with both."""
+    pts = spark.createDataFrame([(0, 1.0, 1.0), (1, 1.0, 11.0)], "id long, lat double, lon double")
+    polys = spark.createDataFrame(
+        [(1, bytearray(wkb_mod.encode_polygon([_square(0, 0, 2, 2)]))),
+         (1, bytearray(wkb_mod.encode_polygon([_square(10, 0, 12, 2)]))),
+         (2, bytearray(wkb_mod.encode_polygon([_square(20, 0, 22, 2)])))],
+        "polygon_id long, wkb binary",
+    )
+    with pytest.raises(ValueError, match=r"duplicate polygon_id values: \[1\]"):
+        spatial_join.pip_polygon_join(pts, polys).collect()
+
+
+def test_pip_join_evaluates_the_layer_once(spark):
+    # one layer column comes out of a Python UDF that counts its calls:
+    # two joins and their collects must read the layer once
+    calls = spark.sparkContext.accumulator(0)
+
+    @F.udf("double")
+    def counted(v):
+        calls.add(1)
+        return v
+
+    base = pgn.polygon_layer(spark, 24)
+    layer = base.select("polygon_id", "wkb", counted("attr").alias("attr"))
+    pts, _, _ = _points_df(spark, 500, seed=6)
+    runs = [spatial_join.pip_polygon_join(pts, layer).collect() for _ in range(2)]
+    assert runs[0] and sorted(runs[0]) == sorted(runs[1])
+    assert calls.value == 24
+
+
+def test_pip_cover_cache_evicts_and_unpersists(spark):
+    """A 17th layer evicts the least recently used cover frame, which is
+    unpersisted; a join built from it before the eviction still runs."""
+    pts, lat, lon = _points_df(spark, 500, seed=6)
+    base = pgn.polygon_layer(spark, 24)
+    first, _ = spatial_join._cover_cached(spark, base, tl.DEFAULT_RES)
+    assert first.storageLevel != StorageLevel.NONE
+    early = spatial_join.pip_polygon_join(pts, base)
+    assert early.count()  # fills the cached frame
+    square = bytearray(wkb_mod.encode_polygon([_square(0, 0, 1, 1)]))
+    for i in range(16):  # one-polygon layers, distinct plans
+        layer = spark.range(1).select(
+            F.col("id").alias("polygon_id"), F.lit(square).alias("wkb"), F.lit(i).alias("gen")
+        )
+        spatial_join._cover_cached(spark, layer, tl.DEFAULT_RES)
+    assert first.storageLevel == StorageLevel.NONE
+    rows = early.collect()
+    want = set()
+    for pr in base.select("polygon_id", "wkb").collect():
+        inside = pip_mod.points_in_wkb(lon, lat, bytes(pr["wkb"]))
+        want |= {(int(i), pr["polygon_id"]) for i in np.flatnonzero(inside)}
+    assert {(r["id"], r["polygon_id"]) for r in rows} == want
+    assert want
 
 
 def test_knn_exact_at_high_latitude(spark):
