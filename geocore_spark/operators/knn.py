@@ -105,14 +105,16 @@ def knn_join(
         remaining = remaining.join(done_ids, query_id, "left_anti")
         ring *= 2
         if not remaining.take(1):
-            remaining = None
             break
-    if remaining is not None and remaining.take(1):
-        results.append(
-            _brute_force_stragglers(
-                remaining, corpus, k, query_id, corpus_id, lat, lon, exclude_self
+    else:
+        # the rounds ran out: the last one's take(1) found stragglers,
+        # so only a call with no rounds has to look
+        if max_expansions or remaining.take(1):
+            results.append(
+                _brute_force_stragglers(
+                    remaining, corpus, k, query_id, corpus_id, lat, lon, exclude_self
+                )
             )
-        )
     out = results[0]
     for r in results[1:]:
         out = out.unionByName(r)

@@ -162,14 +162,20 @@ def polygon_cover_cells(
         # corner-inside it prunes provably-disjoint cells from the
         # candidate join (bbox covers of rotated polygons are mostly such
         # corners — that part cuts refine work, not correctness).
+        # Both tests use the cell widened by the encode margin: a part
+        # lying wholly within it outside the cell still holds points that
+        # encode into the cell. Widening only adds boundary cells and
+        # demotes full flags, so the join stays exact.
+        m = _encode_margin(e)
+        bx, by, be = cx - m, cy - m, e + 2 * m
         boundary = np.zeros(len(cells), dtype=bool)
         for rings in polys:
             for ring in rings:
                 vx, vy = ring[:-1, 0], ring[:-1, 1]
-                in_cell_x = (vx[None, :] >= cx[:, None]) & (vx[None, :] < (cx + e)[:, None])
-                in_cell_y = (vy[None, :] >= cy[:, None]) & (vy[None, :] < (cy + e)[:, None])
+                in_cell_x = (vx[None, :] >= bx[:, None]) & (vx[None, :] < (bx + be)[:, None])
+                in_cell_y = (vy[None, :] >= by[:, None]) & (vy[None, :] < (by + be)[:, None])
                 boundary |= (in_cell_x & in_cell_y).any(axis=1)
-                boundary |= _segments_cross_cells(ring, cx, cy, e, skip=boundary)
+                boundary |= _segments_cross_cells(ring, bx, by, be, skip=boundary)
         all_in &= ~boundary
         keep = any_corner | boundary
         out_cell.extend(np.asarray(cells, dtype=object)[keep])
@@ -223,16 +229,24 @@ def _strip_rings(edges: list[tuple], lo: float, hi: float) -> list[tuple]:
     return out
 
 
+def _encode_margin(e: float) -> float:
+    """How far outside a cell of edge ``e`` deg a point can lie and still
+    encode into it. :func:`tl.cell_iy` and :func:`tl.cell_ix` round
+    ``(lat + 90) / e`` and ``(lon + 180) / e``, which moves a coordinate
+    up to ~4e-14 deg across a cell edge, at any res; the margin is far
+    wider than that."""
+    return max(e * 1e-9, 1e-12)
+
+
 def _strip_bounds(iy: int, res: int) -> tuple[float, float]:
     """Latitude strip ``[lo, hi]`` holding every point that encodes to row
-    ``iy`` at ``res``. The row is ``[cy, cy + e)`` widened by a margin,
-    because :func:`tl.cell_iy` rounds ``(lat + 90) / e``: a latitude up to
-    ~4e-14 deg outside the row can encode into it, at any res. The grid's
-    first and last rows are open-ended, since ``cell_iy`` clamps
-    latitudes beyond the poles into them."""
+    ``iy`` at ``res``: the row ``[cy, cy + e)`` widened by
+    :func:`_encode_margin`. The grid's first and last rows are
+    open-ended, since ``cell_iy`` clamps latitudes beyond the poles into
+    them."""
     e = tl.edge_deg(res)
     cy = -90.0 + iy * e
-    margin = max(e * 1e-9, 1e-12)
+    margin = _encode_margin(e)
     lo = -np.inf if iy == 0 else cy - margin
     hi = np.inf if iy == tl.nrows(res) - 1 else cy + e + margin
     return lo, hi

@@ -267,10 +267,17 @@ def test_pip_join_strip_margin_keeps_edges_just_below_the_cell(spark):
     (5, -1e-15) crosses it: the row's strip must keep it."""
     ring = [(0.0, -2e-15), (10.0, -2e-15), (10.0, -5e-16), (20.0, -5e-16),
             (20.0, 11.25), (0.0, 11.25)]
-    blobs = [wkb_mod.encode_polygon([np.array(ring)])]
-    lat = np.array([-1e-15, -1e-15, -5e-16, 0.0, 0.0, 5.0, -3e-15])
-    lon = np.array([5.0, 15.0, 15.0, 5.0, 15.0, 5.0, 5.0])
+    # parts lying wholly in that sliver: a rectangle below the row edge at
+    # lat 0 and its twin left of the column edge at lon 0. Each still
+    # needs a cover cell in the row (column) its points encode to.
+    below_row = _square(4.0, -2e-15, 6.0, -5e-16)
+    left_of_col = _square(-2e-15, 4.0, -5e-16, 6.0)
+    blobs = [wkb_mod.encode_polygon([np.array(r)]) for r in (ring, below_row, left_of_col)]
+    lat = np.array([-1e-15, -1e-15, -5e-16, 0.0, 0.0, 5.0, -3e-15, 5.0, 5.0])
+    lon = np.array([5.0, 15.0, 15.0, 5.0, 15.0, 5.0, 5.0, -1e-15, 1.0])
     assert pip_mod.points_in_wkb(lon[:1], lat[:1], blobs[0])[0]
+    assert pip_mod.points_in_wkb(lon[:1], lat[:1], blobs[1])[0]
+    assert pip_mod.points_in_wkb(lon[7:8], lat[7:8], blobs[2])[0]
     _assert_pip_join_matches_wkb(spark, blobs, lon, lat, res=3)
 
 
@@ -444,6 +451,24 @@ def test_knn_brute_force_fallback_exact(spark):
     for i in got:
         order = np.lexsort((np.arange(len(lat)), dm[i]))[:4]
         assert [nid for _, nid in sorted(got[i])] == [int(j) for j in order], i
+
+
+def test_knn_checks_for_stragglers_once_per_round(spark, monkeypatch):
+    """A call whose rounds all leave stragglers asks once per round
+    whether any remain; the brute-force fallback reuses the last answer."""
+    pts, _, _ = _points_df(spark, 60, seed=23)
+    calls = []
+    take = type(pts).take
+
+    def counted_take(self, n):
+        calls.append(n)
+        return take(self, n)
+
+    monkeypatch.setattr(type(pts), "take", counted_take)
+    # res 9 cells are ~0.35 deg: no ring round finds 3 of 60 global points
+    out = knn.knn_join(pts, pts, k=3, res=9, k_ring=1, max_expansions=2).collect()
+    assert calls == [1, 1]
+    assert len(out) == 60 * 3
 
 
 def test_knn_fallback_straggler_bound_raises(spark):
