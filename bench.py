@@ -3,7 +3,7 @@
 Prints ONE JSON line:
   {"metric": "...", "value": <total sec>, "unit": "sec",
    "queries": {name: sec, ...}, "sf": <sf>, "pages_per_sec": ...,
-   "parallelism": N}
+   "parallelism": N, "steal_share": <host steal / all CPU jiffies>}
 
 The flagship throughput number (``pages_per_sec``) is the geotag ->
 tile -> aggregate pipeline over a synthetic pages table sized ~20x the
@@ -30,6 +30,7 @@ from geocore_spark.operators import dedup, knn, spatial_join, zonal
 from geocore_spark.session import get_spark
 from geocore_spark.sources import pages as pg
 from geocore_spark.sources import polygons as pgn
+from tools.harness import StealWatch
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -157,6 +158,9 @@ def main():
     except ValueError:
         sf_num = 0.0
     n_pages = max(int(sf_num * 20_000_000), 100_000)
+    # host steal over the whole run: compare only runs with the same
+    # parallelism and a low steal share
+    steal = StealWatch()
     spark = get_spark("geocore-bench", master=f"local[{CPUS}]", shuffle_partitions=CPUS)
     # warm the JVM/codegen paths AND the Arrow python-worker pool so
     # per-query times measure the plan, not process spin-up
@@ -204,6 +208,7 @@ def main():
                 "n_pages": n_pages,
                 "pages_per_sec": pages_per_sec,
                 "parallelism": CPUS,
+                "steal_share": round(steal.share(), 4),
             }
         )
     )

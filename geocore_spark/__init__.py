@@ -14,7 +14,7 @@ Layout
   kNN, zonal sampling, dedup, similarity search, temporal, skew handling
 - ``sources/``    deterministic synthetic generators + parquet IO
 - ``geometry/``   WKB codec and vectorized point-in-polygon
-- ``plans/``      lineage metrics and checkpoint/resume manifests
+- ``plans/``      stage metrics log and checkpoint/resume manifests
 """
 
 from geocore_spark.session import get_spark  # noqa: F401

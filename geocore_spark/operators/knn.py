@@ -115,6 +115,14 @@ def knn_join(
                     remaining, corpus, k, query_id, corpus_id, lat, lon, exclude_self
                 )
             )
+    if not results:
+        # no round ran and no query was left over: zero rows, same columns
+        return queries.limit(0).select(
+            F.col(query_id),
+            F.lit(None).cast(corpus.schema[corpus_id].dataType).alias("neighbor_id"),
+            F.lit(None).cast("double").alias("dist_km"),
+            F.lit(None).cast("int").alias("rank"),
+        )
     out = results[0]
     for r in results[1:]:
         out = out.unionByName(r)

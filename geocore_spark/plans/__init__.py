@@ -1,1 +1,1 @@
-"""Pipeline plumbing: per-partition lineage metrics, checkpoint/resume."""
+"""Pipeline plumbing: per-run stage metrics log, checkpoint/resume."""

@@ -1,15 +1,8 @@
-"""Per-partition lineage + row-count metrics (north rule).
+"""Per-run stage metrics log for the jobs' ``metrics.json``.
 
-Every stage can be wrapped with :func:`track`: an accumulator-backed
-``mapInPandas`` pass-through that records (stage, partition_id, rows) for
-each Arrow batch — the Spark-native analogue of the reference's post-load
-row-count verification (/root/reference/data_pipeline.py:95-98) and its
-BadTable count checks, but collected *during* the run with no extra scan.
-
-Costs one Arrow round trip for the wrapped stage, so it is opt-in per
-stage boundary (wrap materialization points, not every transform). The
-alternative zero-cost path is :func:`observed` (Spark's Observation API —
-pure JVM metrics, no Arrow) for row counts without partition breakdown.
+Row counts come from :class:`~geocore_spark.plans.checkpoint.StageCheckpoint`,
+which observes them on each stage's own write (Spark's Observation API),
+so no stage is scanned twice.
 """
 
 from __future__ import annotations
@@ -17,9 +10,6 @@ from __future__ import annotations
 import json
 import time
 from dataclasses import dataclass, field
-
-from pyspark.sql import DataFrame, Observation
-from pyspark.sql import functions as F
 
 
 @dataclass
@@ -33,60 +23,3 @@ class LineageLog:
 
     def to_json(self) -> str:
         return json.dumps({"stages": self.stages}, indent=2)
-
-
-def track(df: DataFrame, stage: str, log: LineageLog | None = None) -> DataFrame:
-    """Pass-through that counts rows per partition into an accumulator.
-
-    The accumulator value is a dict {partition_id: rows}; read it after an
-    action via the returned DataFrame's ``_lineage_acc`` attribute.
-    """
-    sc = df.sparkSession.sparkContext
-    acc = sc.accumulator({}, _DictParam())
-
-    schema = df.schema
-
-    def _count(iterator):
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        # add ONCE per completed task, not per Arrow batch: accumulator
-        # updates in transformations are not exactly-once under task
-        # retry/speculation, so per-batch adds double-count a partition
-        # whose task ran twice. One total per attempt + max-merge in
-        # _DictParam makes duplicate attempts idempotent (both attempts
-        # stream the same partition, so their totals are equal).
-        n = 0
-        for pdf in iterator:
-            n += len(pdf)
-            yield pdf
-        acc.add({pid: n})
-
-    out = df.mapInPandas(_count, schema)
-    out._lineage_acc = acc  # type: ignore[attr-defined]
-    if log is not None:
-        log.record(stage, kind="tracked")
-    return out
-
-
-class _DictParam:
-    """AccumulatorParam merging {partition: count} dicts.
-
-    Merge is MAX per partition, not sum: each task contributes exactly
-    one {pid: total} update, and a retried or speculative attempt of the
-    same partition reports the same total — max collapses duplicates,
-    sum would double-count."""
-
-    def zero(self, value):
-        return {}
-
-    def addInPlace(self, v1, v2):
-        for k, n in v2.items():
-            v1[k] = max(v1.get(k, 0), n)
-        return v1
-
-
-def observed(df: DataFrame, stage: str) -> tuple[DataFrame, Observation]:
-    """Zero-copy row/byte metrics via the Observation API (JVM-side)."""
-    obs = Observation(stage)
-    return df.observe(obs, F.count(F.lit(1)).alias("rows")), obs

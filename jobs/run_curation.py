@@ -35,8 +35,9 @@ Stages (each a checkpointed snapshot; --resume skips committed stages):
   6. chunks      : overlapping passage chunking
   7. pack        : FFD sequence packing to the token budget
 
-Every stage logs per-partition row counts through the lineage tracker and
-appends to <checkpoint-root>/metrics.json. The final JSON line reports
+Every stage records its output row count (observed on the stage's own
+checkpoint write), wall seconds and resume flag in
+<checkpoint-root>/metrics.json. The final JSON line reports
 doc/chunk/pack counts and packing utilization.
 """
 
@@ -56,7 +57,7 @@ from geocore_spark.functions import cleaning as cl, text as tx
 from geocore_spark.operators import classify, decontam, dedup, lm, packing, sampling, selection
 from geocore_spark.operators import sketches as sk
 from geocore_spark.plans.checkpoint import StageCheckpoint
-from geocore_spark.plans.lineage import LineageLog, observed
+from geocore_spark.plans.lineage import LineageLog
 from geocore_spark.session import get_spark
 from geocore_spark.sources import documents as docsrc
 
@@ -199,12 +200,11 @@ def main(argv: list[str] | None = None) -> None:
         )
 
     def build_scrub():
-        d, _ = observed(corpus, "scrub_in")
         # scrub FIRST, then derive signals from the scrubbed column — in a
         # single select the signal exprs would resolve 'text' to the
         # pre-scrub input and disagree with the stored text
         return with_signals(
-            d.select(
+            corpus.select(
                 "doc_id", "source", cl.scrub_pii(F.col("text")).alias("text")
             )
         )

@@ -16,8 +16,9 @@ committed stages — SURVEY.md §7 stage 10):
   5. features  : per-cell assembly (counts, zonal raster sample, test flag)
   6. curate    : text dedup + quality gate -> per-cell lang distribution
 
-Every stage logs per-partition row counts through the lineage tracker and
-appends to <checkpoint-root>/metrics.json.
+Every stage records its output row count (observed on the stage's own
+checkpoint write), wall seconds and resume flag in
+<checkpoint-root>/metrics.json.
 """
 
 from __future__ import annotations
@@ -35,7 +36,7 @@ from pyspark.sql import functions as F
 from geocore_spark.functions import s2, text as tx, tiling as tl
 from geocore_spark.operators import assembly, spatial_join, zonal
 from geocore_spark.plans.checkpoint import StageCheckpoint
-from geocore_spark.plans.lineage import LineageLog, observed
+from geocore_spark.plans.lineage import LineageLog
 from geocore_spark.session import get_spark
 from geocore_spark.sources import pages as pg
 from geocore_spark.sources import polygons as pgn
@@ -128,10 +129,9 @@ def main(argv: list[str] | None = None) -> None:
     pages = staged("ingest", lambda: pg.pages(spark, args.pages))
 
     def build_geotag():
-        df, _ = observed(pages, "geotag_in")
         hs = F.decode("html", "UTF-8")
         g = tx.geo_latlon(hs)
-        return df.select(
+        return pages.select(
             "url",
             "warc_ts",
             "lang",
@@ -183,11 +183,8 @@ def main(argv: list[str] | None = None) -> None:
         # feature assembly above; same checkpoint/lineage treatment)
         from geocore_spark.operators import dedup as dd
 
-        docs, _ = observed(
-            geotagged.join(tiled.select("url", "cell"), "url", "inner").select(
-                F.xxhash64("url").alias("doc_id"), "url", "text", "lang", "cell"
-            ),
-            "curate_in",
+        docs = geotagged.join(tiled.select("url", "cell"), "url", "inner").select(
+            F.xxhash64("url").alias("doc_id"), "url", "text", "lang", "cell"
         )
         kept = dd.exact_dedup(docs, id_col="doc_id", text_col="text")
         quality = kept.withColumn("q", tx.quality_score(F.col("text"))).filter(

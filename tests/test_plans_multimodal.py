@@ -1,4 +1,4 @@
-"""Lineage tracking, checkpoint/resume, multimodal plumbing."""
+"""Checkpoint/resume and multimodal plumbing."""
 
 import os
 
@@ -6,28 +6,6 @@ from pyspark.sql import functions as F
 
 from geocore_spark.operators import multimodal as mm
 from geocore_spark.plans import checkpoint as ckpt
-from geocore_spark.plans import lineage
-
-
-def test_track_counts_rows_per_partition(spark):
-    df = spark.range(0, 1000, 1, 4)
-    tracked = lineage.track(df.select(F.col("id").cast("long")), "stage1")
-    assert tracked.count() == 1000
-    acc = tracked._lineage_acc.value
-    assert sum(acc.values()) == 1000
-    assert len(acc) == 4  # one entry per partition
-    # a second action re-executes the tracked plan: the max-merge keeps
-    # the counts idempotent (sum-merge would report 2000 here — same
-    # failure mode as a retried/speculative task double-counting)
-    assert tracked.count() == 1000
-    acc = tracked._lineage_acc.value
-    assert sum(acc.values()) == 1000
-
-
-def test_observed_rowcount(spark):
-    df, obs = lineage.observed(spark.range(500), "s")
-    df.write.format("noop").mode("overwrite").save()
-    assert obs.get["rows"] == 500
 
 
 def test_checkpoint_resume(spark, tmp_path):

@@ -471,6 +471,16 @@ def test_knn_checks_for_stragglers_once_per_round(spark, monkeypatch):
     assert len(out) == 60 * 3
 
 
+def test_knn_empty_queries_without_rounds_returns_no_rows(spark):
+    """No round and no straggler leave nothing to union: the call still
+    returns an empty frame with the usual columns."""
+    pts, _, _ = _points_df(spark, 2, seed=24)
+    out = knn.knn_join(pts.limit(0), pts, k=1, max_expansions=0)
+    assert out.dtypes == knn.knn_join(pts, pts, k=1, max_expansions=1).dtypes
+    assert out.columns == ["id", "neighbor_id", "dist_km", "rank"]
+    assert out.collect() == []
+
+
 def test_knn_fallback_straggler_bound_raises(spark):
     pts, _, _ = _points_df(spark, 50, seed=22)
     import pytest as _pytest

@@ -4,16 +4,15 @@
 The 40M-event leg decomposes as S ~= 10 s (4 job submissions +
 window/ntile codegen) and W ~= 105 core-s; the model predicts
 eff(2->8) ~= S+W/2 over 4*(S+W/8) ~= 0.94 at 10x input. This script
-MEASURES that: the identical chained pipeline (attribution -> RFM ->
-grouped_corr -> max_drawdown, shuffle_partitions fixed at 32) over a
-400M-event table at CPU-pinned 2 and 8 cores, one timed run per level
-after a 40M-table warm pass in the same context (codegen/daemon warm-up
-without paying a second 400M pass).
+MEASURES that: the identical chained pipeline (scaling_bench.ANALYTICS:
+attribution -> RFM -> grouped_corr -> max_drawdown, shuffle_partitions
+fixed at 32) over a 400M-event table at CPU-pinned 2 and 8 cores, one
+timed run per level after a 40M-table warm pass in the same context
+(codegen/daemon warm-up without paying a second 400M pass).
 
-Steal-watched like every recorded run: the script samples /proc/stat
-steal around each level and refuses to print a result row if the
-window was noisy (>50 ticks/s). Appends its result to
-BENCH/op_spots.jsonl with op="analytics_10x" and prints the
+Steal-watched like every recorded run (tools/harness.py): a level whose
+window was noisy (>50 ticks/s) marks the row noisy. Appends its result
+to BENCH/op_spots.jsonl with op="analytics_10x" and prints the
 predicted-vs-measured comparison for SCALE.md.
 
 Usage: python tools/analytics_10x_confirm.py  (box must be idle)
@@ -21,14 +20,13 @@ Usage: python tools/analytics_10x_confirm.py  (box must be idle)
 
 from __future__ import annotations
 
-import json
 import os
-import subprocess
-import sys
-import time
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-EVENTS_40M = os.environ.get("SPARK_GRAFT_EVENTS_DIR", "/tmp/geocore_events40m")
+import harness
+import op_scaling_spot as spot
+import scaling_bench as sb
+
+EVENTS_40M = sb.EVENTS_PARQUET
 EVENTS_400M = "/tmp/geocore_events400m"
 N10 = 400_000_000
 
@@ -37,96 +35,19 @@ FIT_S = 10.1
 FIT_W = 104.8
 
 
-def _steal() -> int:
-    with open("/proc/stat") as f:
-        for line in f:
-            if line.startswith("cpu "):
-                return int(line.split()[8])
-    return 0
-
-
-def _pinned(cpus: int) -> list[str]:
-    return ["taskset", "-c", f"0-{cpus - 1}"]
-
-
-def _materialize() -> None:
-    if os.path.exists(os.path.join(EVENTS_400M, "_SUCCESS")):
-        return
-    code = f"""
-from pyspark.sql import functions as F
-from geocore_spark.session import get_spark
-spark = get_spark("mat-events10x", master="local[32]", shuffle_partitions=32)
-e = (spark.range({N10}, numPartitions=2048)
-     .select(
-        (F.col("id") % 20_000_000).alias("user_id"),
-        F.col("id").alias("event_id"),
-        F.timestamp_micros(
-            F.lit(1_700_000_000_000_000)
-            + F.pmod(F.col("id") * 2654435761, F.lit(30 * 86400 * 1_000_000))
-        ).alias("ts"),
-        F.when(F.col("id") % 10 == 0, F.lit("purchase"))
-         .when(F.col("id") % 10 < 4, F.lit("click"))
-         .otherwise(F.lit("view")).alias("event_type"),
-        (F.pmod(F.col("id") * 40503, F.lit(997)) - 498).alias("value"),
-        (F.pmod(F.col("id") * 7919, F.lit(1009)) - 504).alias("value2"),
-        F.pmod(F.col("id") * 104729, F.lit(1000)).alias("amount"),
-        (F.col("id") % 100_000).alias("grp_dd")))
-e.write.mode("overwrite").parquet("{EVENTS_400M}")
-"""
-    subprocess.run(
-        [sys.executable, "-c", code],
-        env=dict(os.environ, PYTHONPATH=REPO),
-        check=True,
-        capture_output=True,
-        text=True,
-        timeout=3600,
-    )
-
-
 def _run_level(cpus: int, nparts: int = 32) -> float:
-    # identical pipeline to tools/scaling_bench._analytics, 10x input;
-    # user/group cardinalities scale with the input so per-key row
-    # counts (the window/ntile work shape) match the 40M leg.
+    # user/group cardinalities scale with the input (materialize_events)
+    # so per-key row counts match the 40M leg.
     # nparts: shuffle partitions — 32 replicates the leg's fixed value
     # (12.5M rows/partition at 400M: spills under 8-way concurrency on
     # a FIXED 16g heap); 256 is the size-appropriate setting
     # (~1.6M rows/partition) a real 400M-row job would use.
-    code = f"""
-import time, json
-from pyspark.sql import functions as F
-from geocore_spark.session import get_spark
-from geocore_spark.operators import product_analytics as pa, metrics
-spark = get_spark("scale-analytics10x", master="local[{cpus}]",
-                  shuffle_partitions={nparts})
-REF = 1_700_000_000_000_000 + 30 * 86400 * 1_000_000
-def pipe(path):
-    e = spark.read.parquet(path)
-    touches = e.where(F.col("event_type") != "purchase")
-    convs = e.where(F.col("event_type") == "purchase")
-    pa.attribution(touches, convs, "user_id", "ts", "event_type",
-                   "event_id", "event_id", 48 * 3600 * 1_000_000) \\
-      .write.format("noop").mode("overwrite").save()
-    pa.rfm(convs, "user_id", "ts", "amount", REF) \\
-      .write.format("noop").mode("overwrite").save()
-    metrics.grouped_corr(
-        e.withColumn("grp", F.col("user_id") % 1000), "grp",
-        "value", "value2") \\
-      .write.format("noop").mode("overwrite").save()
-    pa.max_drawdown(e, "grp_dd", "ts", "event_id", "value") \\
-      .write.format("noop").mode("overwrite").save()
-pipe("{EVENTS_40M}")  # warm codegen + python workers at 1/10 cost
-t0 = time.time(); pipe("{EVENTS_400M}"); t = time.time() - t0
-print(json.dumps({{"t": t}}))
-"""
-    out = subprocess.run(
-        _pinned(cpus) + [sys.executable, "-c", code],
-        env=dict(os.environ, PYTHONPATH=REPO),
-        capture_output=True,
-        text=True,
-        timeout=7200,
-        check=True,
+    code = harness.best_of(
+        "scale-analytics10x", cpus, nparts, sb.ANALYTICS, repeat=1,
+        warm=f'pipe("{EVENTS_40M}")',  # codegen + python workers at 1/10 cost
+        call=f'pipe("{EVENTS_400M}")',
     )
-    return json.loads(out.stdout.strip().splitlines()[-1])["t"]
+    return harness.timed(code, cpus, timeout=7200)["t"]
 
 
 def main() -> None:
@@ -137,47 +58,15 @@ def main() -> None:
         )
     nparts = int(os.environ.get("SPARK_GRAFT_10X_PARTITIONS", "32"))
     print("materializing 400M-event table (once)...", flush=True)
-    _materialize()
-    results = {}
-    noisy = False
-    for cpus in (2, 8):
-        s0, w0 = _steal(), time.time()
-        t = _run_level(cpus, nparts)
-        dsteal, dwall = _steal() - s0, time.time() - w0
-        rate = dsteal / max(dwall, 1e-9)
-        print(
-            f"t({cpus}) = {t:.1f} s  [steal {dsteal} ticks / "
-            f"{dwall:.0f} s = {rate:.1f}/s]  (shuffle_partitions={nparts})",
-            flush=True,
-        )
-        results[cpus] = t
-        if rate > 50:
-            noisy = True
-    eff = results[2] / (4 * results[8])
-    pred_t2 = FIT_S + 10 * FIT_W / 2
-    pred_t8 = FIT_S + 10 * FIT_W / 8
-    pred_eff = pred_t2 / (4 * pred_t8)
-    row = {
-        "op": "analytics_10x",
-        "shuffle_partitions": nparts,
-        "input": f"{N10} events (10x the 40M leg)",
-        "t2": round(results[2], 2),
-        "t8": round(results[8], 2),
-        "eff_2_8": round(eff, 3),
-        "predicted_t2": round(pred_t2, 1),
-        "predicted_t8": round(pred_t8, 1),
-        "predicted_eff_2_8": round(pred_eff, 3),
-        "fit_S": FIT_S,
-        "fit_W": FIT_W,
-        "noisy": noisy,
-        "ts": time.strftime("%Y-%m-%dT%H:%M:%S"),
-    }
-    os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
-    with open(os.path.join(REPO, "BENCH", "op_spots.jsonl"), "a") as f:
-        f.write(json.dumps(row) + "\n")
-    print(json.dumps(row, indent=2))
-    if noisy:
-        print("NOISY WINDOW — discard and re-run", flush=True)
+    sb.materialize_events(EVENTS_400M, N10, 2048, "mat-events10x", 3600)
+    spot.confirm_10x(
+        "analytics_10x",
+        lambda cpus: _run_level(cpus, nparts),
+        FIT_S,
+        FIT_W,
+        f"{N10} events (10x the 40M leg)",
+        shuffle_partitions=nparts,
+    )
 
 
 if __name__ == "__main__":

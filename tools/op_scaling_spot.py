@@ -2,11 +2,11 @@
 semantic-dedup operator family (the session's additions — the established
 legs in scaling_bench.py cover flagship/text/curation/graph).
 
-Same methodology as tools/scaling_bench.py: each level runs in a FRESH
-subprocess whose whole tree (JVM + Python workers) is `taskset`-pinned to
-exactly N cores, one warm pass (JIT/codegen/Arrow spin-up) then best-of-2
-timed passes. 2->8 is the predictive pair on this box (8->32 saturates
-the single memory bus — see CLAUDE.md).
+Same methodology as tools/scaling_bench.py (tools/harness.py): each level
+runs in a FRESH child process whose whole tree (JVM + Python workers) is
+pinned to exactly N cores, one warm pass (JIT/codegen/Arrow spin-up) then
+best-of-2 timed passes. 2->8 is the predictive pair on this box (8->32
+saturates the single memory bus — see CLAUDE.md).
 
 Inputs are materialized once under /tmp and reused across levels, SIZED
 so a 2-core pass lands at ~1-2 min (measured: the cosine ops run on
@@ -18,18 +18,20 @@ pass, so 200k docs is the 2-core sweet spot):
   - 20k deterministic 64-dim embeddings for SemDeDup / decontam
 
 Appends one JSON line per run to BENCH/op_spots.jsonl and prints the
-markdown rows for SCALE.md's spot-check table.
+markdown rows for SCALE.md's spot-check table. ``confirm_10x`` is the
+same record for the two 10x-input confirmation scripts.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import subprocess
 import sys
 import time
+from typing import Callable
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+import harness
+
 DOCS = "/tmp/geocore_spot_docs200k.parquet"
 VECS = "/tmp/geocore_spot_vecs20k.parquet"
 MEDIA = "/tmp/geocore_spot_media20k.parquet"
@@ -37,18 +39,22 @@ PTS = "/tmp/geocore_spot_pts10m.parquet"
 SNAP = "/tmp/geocore_spot_snap10m/t"
 
 
-def _pinned(cpus: int) -> list[str]:
-    return ["taskset", "-c", f"0-{cpus - 1}"]
+def docs_fixture(path: str, n: int) -> str:
+    """Child-script lines writing ``n`` generator documents to ``path``
+    unless it exists (``spark`` bound by the caller)."""
+    return f"""
+import os
+from geocore_spark.sources import documents as docsrc
+if not os.path.exists("{path}"):
+    docsrc.documents(spark, {n:_}).write.parquet("{path}")
+"""
 
 
 _MATERIALIZE = f"""
 import os
 import numpy as np, pandas as pd
-from geocore_spark.session import get_spark
-from geocore_spark.sources import documents as docsrc
-spark = get_spark("spot-mat", master="local[8]", shuffle_partitions=8)
-if not os.path.exists("{DOCS}"):
-    docsrc.documents(spark, 200_000).write.parquet("{DOCS}")
+{harness.session("spot-mat", 8, 8)}
+{docs_fixture(DOCS, 200_000)}
 if not os.path.exists("{VECS}"):
     rng = np.random.default_rng(17)
     m = rng.standard_normal((20_000, 64)).astype(np.float32)
@@ -78,6 +84,18 @@ if not os.path.exists("{SNAP}"):
     # before rewrite_files materializes)
     snap.delete_where(spark, "{SNAP}", F.col("id") % 10 == 3)
 print("materialized")
+"""
+
+# winnowing fingerprints (functions/text.winnow_udf, oracle-backed via
+# winnow_exact): per-doc numpy rolling-hash kernel in an Arrow batch —
+# embarrassingly parallel, ceiling = the Python worker pool. The 10x
+# confirmation (tools/winnow_10x_confirm.py) times the same `winnow`.
+WINNOW = """
+from pyspark.sql import functions as F
+from geocore_spark.functions import text as tx
+def winnow(d):
+    fp = d.select("doc_id", F.explode(tx.winnow_udf()(F.col("text"))).alias("fp"))
+    return fp.agg(F.count(F.lit(1)), F.expr("bit_xor(fp)")).collect()
 """
 
 _OPS = {
@@ -179,16 +197,10 @@ from geocore_spark.functions import bpe
 def pipe():
     return len(bpe.word_freq_table(d, top_k=30_000))
 """,
-    # winnowing fingerprints (functions/text.winnow_udf, oracle-backed via
-    # winnow_exact): per-doc numpy rolling-hash kernel in an Arrow batch —
-    # embarrassingly parallel, ceiling = the Python worker pool.
-    "winnow": f"""
+    "winnow": WINNOW + f"""
 d = spark.read.parquet("{DOCS}")
-from pyspark.sql import functions as F
-from geocore_spark.functions import text as tx
 def pipe():
-    fp = d.select("doc_id", F.explode(tx.winnow_udf()(F.col("text"))).alias("fp"))
-    return fp.agg(F.count(F.lit(1)), F.expr("bit_xor(fp)")).collect()
+    return winnow(d)
 """,
     # Z-order layout write (functions/layout.zorder_layout): narrow Morton
     # projection + repartitionByRange + in-partition sort + parquet write —
@@ -399,35 +411,58 @@ def _run(op: str, cpus: int) -> float:
     # rows cite specific runs; changing it would silently fork the
     # methodology mid-history. New leg families should fix partitions
     # across levels like scaling_bench's graph/analytics legs do.
-    code = f"""
-import json, time
-from geocore_spark.session import get_spark
-spark = get_spark("spot-{op}", master="local[{cpus}]", shuffle_partitions={max(cpus * 2, 8)})
-{_OPS[op]}
-pipe()  # warm: JIT, codegen, Python workers, parquet footer cache
-ts = []
-for _ in range(2):
-    t0 = time.time(); pipe(); ts.append(time.time() - t0)
-print(json.dumps({{"t": min(ts)}}))
-"""
-    out = subprocess.run(
-        _pinned(cpus) + [sys.executable, "-c", code],
-        env=dict(os.environ, PYTHONPATH=REPO),
-        capture_output=True,
-        text=True,
-        timeout=2400,
-        check=True,
-    )
-    return json.loads(out.stdout.strip().splitlines()[-1])["t"]
+    code = harness.best_of(f"spot-{op}", cpus, max(cpus * 2, 8), _OPS[op], repeat=2)
+    return harness.timed(code, cpus, timeout=2400)["t"]
 
 
-def _steal_ticks() -> int:
-    try:
-        with open("/proc/stat") as f:
-            parts = f.readline().split()
-        return int(parts[8]) if len(parts) > 8 else 0
-    except OSError:
-        return 0
+def _append(entry: dict) -> None:
+    os.makedirs(os.path.join(harness.REPO, "BENCH"), exist_ok=True)
+    with open(os.path.join(harness.REPO, "BENCH", "op_spots.jsonl"), "a") as f:
+        f.write(json.dumps(entry) + "\n")
+
+
+def confirm_10x(
+    op: str,
+    run_level: Callable[[int], float],
+    fit_s: float,
+    fit_w: float,
+    input_desc: str,
+    **extra,
+) -> None:
+    """One 10x-input confirmation of a spot fit T(c) = S + W/c: time
+    ``run_level(cpus)`` at 2 and 8 cores, steal-watched per level, and
+    append measured vs predicted eff(2->8) to BENCH/op_spots.jsonl as
+    ``op`` (``extra`` fields follow ``op`` in the record)."""
+    results = {}
+    noisy = False
+    for cpus in (2, 8):
+        watch = harness.StealWatch()
+        t = run_level(cpus)
+        rate = watch.rate()
+        print(f"t({cpus}) = {t:.1f} s  [steal {rate:.1f} ticks/s]", flush=True)
+        results[cpus] = t
+        noisy = noisy or harness.noisy(rate)
+    pred_t2 = fit_s + 10 * fit_w / 2
+    pred_t8 = fit_s + 10 * fit_w / 8
+    row = {
+        "op": op,
+        **extra,
+        "input": input_desc,
+        "t2": round(results[2], 2),
+        "t8": round(results[8], 2),
+        "eff_2_8": round(results[2] / (4 * results[8]), 3),
+        "predicted_t2": round(pred_t2, 1),
+        "predicted_t8": round(pred_t8, 1),
+        "predicted_eff_2_8": round(pred_t2 / (4 * pred_t8), 3),
+        "fit_S": fit_s,
+        "fit_W": fit_w,
+        "noisy": noisy,
+        "ts": time.strftime("%Y-%m-%dT%H:%M:%S"),
+    }
+    _append(row)
+    print(json.dumps(row, indent=2))
+    if noisy:
+        print("NOISY WINDOW — discard and re-run", flush=True)
 
 
 # ops that synthesize their own input via spark.range need no fixture
@@ -440,13 +475,7 @@ def main() -> None:
     if bad:
         raise SystemExit(f"unknown op(s): {bad}; known: {sorted(_OPS)}")
     if any(op not in _SELF_CONTAINED for op in ops):
-        subprocess.run(
-            [sys.executable, "-c", _MATERIALIZE],
-            env=dict(os.environ, PYTHONPATH=REPO),
-            check=True,
-            capture_output=True,
-            text=True,
-        )
+        harness.run(["-c", _MATERIALIZE], timeout=None)
     # input descriptor recorded per op so entries at different input
     # sizes can never be cross-paired (the mixed-input trap the main
     # bench guards with curation_docs/graph_edges)
@@ -482,7 +511,7 @@ def main() -> None:
         # mechanical, like scaling_bench's self-flagging legs), and a
         # per-op failure boundary so one late failure can't discard
         # hours of completed measurements
-        t0, s0 = time.time(), _steal_ticks()
+        watch = harness.StealWatch()
         try:
             t2 = _run(op, 2)
             t8 = _run(op, 8)
@@ -490,16 +519,16 @@ def main() -> None:
             failed[op] = str(e)[:200]
             print(f"| {op} | FAILED | — | — | — | {failed[op]}", flush=True)
             continue
-        steal_tps = (_steal_ticks() - s0) / max(time.time() - t0, 1e-6)
+        steal_tps = watch.rate()
         eff = t2 / (4 * t8)
         entry["ops"][op] = {
             "2": round(t2, 2),
             "8": round(t8, 2),
             "input": inputs.get(op, "?"),
             "steal_tps": round(steal_tps, 1),
-            "noisy": steal_tps > 50.0,
+            "noisy": harness.noisy(steal_tps),
         }
-        flag = " NOISY" if steal_tps > 50.0 else ""
+        flag = " NOISY" if harness.noisy(steal_tps) else ""
         print(
             f"| {op} | {t2:.2f} | {t8:.2f} | {eff:.2f} |"
             f" {steal_tps:.1f}{flag} |",
@@ -508,12 +537,11 @@ def main() -> None:
     if failed:
         entry["failed"] = failed
     if entry["ops"] or failed:
-        os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
-        with open(os.path.join(REPO, "BENCH", "op_spots.jsonl"), "a") as f:
-            f.write(json.dumps(entry) + "\n")
+        _append(entry)
     if any(o.get("noisy") for o in entry["ops"].values()):
         print(
-            "[steal] one or more ops saw hypervisor steal > 50 ticks/s — "
+            f"[steal] one or more ops saw hypervisor steal > "
+            f"{harness.STEAL_TPS_LIMIT:g} ticks/s — "
             "those rows are contaminated; rerun them in a quiet window "
             "before citing them in SCALE.md",
             flush=True,

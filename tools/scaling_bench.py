@@ -4,13 +4,10 @@ Measures the flagship pipeline (read pages parquet -> geotag extract ->
 tile -> per-cell aggregate) at THREE parallelism levels (2, 8, 32 cores) in
 separate JVMs on the identical input, reporting both N->4N pairs.
 
-Each level is CPU-PINNED (``taskset -c 0-(N-1)``): the whole process tree —
-JVM task threads AND Python/Arrow workers — shares exactly N cores, exactly
-like an N-core executor on a real cluster. Without pinning, local[2] on a
-32-core box quietly runs its Python workers on spare cores, inflating the
-baseline and deflating measured efficiency for any Python-kernel stage
-(round-1 webtext leg: 0.74 unpinned -> 0.96 pinned, same binaries, same
-input).
+Each level is CPU-PINNED to exactly N cores and steal-watched
+(tools/harness.py): the whole process tree — JVM task threads AND
+Python/Arrow workers — shares the N-core slice, exactly like an N-core
+executor on a real cluster.
 
 - 2 -> 8 cores: within this VM's memory-bandwidth envelope — the pair
   that reflects per-executor scaling on a real cluster (each executor
@@ -35,73 +32,36 @@ from __future__ import annotations
 
 import json
 import os
-import subprocess
-import sys
 import time
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+import harness
+
+REPO = harness.REPO
 SF_DIR = "/root/testdata/sf0.1"  # overridable via the sf_dir positional arg
 PAGES_PARQUET = os.environ.get("SPARK_GRAFT_PAGES_DIR", "/tmp/geocore_pages20m")
 N_PAGES = 20_000_000
 
 
-def _pinned(cpus: int) -> list[str]:
-    """taskset prefix restricting the whole process tree (JVM + Python
-    workers) to exactly ``cpus`` cores — the N-core cluster-slice."""
-    return ["taskset", "-c", f"0-{cpus - 1}"]
-
-
-# hypervisor steal above this many ticks/s during a leg means the numbers
-# are hostage to a noisy co-tenant window (CLAUDE.md diagnostic: bursts on
-# this VM tripled per-query times); such runs self-mark noisy and the
-# report merger ignores them instead of relying on operator discipline
-STEAL_TPS_LIMIT = 50.0
-
-
-def _steal_ticks() -> int:
-    try:
-        with open("/proc/stat") as f:
-            parts = f.readline().split()
-        return int(parts[8]) if len(parts) > 8 else 0
-    except OSError:
-        return 0
-
-
-def _steal_watched(fn):
-    """Run fn(), returning (result, steal_ticks_per_sec_during_run)."""
-    t0, s0 = time.time(), _steal_ticks()
-    out = fn()
-    dt = max(time.time() - t0, 1e-6)
-    return out, (_steal_ticks() - s0) / dt
+def _materialize(path: str, app: str, body: str, timeout: float = 900) -> None:
+    """Write an input table once: an unpinned local[32] child runs
+    ``body`` unless ``path`` already holds a committed write."""
+    if os.path.exists(os.path.join(path, "_SUCCESS")):
+        return
+    harness.run(["-c", harness.session(app, 32, 32) + body], timeout=timeout)
 
 
 def _materialize_pages() -> None:
-    if os.path.exists(os.path.join(PAGES_PARQUET, "_SUCCESS")):
-        return
-    code = f"""
-from geocore_spark.session import get_spark
+    _materialize(PAGES_PARQUET, "mat", f"""
 from geocore_spark.sources import pages as pg
-spark = get_spark("mat", master="local[32]", shuffle_partitions=32)
 pg.pages(spark, {N_PAGES}, partitions=128).drop("lat_true", "lon_true") \\
   .write.mode("overwrite").parquet("{PAGES_PARQUET}")
-"""
-    subprocess.run(
-        [sys.executable, "-c", code],
-        env=dict(os.environ, PYTHONPATH=REPO),
-        check=True,
-        capture_output=True,
-        text=True,
-        timeout=900,
-    )
+""")
 
 
 def _flagship(cpus: int) -> float:
-    code = f"""
-import time, json
+    code = harness.best_of("scale", cpus, cpus, f"""
 from pyspark.sql import functions as F
-from geocore_spark.session import get_spark
 from geocore_spark.functions import tiling as tl, text as tx
-spark = get_spark("scale", master="local[{cpus}]", shuffle_partitions={cpus})
 def pipe():
     df = spark.read.parquet("{PAGES_PARQUET}")
     hs = F.decode("html", "UTF-8")
@@ -112,21 +72,8 @@ def pipe():
     (tagged.groupBy("cell")
            .agg(F.count("*").alias("n"), F.avg("lat").alias("m"))
            .write.format("noop").mode("overwrite").save())
-pipe()  # warm JIT/codegen
-ts = []
-for _ in range(4):  # best-of-4: this VM shows multi-second host stalls
-    t0 = time.time(); pipe(); ts.append(time.time() - t0)
-print(json.dumps({{"t": min(ts)}}))
-"""
-    out = subprocess.run(
-        _pinned(cpus) + [sys.executable, "-c", code],
-        env=dict(os.environ, PYTHONPATH=REPO),
-        capture_output=True,
-        text=True,
-        timeout=900,
-        check=True,
-    )
-    return json.loads(out.stdout.strip().splitlines()[-1])["t"]
+""", repeat=4)  # best-of-4: this VM shows multi-second host stalls
+    return harness.timed(code, cpus, timeout=900)["t"]
 
 
 DOCS_PARQUET = os.environ.get("SPARK_GRAFT_DOCS_DIR", "/tmp/geocore_docs500k")
@@ -134,35 +81,20 @@ N_DOCS = 500_000
 
 
 def _materialize_docs() -> None:
-    if os.path.exists(os.path.join(DOCS_PARQUET, "_SUCCESS")):
-        return
-    code = f"""
-from geocore_spark.session import get_spark
+    _materialize(DOCS_PARQUET, "mat-docs", f"""
 from geocore_spark.sources import documents as ds
-spark = get_spark("mat-docs", master="local[32]", shuffle_partitions=32)
 ds.documents(spark, {N_DOCS}, partitions=128) \\
   .write.mode("overwrite").parquet("{DOCS_PARQUET}")
-"""
-    subprocess.run(
-        [sys.executable, "-c", code],
-        env=dict(os.environ, PYTHONPATH=REPO),
-        check=True,
-        capture_output=True,
-        text=True,
-        timeout=900,
-    )
+""")
 
 
 def _text_flagship(cpus: int) -> float:
     """Webtext leg: docs parquet -> MinHash signatures (batched Arrow
     kernel) -> banded LSH bucket counts. The dedup candidate-generation
     spine, measured end to end."""
-    code = f"""
-import time, json
+    code = harness.best_of("scale-text", cpus, cpus, f"""
 from pyspark.sql import functions as F
-from geocore_spark.session import get_spark
 from geocore_spark.functions import hashing as hsh
-spark = get_spark("scale-text", master="local[{cpus}]", shuffle_partitions={cpus})
 def pipe():
     d = spark.read.parquet("{DOCS_PARQUET}")
     sig = d.select("doc_id", hsh.minhash_udf(64, 5)(F.col("text")).alias("sig"))
@@ -172,21 +104,8 @@ def pipe():
             lambda b: F.xxhash64(F.slice(F.col("sig"), b * 4 + 1, 4)))).alias("bhash"))
     (banded.groupBy("bhash").count()
            .write.format("noop").mode("overwrite").save())
-pipe()  # warm workers + codegen
-ts = []
-for _ in range(3):
-    t0 = time.time(); pipe(); ts.append(time.time() - t0)
-print(json.dumps({{"t": min(ts)}}))
-"""
-    out = subprocess.run(
-        _pinned(cpus) + [sys.executable, "-c", code],
-        env=dict(os.environ, PYTHONPATH=REPO),
-        capture_output=True,
-        text=True,
-        timeout=1200,
-        check=True,
-    )
-    return json.loads(out.stdout.strip().splitlines()[-1])["t"]
+""", repeat=3)
+    return harness.timed(code, cpus, timeout=1200)["t"]
 
 
 # 500k docs: at 100k the job's ~20-25 s serial floor (fresh-context Python
@@ -220,15 +139,7 @@ for i in range(2):
     shutil.rmtree(root, ignore_errors=True)
 print(json.dumps({{"t": min(times)}}))
 """
-    out = subprocess.run(
-        _pinned(cpus) + [sys.executable, "-c", code],
-        env=dict(os.environ, PYTHONPATH=REPO, SPARK_GRAFT_CPUS=str(cpus)),
-        capture_output=True,
-        text=True,
-        timeout=3600,
-        check=True,
-    )
-    return json.loads(out.stdout.strip().splitlines()[-1])["t"]
+    return harness.timed(code, cpus, timeout=3600, SPARK_GRAFT_CPUS=str(cpus))["t"]
 
 
 # default 100M edges over 1M hosts (VERDICT r2 item #4: the 10M leg was
@@ -253,12 +164,8 @@ def _materialize_edges() -> None:
     Column, written once.
     dst is a multiplicative scramble of the edge id so the graph is
     irregular (hubs + dangling hosts) but fully deterministic."""
-    if os.path.exists(os.path.join(EDGES_PARQUET, "_SUCCESS")):
-        return
-    code = f"""
+    _materialize(EDGES_PARQUET, "mat-edges", f"""
 from pyspark.sql import functions as F
-from geocore_spark.session import get_spark
-spark = get_spark("mat-edges", master="local[32]", shuffle_partitions=32)
 e = (spark.range({N_EDGES}, numPartitions={max(64, N_EDGES // 500_000)})
      .select(
         F.concat(F.lit("h"), (F.col("id") % {N_HOSTS}).cast("string")).alias("src_host"),
@@ -266,15 +173,7 @@ e = (spark.range({N_EDGES}, numPartitions={max(64, N_EDGES // 500_000)})
                               % {N_HOSTS}).cast("string")).alias("dst_host"),
         (F.col("id") % 7 + 1).alias("n_links")))
 e.write.mode("overwrite").parquet("{EDGES_PARQUET}")
-"""
-    subprocess.run(
-        [sys.executable, "-c", code],
-        env=dict(os.environ, PYTHONPATH=REPO),
-        check=True,
-        capture_output=True,
-        text=True,
-        timeout=900,
-    )
+""")
 
 
 def _graph(cpus: int) -> dict:
@@ -290,11 +189,8 @@ def _graph(cpus: int) -> dict:
     stays recorded too. Shuffle partitions are fixed at 32 across levels
     so the plan decomposition is identical and cores are the only
     variable (partitions >= cores everywhere)."""
-    code = f"""
-import time, json
-from geocore_spark.session import get_spark
+    code = "import time, json\n" + harness.session("scale-graph", cpus, 32) + f"""
 from geocore_spark.operators import links
-spark = get_spark("scale-graph", master="local[{cpus}]", shuffle_partitions=32)
 def pipe(iters):
     e = spark.read.parquet("{EDGES_PARQUET}")
     pr = links.pagerank(e, iters=iters)
@@ -305,15 +201,7 @@ t0 = time.time(); pipe(1); t1 = time.time() - t0
 t0 = time.time(); pipe({GRAPH_ITERS}); tt = time.time() - t0
 print(json.dumps({{"t": tt, "t1": t1, "t_marg": max(tt - t1, 1e-9)}}))
 """
-    out = subprocess.run(
-        _pinned(cpus) + [sys.executable, "-c", code],
-        env=dict(os.environ, PYTHONPATH=REPO),
-        capture_output=True,
-        text=True,
-        timeout=3600,
-        check=True,
-    )
-    return json.loads(out.stdout.strip().splitlines()[-1])
+    return harness.timed(code, cpus, timeout=3600)
 
 
 EVENTS_PARQUET = os.environ.get(
@@ -322,21 +210,25 @@ EVENTS_PARQUET = os.environ.get(
 N_AN_EVENTS = 40_000_000
 
 
-def _materialize_events() -> None:
-    """40M-event product-analytics table over 2M users, pure Column,
-    written once: pseudo-random timestamps inside a 30-day window
-    (multiplicative scramble — deterministic), 1-in-10 purchases,
-    signed integer values for the moment/drawdown operators and a
-    non-negative amount for RFM."""
-    if os.path.exists(os.path.join(EVENTS_PARQUET, "_SUCCESS")):
-        return
-    code = f"""
+def materialize_events(
+    path: str = EVENTS_PARQUET,
+    n: int = N_AN_EVENTS,
+    partitions: int = 256,
+    app: str = "mat-events",
+    timeout: float = 900,
+) -> None:
+    """``n``-event product-analytics table over n/20 users (2M at the
+    40M default), pure Column, written once: pseudo-random timestamps
+    inside a 30-day window (multiplicative scramble — deterministic),
+    1-in-10 purchases, signed integer values for the moment/drawdown
+    operators and a non-negative amount for RFM. User and drawdown-group
+    cardinalities scale with ``n``, so the per-key row counts (the
+    window/ntile work shape) stay the same at any size."""
+    _materialize(path, app, f"""
 from pyspark.sql import functions as F
-from geocore_spark.session import get_spark
-spark = get_spark("mat-events", master="local[32]", shuffle_partitions=32)
-e = (spark.range({N_AN_EVENTS}, numPartitions=256)
+e = (spark.range({n}, numPartitions={partitions})
      .select(
-        (F.col("id") % 2_000_000).alias("user_id"),
+        (F.col("id") % {n // 20:_}).alias("user_id"),
         F.col("id").alias("event_id"),
         F.timestamp_micros(
             F.lit(1_700_000_000_000_000)
@@ -348,37 +240,19 @@ e = (spark.range({N_AN_EVENTS}, numPartitions=256)
         (F.pmod(F.col("id") * 40503, F.lit(997)) - 498).alias("value"),
         (F.pmod(F.col("id") * 7919, F.lit(1009)) - 504).alias("value2"),
         F.pmod(F.col("id") * 104729, F.lit(1000)).alias("amount"),
-        (F.col("id") % 10_000).alias("grp_dd")))
-e.write.mode("overwrite").parquet("{EVENTS_PARQUET}")
-"""
-    subprocess.run(
-        [sys.executable, "-c", code],
-        env=dict(os.environ, PYTHONPATH=REPO),
-        check=True,
-        capture_output=True,
-        text=True,
-        timeout=900,
-    )
+        (F.col("id") % {n // 4000:_}).alias("grp_dd")))
+e.write.mode("overwrite").parquet("{path}")
+""", timeout)
 
 
-def _analytics(cpus: int) -> float:
-    """General-analytics leg (VERDICT r3 item #4): a chained pipeline of
-    four representative round-3 operators over the 40M-event table —
-    attribution (windowed join + per-conversion window), RFM (three
-    range-partitioned exact-ntile exchanges over the purchase slice),
-    grouped_corr (integer-moment aggregate, 1000 groups) and
-    max_drawdown (one group-ordered window over all 40M rows). Warm run
-    then best-of-2, CPU-pinned; shuffle partitions fixed at 32 across
-    levels so cores are the only variable (same rule as the graph leg)."""
-    code = f"""
-import time, json
+# the analytics pipeline over an events table at ``path``; the 10x
+# confirmation (tools/analytics_10x_confirm.py) times the same pipe
+ANALYTICS = """
 from pyspark.sql import functions as F
-from geocore_spark.session import get_spark
 from geocore_spark.operators import product_analytics as pa, metrics
-spark = get_spark("scale-analytics", master="local[{cpus}]", shuffle_partitions=32)
 REF = 1_700_000_000_000_000 + 30 * 86400 * 1_000_000
-def pipe():
-    e = spark.read.parquet("{EVENTS_PARQUET}")
+def pipe(path):
+    e = spark.read.parquet(path)
     touches = e.where(F.col("event_type") != "purchase")
     convs = e.where(F.col("event_type") == "purchase")
     pa.attribution(touches, convs, "user_id", "ts", "event_type",
@@ -392,44 +266,40 @@ def pipe():
       .write.format("noop").mode("overwrite").save()
     pa.max_drawdown(e, "grp_dd", "ts", "event_id", "value") \\
       .write.format("noop").mode("overwrite").save()
-pipe()  # warm workers + codegen
-ts = []
-for _ in range(2):
-    t0 = time.time(); pipe(); ts.append(time.time() - t0)
-print(json.dumps({{"t": min(ts)}}))
 """
-    out = subprocess.run(
-        _pinned(cpus) + [sys.executable, "-c", code],
-        env=dict(os.environ, PYTHONPATH=REPO),
-        capture_output=True,
-        text=True,
-        timeout=3600,
-        check=True,
+
+
+def _analytics(cpus: int) -> float:
+    """General-analytics leg (VERDICT r3 item #4): a chained pipeline of
+    four representative round-3 operators over the 40M-event table —
+    attribution (windowed join + per-conversion window), RFM (three
+    range-partitioned exact-ntile exchanges over the purchase slice),
+    grouped_corr (integer-moment aggregate, 1000 groups) and
+    max_drawdown (one group-ordered window over all 40M rows). Warm run
+    then best-of-2, CPU-pinned; shuffle partitions fixed at 32 across
+    levels so cores are the only variable (same rule as the graph leg)."""
+    call = f'pipe("{EVENTS_PARQUET}")'
+    code = harness.best_of(
+        "scale-analytics", cpus, 32, ANALYTICS, repeat=2, warm=call, call=call
     )
-    return json.loads(out.stdout.strip().splitlines()[-1])["t"]
+    return harness.timed(code, cpus, timeout=3600)["t"]
 
 
 def _query_bench(cpus: int) -> dict:
-    env = dict(
-        os.environ,
+    # pinned like every other leg (r4 review: an unpinned local[8] lets
+    # Python workers overflow onto spare cores, deflating t8 — the
+    # exact artifact tools/harness.py documents). The r4 bench
+    # query-set change started a fresh per-query merge epoch anyway,
+    # so no unpinned history mixes in.
+    out = harness.run(
+        [os.path.join(REPO, "bench.py")],
+        cpus,
+        timeout=1800,
         SPARK_GRAFT_CPUS=str(cpus),
         SPARK_GRAFT_SF_DIR=SF_DIR,
         SPARK_GRAFT_REPEAT="3",
     )
-    # pinned like every other leg (r4 review: an unpinned local[8] lets
-    # Python workers overflow onto spare cores, deflating t8 — the
-    # exact artifact the module docstring documents). The r4 bench
-    # query-set change started a fresh per-query merge epoch anyway,
-    # so no unpinned history mixes in.
-    out = subprocess.run(
-        _pinned(cpus) + [sys.executable, os.path.join(REPO, "bench.py")],
-        env=env,
-        capture_output=True,
-        text=True,
-        timeout=1800,
-        check=True,
-    )
-    return json.loads(out.stdout.strip().splitlines()[-1])
+    return harness.last_json(out)
 
 
 def main():
@@ -460,8 +330,9 @@ def main():
     def _leg(name, fn, levels=(2, 8, 32)):
         vals, worst = {}, 0.0
         for c in levels:
-            vals[c], rate = _steal_watched(lambda c=c: fn(c))
-            worst = max(worst, rate)
+            watch = harness.StealWatch()
+            vals[c] = fn(c)
+            worst = max(worst, watch.rate())
         steal_tps[name] = round(worst, 1)
         return vals
 
@@ -497,13 +368,13 @@ def main():
         # watched independently). "noisy" stays as the any-leg summary for
         # display and for old readers.
         entry["noisy_legs"] = sorted(
-            n for n, v in steal_tps.items() if v > STEAL_TPS_LIMIT
+            n for n, v in steal_tps.items() if harness.noisy(v)
         )
         entry["noisy"] = bool(entry["noisy_legs"])
         if entry["noisy"]:
             print(
                 f"[steal] hypervisor steal {steal_tps} ticks/s exceeds "
-                f"{STEAL_TPS_LIMIT}/s on leg(s) {entry['noisy_legs']} — "
+                f"{harness.STEAL_TPS_LIMIT}/s on leg(s) {entry['noisy_legs']} — "
                 "recorded, but those legs will be IGNORED by the report "
                 "merger; rerun them in a quiet window",
                 flush=True,
@@ -521,7 +392,7 @@ def main():
     # local[2]'s Python workers use spare cores, so mixing them would pair an
     # unpinned 2-core baseline with a pinned 8-core time — apples to oranges.
     runs = [json.loads(line) for line in open(hist_path)]
-    # ...and only quiet-window LEGS: entries that watched /proc/stat steal
+    # ...and only quiet-window LEGS: entries that watched host steal
     # during measurement record which legs saw a noisy hypervisor window
     # (noisy_legs); the merger skips exactly those legs. Legacy entries
     # with only the boolean flag are treated as all-legs-noisy (their
@@ -672,7 +543,7 @@ def main():
         "Flagship = read pages parquet (20M rows, 453 MB zstd) -> geotag",
         "extract (JVM regexp) -> geocell res-13 tile -> per-cell aggregate.",
         "Identical input at every parallelism level; separate JVM per level;",
-        "each level CPU-PINNED via taskset to exactly N cores so JVM task",
+        f"each level CPU-PINNED via {harness.TASKSET} to exactly N cores so JVM task",
         "threads AND Python/Arrow workers share the N-core slice — the",
         "faithful emulation of an N-core executor (unpinned local[N] on a",
         "32-core box lets Python workers overflow onto spare cores, which",
@@ -932,7 +803,7 @@ def main():
             "date-formatting columns in the round-2 query consolidation.",
             "Any other >1.3x row is a noisy window, not a plan change —",
             "plan shapes are pinned by tests/test_plan_shapes.py; rerun",
-            "`--legs queries` in a quiet window (check /proc/stat steal)",
+            f"`--legs queries` in a quiet window (check {harness.PROC}/stat steal)",
             "before reading such a row as a regression.",
             "",
             "| query | prior s | now s | ratio |",

@@ -13,23 +13,20 @@ and fails there, the SCALE.md revision ("licensed only while the
 per-core working set stays bandwidth-friendly") is confirmed from
 both sides rather than asserted.
 
-Same methodology: CPU-pinned levels, steal-watched, one timed run per
-level after a 200k-doc warm pass in the same context. Appends to
-BENCH/op_spots.jsonl as op="winnow_10x".
+Same methodology: the spot op's `winnow` (op_scaling_spot.WINNOW),
+CPU-pinned levels, steal-watched, one timed run per level after a
+200k-doc warm pass in the same context. Appends to BENCH/op_spots.jsonl
+as op="winnow_10x".
 
 Usage: python tools/winnow_10x_confirm.py  (box must be idle)
 """
 
 from __future__ import annotations
 
-import json
-import os
-import subprocess
-import sys
-import time
+import harness
+import op_scaling_spot as spot
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-DOCS_200K = "/tmp/geocore_spot_docs200k.parquet"
+DOCS_200K = spot.DOCS
 DOCS_2M = "/tmp/geocore_spot_docs2m.parquet"
 N10 = 2_000_000
 
@@ -38,110 +35,31 @@ FIT_S = 2.3
 FIT_W = 51.4
 
 
-def _steal() -> int:
-    with open("/proc/stat") as f:
-        for line in f:
-            if line.startswith("cpu "):
-                return int(line.split()[8])
-    return 0
-
-
-def _pinned(cpus: int) -> list[str]:
-    return ["taskset", "-c", f"0-{cpus - 1}"]
-
-
 def _materialize() -> None:
-    code = f"""
-import os
-from geocore_spark.session import get_spark
-from geocore_spark.sources import documents as docsrc
-spark = get_spark("mat-docs10x", master="local[32]", shuffle_partitions=32)
-if not os.path.exists("{DOCS_200K}"):
-    docsrc.documents(spark, 200_000).write.parquet("{DOCS_200K}")
-if not os.path.exists("{DOCS_2M}"):
-    docsrc.documents(spark, {N10}).write.parquet("{DOCS_2M}")
-print("ok")
-"""
-    subprocess.run(
-        [sys.executable, "-c", code],
-        env=dict(os.environ, PYTHONPATH=REPO),
-        check=True,
-        capture_output=True,
-        text=True,
-        timeout=1800,
+    code = (
+        harness.session("mat-docs10x", 32, 32)
+        + spot.docs_fixture(DOCS_200K, 200_000)
+        + spot.docs_fixture(DOCS_2M, N10)
     )
+    harness.run(["-c", code], timeout=1800)
 
 
 def _run_level(cpus: int) -> float:
-    code = f"""
-import time, json
-from pyspark.sql import functions as F
-from geocore_spark.session import get_spark
-from geocore_spark.functions import text as tx
-spark = get_spark("scale-winnow10x", master="local[{cpus}]",
-                  shuffle_partitions=32)
-def pipe(path):
-    d = spark.read.parquet(path)
-    fp = d.select(
-        "doc_id", F.explode(tx.winnow_udf()(F.col("text"))).alias("fp")
+    setup = spot.WINNOW + "def pipe(path):\n    return winnow(spark.read.parquet(path))\n"
+    code = harness.best_of(
+        "scale-winnow10x", cpus, 32, setup, repeat=1,
+        warm=f'pipe("{DOCS_200K}")',  # codegen + python workers at 1/10 cost
+        call=f'pipe("{DOCS_2M}")',
     )
-    return fp.agg(F.count(F.lit(1)), F.expr("bit_xor(fp)")).collect()
-pipe("{DOCS_200K}")  # warm codegen + python workers at 1/10 cost
-t0 = time.time(); pipe("{DOCS_2M}"); t = time.time() - t0
-print(json.dumps({{"t": t}}))
-"""
-    out = subprocess.run(
-        _pinned(cpus) + [sys.executable, "-c", code],
-        env=dict(os.environ, PYTHONPATH=REPO),
-        capture_output=True,
-        text=True,
-        timeout=7200,
-        check=True,
-    )
-    return json.loads(out.stdout.strip().splitlines()[-1])["t"]
+    return harness.timed(code, cpus, timeout=7200)["t"]
 
 
 def main() -> None:
     print("materializing 2M-doc table (once)...", flush=True)
     _materialize()
-    results = {}
-    noisy = False
-    for cpus in (2, 8):
-        s0, w0 = _steal(), time.time()
-        t = _run_level(cpus)
-        dsteal, dwall = _steal() - s0, time.time() - w0
-        rate = dsteal / max(dwall, 1e-9)
-        print(
-            f"t({cpus}) = {t:.1f} s  [steal {dsteal} ticks / "
-            f"{dwall:.0f} s = {rate:.1f}/s]",
-            flush=True,
-        )
-        results[cpus] = t
-        if rate > 50:
-            noisy = True
-    eff = results[2] / (4 * results[8])
-    pred_t2 = FIT_S + 10 * FIT_W / 2
-    pred_t8 = FIT_S + 10 * FIT_W / 8
-    row = {
-        "op": "winnow_10x",
-        "input": f"{N10} docs (10x the 200k leg)",
-        "t2": round(results[2], 2),
-        "t8": round(results[8], 2),
-        "eff_2_8": round(eff, 3),
-        "predicted_t2": round(pred_t2, 1),
-        "predicted_t8": round(pred_t8, 1),
-        "predicted_eff_2_8": round(pred_t2 / (4 * pred_t8), 3),
-        "fit_S": FIT_S,
-        "fit_W": FIT_W,
-        "noisy": noisy,
-        "ts": time.strftime("%Y-%m-%dT%H:%M:%S"),
-    }
-    os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
-    with open(os.path.join(REPO, "BENCH", "op_spots.jsonl"), "a") as f:
-        f.write(json.dumps(row) + "\n")
-    print(json.dumps(row, indent=2))
-    if noisy:
-        print("NOISY WINDOW — discard and re-run", flush=True)
+    spot.confirm_10x(
+        "winnow_10x", _run_level, FIT_S, FIT_W, f"{N10} docs (10x the 200k leg)"
+    )
 
 
 if __name__ == "__main__":
