@@ -28,6 +28,9 @@ def children(monkeypatch):
     def fake_run(argv, env, **kw):
         calls.append((argv, env, kw))
         out = {"t": 1.0, "t1": 0.5, "t_marg": 0.5}
+        if argv[-1].endswith("bench.py"):  # the queries leg's bench.py record
+            out = {"value": 2.0, "queries": {"tile_pipeline": 1.0, "pip": 1.0},
+                   "sf": 0.1, "n_pages": 2_000_000, "pages_per_sec": 2e6}
         return subprocess.CompletedProcess(argv, 0, "warming up\n" + json.dumps(out) + "\n", "")
 
     monkeypatch.setattr(harness.subprocess, "run", fake_run)
@@ -103,14 +106,38 @@ def test_materializers_are_unpinned_valid_children(children, tmp_path, monkeypat
     compile(spot._MATERIALIZE, "<materialize>", "exec")
 
 
+def test_main_measures_every_leg_and_writes_the_report(children, tmp_path, monkeypatch):
+    """A full default run: every leg measured (children stubbed), one
+    history entry appended and BENCH/BASELINE.md regenerated from it."""
+    monkeypatch.setattr(sb, "REPO", str(tmp_path))
+    monkeypatch.setattr(sb, "SF_DIR", sb.SF_DIR)  # main() rebinds it
+    for name in ("PAGES_PARQUET", "DOCS_PARQUET", "EDGES_PARQUET"):
+        monkeypatch.setattr(sb, name, str(tmp_path / name))
+    monkeypatch.setattr(sys, "argv", ["scaling_bench.py"])
+    monkeypatch.delenv("SPARK_GRAFT_CURATION", raising=False)
+    sb.main()
+    (line,) = open(tmp_path / "BENCH" / "history.jsonl").read().splitlines()
+    entry = json.loads(line)
+    for leg in ("flagship", "text", "curation", "graph", "analytics", "qbench"):
+        assert leg in entry, leg
+    assert set(entry["steal_tps"]) == {"flagship", "text", "curation", "graph", "analytics", "queries"}
+    assert "Generated" in open(tmp_path / "BENCH" / "BASELINE.md").read()
+
+
 def test_one_copy_of_the_measurement_machinery():
-    """Only the harness pins, watches steal or starts child processes, and
+    """Only the harness pins, reads steal or starts child processes, and
     each shared pipeline body lives in one tool."""
     files = {os.path.basename(p): open(p).read() for p in glob.glob(os.path.join(TOOLS, "*.py"))}
+    code = {
+        "child process": r"\bimport subprocess\b|\bsubprocess\.",
+        "taskset argv": r"[\"']taskset[\"']",
+        "stat read": r"open\(\s*f?[\"'][^\"']*/stat[\"']",
+    }
     for name, text in files.items():
         if name != "harness.py":
-            for word in ("taskset", "/proc/stat", "subprocess"):
-                assert word not in text, (name, word)
+            for what, pattern in code.items():
+                assert not re.search(pattern, text), (name, what)
+    assert all(re.search(p, files["harness.py"]) for k, p in code.items() if k != "stat read")
     for body in ("pa.max_drawdown(", "tx.winnow_udf()"):
         assert sum(text.count(body) for text in files.values()) == 1, body
     perfbench = os.path.join(os.path.dirname(TOOLS), "perfbench")

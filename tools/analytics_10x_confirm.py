@@ -10,8 +10,8 @@ fixed at 32) over a 400M-event table at CPU-pinned 2 and 8 cores, one
 timed run per level after a 40M-table warm pass in the same context
 (codegen/daemon warm-up without paying a second 400M pass).
 
-Steal-watched like every recorded run (tools/harness.py): a level whose
-window was noisy (>50 ticks/s) marks the row noisy. Appends its result
+Steal-watched like every recorded run (tools/harness.py samples
+/proc/stat steal around each level): a level whose window was noisy (>50 ticks/s) marks the row noisy. Appends its result
 to BENCH/op_spots.jsonl with op="analytics_10x" and prints the
 predicted-vs-measured comparison for SCALE.md.
 

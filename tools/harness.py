@@ -32,9 +32,6 @@ if REPO not in sys.path:
 
 from perfbench import measure  # noqa: E402
 
-TASKSET = "taskset"
-PROC = "/proc"  # steal is read from PROC/stat
-
 # hypervisor steal above this many ticks/s during a window means the
 # numbers are hostage to a noisy co-tenant (bursts on this VM tripled
 # per-query times)
@@ -43,7 +40,7 @@ STEAL_TPS_LIMIT = 50.0
 
 def command(args: list[str], cpus: int | None = None) -> list[str]:
     """``python *args``, pinned to cores 0..cpus-1 when ``cpus`` is given."""
-    pin = [] if cpus is None else [TASKSET, "-c", f"0-{cpus - 1}"]
+    pin = [] if cpus is None else ["taskset", "-c", f"0-{cpus - 1}"]
     return [*pin, sys.executable, *args]
 
 
@@ -110,7 +107,7 @@ print(json.dumps({{"t": min(ts)}}))
 class StealWatch:
     """Host steal since construction, read from ``proc``/stat."""
 
-    def __init__(self, proc: str = PROC):
+    def __init__(self, proc: str = "/proc"):
         self.proc = proc
         self.t0, self.c0 = time.time(), measure.cpu_times(proc)
 

@@ -3,10 +3,10 @@ semantic-dedup operator family (the session's additions — the established
 legs in scaling_bench.py cover flagship/text/curation/graph).
 
 Same methodology as tools/scaling_bench.py (tools/harness.py): each level
-runs in a FRESH child process whose whole tree (JVM + Python workers) is
-pinned to exactly N cores, one warm pass (JIT/codegen/Arrow spin-up) then
-best-of-2 timed passes. 2->8 is the predictive pair on this box (8->32
-saturates the single memory bus — see CLAUDE.md).
+runs in a FRESH subprocess whose whole tree (JVM + Python workers) is
+`taskset`-pinned to exactly N cores, one warm pass (JIT/codegen/Arrow
+spin-up) then best-of-2 timed passes. 2->8 is the predictive pair on this
+box (8->32 saturates the single memory bus — see CLAUDE.md).
 
 Inputs are materialized once under /tmp and reused across levels, SIZED
 so a 2-core pass lands at ~1-2 min (measured: the cosine ops run on

@@ -4,7 +4,7 @@ Measures the flagship pipeline (read pages parquet -> geotag extract ->
 tile -> per-cell aggregate) at THREE parallelism levels (2, 8, 32 cores) in
 separate JVMs on the identical input, reporting both N->4N pairs.
 
-Each level is CPU-PINNED to exactly N cores and steal-watched
+Each level is CPU-PINNED (``taskset -c 0-(N-1)``) and steal-watched
 (tools/harness.py): the whole process tree — JVM task threads AND
 Python/Arrow workers — shares the N-core slice, exactly like an N-core
 executor on a real cluster.
@@ -355,7 +355,7 @@ def main():
         entry["graph_edges"] = N_EDGES
         entry["graph_iters"] = GRAPH_ITERS
     if "analytics" in legs:
-        _materialize_events()
+        materialize_events()
         entry["analytics"] = _leg("analytics", _analytics)
         entry["analytics_events"] = N_AN_EVENTS
     if "queries" in legs:
@@ -392,7 +392,7 @@ def main():
     # local[2]'s Python workers use spare cores, so mixing them would pair an
     # unpinned 2-core baseline with a pinned 8-core time — apples to oranges.
     runs = [json.loads(line) for line in open(hist_path)]
-    # ...and only quiet-window LEGS: entries that watched host steal
+    # ...and only quiet-window LEGS: entries that watched /proc/stat steal
     # during measurement record which legs saw a noisy hypervisor window
     # (noisy_legs); the merger skips exactly those legs. Legacy entries
     # with only the boolean flag are treated as all-legs-noisy (their
@@ -543,7 +543,7 @@ def main():
         "Flagship = read pages parquet (20M rows, 453 MB zstd) -> geotag",
         "extract (JVM regexp) -> geocell res-13 tile -> per-cell aggregate.",
         "Identical input at every parallelism level; separate JVM per level;",
-        f"each level CPU-PINNED via {harness.TASKSET} to exactly N cores so JVM task",
+        "each level CPU-PINNED via taskset to exactly N cores so JVM task",
         "threads AND Python/Arrow workers share the N-core slice — the",
         "faithful emulation of an N-core executor (unpinned local[N] on a",
         "32-core box lets Python workers overflow onto spare cores, which",
@@ -803,7 +803,7 @@ def main():
             "date-formatting columns in the round-2 query consolidation.",
             "Any other >1.3x row is a noisy window, not a plan change —",
             "plan shapes are pinned by tests/test_plan_shapes.py; rerun",
-            f"`--legs queries` in a quiet window (check {harness.PROC}/stat steal)",
+            "`--legs queries` in a quiet window (check /proc/stat steal)",
             "before reading such a row as a regression.",
             "",
             "| query | prior s | now s | ratio |",
