@@ -10,7 +10,7 @@ hexagon geometry — only on the *index contract*:
   cell -> centroid lat/lon               (G2, base for G7 distance joins)
   cell -> resolution                     (G3, uniformity gate build.py:330-341)
   cell -> parent / children              (blockCV rollup, skew splitting)
-  grid_disk(cell, k)                     (k-ring covers for distance/kNN joins)
+  grid_disk(cell, k) / ring_offsets      (k-ring covers for distance/kNN joins)
   polygon -> covering cells              (PIP join candidate generation)
 
 This module implements that contract with a **pure-arithmetic equal-angle
@@ -32,8 +32,11 @@ same API over real H3 cells via Arrow-batched pandas UDFs.
 Cell id forms:
 - string ``"r:ix:iy"`` (decimal) — mirrors the reference's string ids and is
   reproducible in ANSI SQL for the DuckDB oracle;
-- packed int64 ``(r << 56) | (ix << 28) | iy`` — the compact shuffle-key form
-  used on the perf path (28 bits each side supports res <= 26).
+- packed int64 ``(r << 56) | (ix << 28) | iy`` (:func:`pack_cell`; 28 bits
+  each side supports res <= 26) — the join key of the spatial joins: the
+  k-ring candidates of ``spatial_join.ring_join`` (distance, buffer-anti,
+  rewritten ST_DWITHIN and kNN joins) and the point-in-polygon cover are
+  bigint equi-joins, with no string built per row.
 
 Everything here returns Column expressions; ``numpy`` mirrors for tests and
 driver-side geometry live in :func:`np_encode` etc.
@@ -99,23 +102,43 @@ def latlng_to_cell(lat: Column, lon: Column, res: int = DEFAULT_RES) -> Column:
     )
 
 
+_RES_SHIFT, _IX_SHIFT = 56, 28  # the packed int64 layout: res | ix | iy
+
+
+def pack_cell(res: int, ix, iy):
+    """Packed int64 cell id ``(res << 56) | (ix << 28) | iy``.
+
+    The one definition of the bit layout. ``ix``/``iy`` may be ints,
+    numpy int64 arrays or bigint Columns; a NULL index gives a NULL id.
+    """
+    return (res << _RES_SHIFT) + ix * (1 << _IX_SHIFT) + iy
+
+
 def latlng_to_cell_long(lat: Column, lon: Column, res: int = DEFAULT_RES) -> Column:
-    """lat/lon -> packed int64 cell id (perf/shuffle-key form)."""
-    return (
-        F.lit(res).cast("long") * F.lit(1 << 56)
-        + cell_ix(lon, res) * F.lit(1 << 28)
-        + cell_iy(lat, res)
-    )
+    """lat/lon -> packed int64 cell id (join/shuffle-key form)."""
+    return pack_cell(res, cell_ix(lon, res), cell_iy(lat, res))
 
 
 def cell_long_to_string(cell: Column) -> Column:
     # exact bitwise unpack — double division + floor was only
     # accident-of-range safe (ulp up to 256 at res 26 rested on a
     # non-obvious boundary proof; shifts cannot drift)
-    r = F.shiftright(cell, 56)
-    ix = F.shiftright(cell, 28) % F.lit(1 << 28)
-    iy = cell % F.lit(1 << 28)
+    r = F.shiftright(cell, _RES_SHIFT)
+    ix = F.shiftright(cell, _IX_SHIFT) % F.lit(1 << _IX_SHIFT)
+    iy = cell % F.lit(1 << _IX_SHIFT)
     return F.concat_ws(":", r, ix, iy)
+
+
+def ring_offsets(res: int, k: int) -> list[tuple[int, int]]:
+    """The ``(dx, dy)`` cell offsets of a Chebyshev k-ring at ``res``.
+
+    ``dx`` is reduced modulo :func:`ncols`, so at a coarse res where
+    ``2k + 1 > ncols`` the longitude wrap cannot alias two offsets to one
+    column (each ring cell occurs once). ``dy`` is not wrapped: rows past
+    a pole are dropped by the consumer.
+    """
+    dxs = sorted({dx % ncols(res) for dx in range(-k, k + 1)})
+    return [(dx, dy) for dx in dxs for dy in range(-k, k + 1)]
 
 
 def _parts(cell: Column) -> tuple[Column, Column, Column]:

@@ -7,7 +7,8 @@ window-top-k plan:
 
   1. index query and corpus points to cells (pure Column arithmetic);
   2. corpus explodes to a caller-fixed k-ring cover and equi-joins on
-     cell (:func:`spatial_join.ring_join`, shared with the distance join);
+     the packed int64 cell key (:func:`spatial_join.ring_join`, shared
+     with the distance join);
   3. exact haversine, ``row_number() <= k`` per query.
 
 Queries whose ring under-delivered (< k candidates, or a k-th distance

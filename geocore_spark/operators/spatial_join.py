@@ -10,12 +10,18 @@ plan (cover cells -> equi-join -> exact refine) that stays shuffle-bounded:
   candidate generation:  O(points + layer_cover_cells)  [equi-join shuffle]
   refine:                O(candidate pairs)             [JVM Column filter]
 
+Both candidate joins key on the packed int64 cell id
+(:func:`tiling.pack_cell`): the point-in-polygon cover is one broadcast
+bigint hash join, and the k-ring cover of the distance joins
+(:func:`ring_join`) explodes a literal array of ring offsets, so the
+candidate path runs codegen'd arithmetic with no lambda and no string id.
+
 Every refine is a Column expression: haversine for the distance joins,
 and for point-in-polygon a higher-order-function ray cast over the edges
 each cover cell's latitude strip keeps, read from the layer's one cached
 cover frame. No Python runs per row.
 
-At 100 TB the equi-join on cell ids is an AQE-planned shuffle join whose
+At 100 TB the equi-join on cell keys is an AQE-planned shuffle join whose
 key cardinality (#cells) is controllable via resolution; nothing ever
 materializes |points| x |polygons|.
 """
@@ -256,10 +262,12 @@ def _cover_frame(spark, polygons: DataFrame, res: int) -> tuple[DataFrame, list[
     """Build and persist the cover frame of a polygon layer, and the
     distinct cover resolutions.
 
-    One row per cover cell: ``res, cell, polygon_id, full, rings`` and the
-    layer's columns other than ``polygon_id`` and ``wkb``. ``rings`` is
-    NULL on full rows; on a boundary row it holds the polygon's rings cut
-    to the cell's latitude strip (:func:`_strip_rings`). The layer is read
+    One row per cover cell: ``__cover_key`` (the cell's packed int64 id,
+    :func:`tl.pack_cell`, which carries its res), ``polygon_id``,
+    ``full``, ``rings`` and the layer's columns other than ``polygon_id``
+    and ``wkb``. ``rings`` is NULL on full rows; on a boundary row it
+    holds the polygon's rings cut to the cell's latitude strip
+    (:func:`_strip_rings`). The layer is read
     once, by one collect; the first join that uses the frame fills it.
     """
     rows = polygons.collect()
@@ -276,17 +284,16 @@ def _cover_frame(spark, polygons: DataFrame, res: int) -> tuple[DataFrame, list[
     out = []
     for cell, pid, full, r in cover[["cell", "polygon_id", "full", "res"]].itertuples(index=False):
         pid, full, r = int(pid), bool(full), int(r)
+        _, ix, iy = (int(p) for p in cell.split(":"))
         rings = None
         if not full:
-            iy = int(cell.rsplit(":", 1)[1])
             if (pid, iy) not in strips:
                 strips[(pid, iy)] = _strip_rings(edges[pid], *_strip_bounds(iy, r))
             rings = strips[(pid, iy)]
-        out.append((r, cell, pid, full, rings, *values[pid]))
+        out.append((tl.pack_cell(r, ix, iy), pid, full, rings, *values[pid]))
     schema = T.StructType(
         [
-            T.StructField("res", T.IntegerType()),
-            T.StructField("cell", T.StringType()),
+            T.StructField("__cover_key", T.LongType()),
             T.StructField("polygon_id", T.LongType()),
             T.StructField("full", T.BooleanType()),
             T.StructField("rings", T.DataType.fromDDL(_RINGS_TYPE)),
@@ -380,11 +387,12 @@ def pip_polygon_join(
     columns. Output: ``polygon_id``, the point columns, then the layer's
     attribute columns, one row per (point, containing polygon).
 
-    Plan: points gain a cell id (pure Column arithmetic) -> equi-join with
-    the layer's broadcast cover frame (:func:`_cover_cached`) -> rows in
-    ``full`` cells pass at once; boundary rows run :func:`_inside`, a
-    higher-order-function ray cast over the edges of the row's latitude
-    strip, so a candidate costs the edges in its strip, not the ring size.
+    Plan: points gain a packed int64 cell id per cover res (pure Column
+    arithmetic) -> bigint equi-join with the layer's broadcast cover frame
+    (:func:`_cover_cached`) -> rows in ``full`` cells pass at once;
+    boundary rows run :func:`_inside`, a higher-order-function ray cast
+    over the edges of the row's latitude strip, so a candidate costs the
+    edges in its strip, not the ring size.
     No Python runs per row. Replaces the reference's implicit cartesian
     ST_DWITHIN pattern (build.py:170-176) and its row-at-a-time shapely
     apply (data_pipeline.py:45).
@@ -393,31 +401,20 @@ def pip_polygon_join(
     cover_df = F.broadcast(cover_df)
 
     # ONE equi-join for every cover resolution at once: each polygon
-    # covers at exactly one res, so points explode to their cell id at
-    # each distinct cover res (a handful) and join the broadcast cover on
-    # (res, cell) — one scan of the points, one broadcast probe, instead
-    # of a join + union pair per resolution. At 100 TB the explode factor
-    # is the distinct cover-res count (<= 4), applied before a broadcast
-    # join — no shuffle of the big side.
+    # covers at exactly one res, so points explode to their packed cell id
+    # at each distinct cover res (a handful; the id carries its res) and
+    # probe the broadcast cover on that one bigint — one scan of the
+    # points, one broadcast probe, instead of a join + union pair per
+    # resolution. At 100 TB the explode factor is the distinct cover-res
+    # count (<= 4), applied before a broadcast join — no shuffle of the
+    # big side.
     pts = points.withColumn(
-        "__rc",
+        "__key",
         F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(r).alias("res"),
-                        tl.latlng_to_cell(F.col(lat), F.col(lon), r).alias("cell"),
-                    )
-                    for r in resolutions
-                ]
-            )
+            F.array(*[tl.latlng_to_cell_long(F.col(lat), F.col(lon), r) for r in resolutions])
         ),
     )
-    cand = pts.join(
-        cover_df,
-        (pts["__rc.res"] == cover_df["res"]) & (pts["__rc.cell"] == cover_df["cell"]),
-        "inner",
-    )
+    cand = pts.join(cover_df, pts["__key"] == cover_df["__cover_key"], "inner")
     attrs = [c for c in polygons.columns if c not in ("polygon_id", "wkb")]
     return cand.filter(
         cover_df["full"] | _inside(cover_df["rings"], pts[lon], pts[lat])
@@ -480,20 +477,43 @@ def ring_join(
     k: int,
 ) -> DataFrame:
     """Every (left, right) pair whose res-``res`` cells are within ``k``
-    rings: right rows explode to their ``grid_disk`` cover, then one
-    equi-join on the cell id. Output is left's columns then right's; the
-    caller refines the candidates.
+    rings. Output is left's columns then right's; the caller refines the
+    candidates.
+
+    Each right row explodes to its k-ring: the driver-side
+    :func:`tl.ring_offsets` list is one literal array, so the explode is
+    a codegen'd generator with no per-row lambda or string. Ring cells
+    past a pole are filtered out, the column wraps with ``pmod``, and
+    both sides meet in one equi-join on the packed int64 cell id
+    (:func:`tl.pack_cell`). A NULL or NaN coordinate gives a NULL key,
+    which matches nothing.
     """
-    cell = tl.latlng_to_cell(F.col(left_lat), F.col(left_lon), res)
-    cover = tl.grid_disk(tl.latlng_to_cell(F.col(right_lat), F.col(right_lon), res), k)
-    return (
-        left.withColumn("__ring_cell", cell)
-        .join(
-            right.withColumn("__ring_cover", F.explode(cover)),
-            F.col("__ring_cell") == F.col("__ring_cover"),
-            "inner",
+    ncol, nrow = tl.ncols(res), tl.nrows(res)
+    offsets = F.array(
+        *[
+            F.struct(F.lit(dx).alias("__ring_dx"), F.lit(dy).alias("__ring_dy"))
+            for dx, dy in tl.ring_offsets(res, k)
+        ]
+    )
+    ix, iy = F.col("__ring_ix"), F.col("__ring_iy") + F.col("__ring_dy")
+    cover = (
+        right.select(
+            "*",
+            tl.cell_ix(F.col(right_lon), res).alias("__ring_ix"),
+            tl.cell_iy(F.col(right_lat), res).alias("__ring_iy"),
         )
-        .drop("__ring_cell", "__ring_cover")
+        .select("*", F.inline(offsets))
+        .filter((iy >= 0) & (iy < nrow))
+        .withColumn(
+            "__ring_key", tl.pack_cell(res, F.pmod(ix + F.col("__ring_dx"), F.lit(ncol)), iy)
+        )
+        .drop("__ring_ix", "__ring_iy", "__ring_dx", "__ring_dy")
+    )
+    key = tl.latlng_to_cell_long(F.col(left_lat), F.col(left_lon), res)
+    return (
+        left.withColumn("__ring_cell", key)
+        .join(cover, F.col("__ring_cell") == F.col("__ring_key"), "inner")
+        .drop("__ring_cell", "__ring_key")
     )
 
 

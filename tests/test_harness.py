@@ -20,10 +20,17 @@ import scaling_bench as sb  # noqa: E402
 import winnow_10x_confirm as w10  # noqa: E402
 
 
+def _box(monkeypatch, n: int) -> None:
+    """Pretend this process may run on ``n`` cores."""
+    monkeypatch.setattr(harness.os, "sched_getaffinity", lambda pid: set(range(n)))
+
+
 @pytest.fixture
 def children(monkeypatch):
-    """Stub the child run; record (argv, env, kwargs) of every call."""
+    """Stub the child run on a 32-core box; record (argv, env, kwargs) of
+    every call."""
     calls = []
+    _box(monkeypatch, 32)
 
     def fake_run(argv, env, **kw):
         calls.append((argv, env, kw))
@@ -37,10 +44,43 @@ def children(monkeypatch):
     return calls
 
 
-def test_command_pins_n_cores():
+def test_command_pins_n_cores(monkeypatch):
+    _box(monkeypatch, 8)
     assert harness.command(["-c", "pass"], 8) == ["taskset", "-c", "0-7", sys.executable, "-c", "pass"]
     assert harness.command(["-c", "pass"], 2)[:3] == ["taskset", "-c", "0-1"]
     assert harness.command(["-c", "pass"]) == [sys.executable, "-c", "pass"]
+
+
+def test_levels_above_the_box_are_refused_and_skipped(children, tmp_path, monkeypatch, capsys):
+    """On a 4-core box an 8-core pin is refused; the tools skip the level
+    with a printed line and record no wall for it."""
+    _box(monkeypatch, 4)
+    with pytest.raises(ValueError, match="box has 4 cores"):
+        harness.command(["-c", "pass"], 8)
+    assert harness.command(["-c", "pass"], 4)[:3] == ["taskset", "-c", "0-3"]
+    assert harness.runnable((2, 8, 32)) == [2]
+    assert "t(8) skipped: box has 4 cores" in capsys.readouterr().out
+
+    monkeypatch.setattr(harness, "REPO", str(tmp_path))
+    monkeypatch.setattr(sys, "argv", ["op_scaling_spot.py", "setjoin"])
+    spot.main()
+    (line,) = open(tmp_path / "BENCH" / "op_spots.jsonl").read().splitlines()
+    assert set(json.loads(line)["ops"]["setjoin"]) == {"2", "input", "steal_tps", "noisy"}
+    spot.confirm_10x("setjoin", lambda cpus: 1.0, 1.0, 1.0, "10x")
+    assert len(open(tmp_path / "BENCH" / "op_spots.jsonl").read().splitlines()) == 1
+
+    monkeypatch.setattr(sb, "REPO", str(tmp_path))
+    monkeypatch.setattr(sb, "SF_DIR", sb.SF_DIR)  # main() rebinds it
+    monkeypatch.setattr(sb, "PAGES_PARQUET", str(tmp_path / "pages"))
+    monkeypatch.setattr(sys, "argv", ["scaling_bench.py", "--legs", "flagship,queries"])
+    with pytest.raises(SystemExit, match="no recorded flagship/text legs"):
+        sb.main()
+    (line,) = open(tmp_path / "BENCH" / "history.jsonl").read().splitlines()
+    entry = json.loads(line)
+    assert entry["flagship"] == {"2": 1.0} and "qbench" not in entry
+    assert "t(32) skipped: box has 4 cores" in capsys.readouterr().out
+    pinned = [argv[:3] for argv, _, _ in children if argv[0] == "taskset"]
+    assert pinned and all(pin == ["taskset", "-c", "0-1"] for pin in pinned)
 
 
 def test_run_env_timeout_and_last_line_json(children):

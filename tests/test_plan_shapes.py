@@ -9,6 +9,7 @@ value tests but regress at scale — these tests fail it early.
 
 import contextlib
 import io
+import re
 
 import __spark_entry__ as em
 
@@ -113,6 +114,55 @@ def test_pip_polygon_join_refines_in_the_jvm(spark):
     assert "BroadcastHashJoin" in p and "CartesianProduct" not in p
     for node in ("ArrowEvalPython", "BatchEvalPython", "PythonUDF"):
         assert node not in p, node
+    # the cover probe is one bigint key (an attribute's ``L`` suffix
+    # marks a LongType), not a (res, cell string) pair
+    assert re.search(r"Left keys \[1\]: \[__key#\d+L\]", p), p
+    assert re.search(r"Right keys \[1\]: \[__cover_key#\d+L\]", p), p
+
+
+def _ring_points(spark, n, seed):
+    import numpy as np
+
+    rng = np.random.default_rng(seed)
+    lat, lon = rng.uniform(30, 50, n), rng.uniform(-10, 10, n)
+    return spark.createDataFrame(
+        [(i, float(a), float(b)) for i, (a, b) in enumerate(zip(lat, lon))],
+        "id long, lat double, lon double",
+    )
+
+
+def _assert_ring_candidates(p: str) -> None:
+    """A k-ring candidate join: one bigint equi-join key, built without a
+    lambda, array_distinct or a string cell id."""
+    assert "isFinalPlan=true" in p
+    assert re.search(r"Left keys \[1\]: \[__ring_cell#\d+L\]", p), p
+    assert re.search(r"Right keys \[1\]: \[__ring_key#\d+L\]", p), p
+    for expr in ("lambdafunction", "array_distinct", "concat_ws"):
+        assert expr not in p.lower(), expr
+
+
+def test_distance_join_candidates_on_a_bigint_key(spark):
+    from geocore_spark.operators import spatial_join
+
+    out = spatial_join.distance_join(_ring_points(spark, 200, 1), _ring_points(spark, 50, 2), 50.0)
+    out.collect()
+    _assert_ring_candidates(_formatted(out))
+
+
+def test_knn_round_one_candidates_on_a_bigint_key(spark, monkeypatch):
+    from geocore_spark.operators import knn, spatial_join
+
+    rounds = []
+
+    def recorded(*args):
+        rounds.append(spatial_join.ring_join(*args))
+        return rounds[-1]
+
+    monkeypatch.setattr(knn, "ring_join", recorded)
+    pts = _ring_points(spark, 120, 3)
+    knn.knn_join(pts, pts, k=3, res=6).collect()
+    rounds[0].collect()
+    _assert_ring_candidates(_formatted(rounds[0]))
 
 
 def test_embedding_topk_broadcast_no_shuffle_of_corpus(spark, sf_dir):

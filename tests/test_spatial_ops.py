@@ -112,6 +112,47 @@ def test_buffer_anti_join_complement(spark):
     assert got == want
 
 
+@pytest.mark.parametrize(
+    "res,k,polar",
+    [
+        (1, 2, False),  # 2k+1 = 5 > ncols(1) = 4: the longitude wrap aliases columns
+        (4, 2, True),  # every point within 2 rows of a pole: ring rows past it
+    ],
+)
+def test_ring_join_is_the_chebyshev_ring_exactly_once(spark, res, k, polar):
+    """ring_join's pairs are exactly the pairs whose cells lie within
+    Chebyshev ring distance k (columns wrapping), each pair once; a NULL
+    or NaN coordinate on either side yields no candidate."""
+    rng = np.random.default_rng(res)
+    n = 150
+    if polar:
+        lat = rng.choice([-1.0, 1.0], n) * rng.uniform(70.0, 90.0, n)
+    else:
+        lat = rng.uniform(-90, 90, n)
+    lon = rng.uniform(-180, 180, n)
+    lat[:4] = [90.0, -90.0, 89.9, -89.9]
+    lon[:4] = [180.0, -180.0, 179.9, -179.9]
+    bad = [(None, 1.0), (1.0, None), (float("nan"), 1.0), (1.0, float("nan"))]
+    rows = [(i, float(a), float(b)) for i, (a, b) in enumerate(zip(lat, lon))]
+    rows += [(n + j, a, b) for j, (a, b) in enumerate(bad)]
+    left = spark.createDataFrame(rows, "id long, lat double, lon double")
+    right = spark.createDataFrame(rows[::-1], "rid long, rlat double, rlon double")
+    got = [
+        (r["id"], r["rid"])
+        for r in spatial_join.ring_join(left, right, "lat", "lon", "rlat", "rlon", res, k)
+        .select("id", "rid")
+        .collect()
+    ]
+    assert len(got) == len(set(got))  # no duplicate pair
+    ix, iy = tl.np_encode(lat, lon, res)
+    dx = np.abs(ix[:, None] - ix[None, :])
+    dx = np.minimum(dx, tl.ncols(res) - dx)
+    near = (dx <= k) & (np.abs(iy[:, None] - iy[None, :]) <= k)
+    assert set(got) == {(int(i), int(j)) for i, j in zip(*np.nonzero(near))}
+    if polar:
+        assert {0, tl.nrows(res) - 1} <= set(iy.tolist())
+
+
 def test_pip_slit_polygon_not_marked_full(spark):
     """A single hole-free ring with a thin slit dipping into a cell's
     interior without touching any corner: the cover must NOT mark that

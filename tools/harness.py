@@ -2,7 +2,9 @@
 
 Every scaling measurement runs in a fresh child Python whose whole process
 tree (JVM task threads AND Python/Arrow workers) is CPU-pinned to cores
-0..N-1, so ``local[N]`` behaves like an N-core executor on a cluster.
+0..N-1, so ``local[N]`` behaves like an N-core executor on a cluster. A
+level above the box's core count is skipped (:func:`runnable`), never
+recorded as an N-core wall.
 Without pinning, local[2] on a 32-core box quietly runs its Python workers
 on spare cores, inflating the baseline and deflating measured efficiency
 for any Python-kernel stage (webtext leg: 0.74 unpinned -> 0.96 pinned,
@@ -38,8 +40,29 @@ from perfbench import measure  # noqa: E402
 STEAL_TPS_LIMIT = 50.0
 
 
+def cores() -> int:
+    """How many cores this process may run on."""
+    return len(os.sched_getaffinity(0))
+
+
+def runnable(levels) -> list[int]:
+    """The core counts of ``levels`` this box can pin; prints a skip line
+    for each of the others, which the tools then leave unmeasured."""
+    n = cores()
+    for c in levels:
+        if c > n:
+            print(f"t({c}) skipped: box has {n} cores", flush=True)
+    return [c for c in levels if c <= n]
+
+
 def command(args: list[str], cpus: int | None = None) -> list[str]:
-    """``python *args``, pinned to cores 0..cpus-1 when ``cpus`` is given."""
+    """``python *args``, pinned to cores 0..cpus-1 when ``cpus`` is given.
+
+    Refuses a ``cpus`` above :func:`cores`: taskset accepts a list naming
+    absent cores and keeps only the present ones, so the run would use
+    fewer cores than its level claims."""
+    if cpus is not None and cpus > cores():
+        raise ValueError(f"cannot pin {cpus} cores: box has {cores()} cores")
     pin = [] if cpus is None else ["taskset", "-c", f"0-{cpus - 1}"]
     return [*pin, sys.executable, *args]
 

@@ -432,7 +432,10 @@ def confirm_10x(
     """One 10x-input confirmation of a spot fit T(c) = S + W/c: time
     ``run_level(cpus)`` at 2 and 8 cores, steal-watched per level, and
     append measured vs predicted eff(2->8) to BENCH/op_spots.jsonl as
-    ``op`` (``extra`` fields follow ``op`` in the record)."""
+    ``op`` (``extra`` fields follow ``op`` in the record). A box with
+    fewer than 8 cores measures and records nothing."""
+    if harness.runnable((2, 8)) != [2, 8]:
+        return
     results = {}
     noisy = False
     for cpus in (2, 8):
@@ -503,6 +506,7 @@ def main() -> None:
     }
     entry = {"ts": time.time(), "pinned": True, "ops": {}}
     failed: dict[str, str] = {}
+    levels = harness.runnable((2, 8))
     print("| operator | t(2) s | t(8) s | eff(2->8) | steal t/s |")
     print("|---|---|---|---|---|")
     for op in ops:
@@ -513,24 +517,23 @@ def main() -> None:
         # hours of completed measurements
         watch = harness.StealWatch()
         try:
-            t2 = _run(op, 2)
-            t8 = _run(op, 8)
+            t = {c: _run(op, c) for c in levels}
         except Exception as e:  # noqa: BLE001 — record and continue
             failed[op] = str(e)[:200]
             print(f"| {op} | FAILED | — | — | — | {failed[op]}", flush=True)
             continue
         steal_tps = watch.rate()
-        eff = t2 / (4 * t8)
         entry["ops"][op] = {
-            "2": round(t2, 2),
-            "8": round(t8, 2),
+            **{str(c): round(v, 2) for c, v in t.items()},
             "input": inputs.get(op, "?"),
             "steal_tps": round(steal_tps, 1),
             "noisy": harness.noisy(steal_tps),
         }
         flag = " NOISY" if harness.noisy(steal_tps) else ""
+        t8 = f"{t[8]:.2f}" if 8 in t else "—"
+        eff = f"{t[2] / (4 * t[8]):.2f}" if 8 in t else "—"
         print(
-            f"| {op} | {t2:.2f} | {t8:.2f} | {eff:.2f} |"
+            f"| {op} | {t[2]:.2f} | {t8} | {eff} |"
             f" {steal_tps:.1f}{flag} |",
             flush=True,
         )

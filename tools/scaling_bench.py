@@ -329,7 +329,7 @@ def main():
 
     def _leg(name, fn, levels=(2, 8, 32)):
         vals, worst = {}, 0.0
-        for c in levels:
+        for c in harness.runnable(levels):
             watch = harness.StealWatch()
             vals[c] = fn(c)
             worst = max(worst, watch.rate())
@@ -360,7 +360,9 @@ def main():
         entry["analytics_events"] = N_AN_EVENTS
     if "queries" in legs:
         qb = _leg("queries", _query_bench, levels=(8, 32))
-        entry["qbench"] = {"8": qb[8], "32": qb[32]}
+        entry["qbench"] = {str(c): v for c, v in qb.items()}
+    # a leg whose levels were all skipped records nothing
+    entry = {k: v for k, v in entry.items() if v != {}}
     if steal_tps:
         entry["steal_tps"] = steal_tps
         # PER-LEG flag: one leg hitting a steal burst must not discard the
@@ -452,7 +454,8 @@ def main():
             return None
         out = {}
         for c in (2, 8, 32):
-            vals = [_lvl(r, key, c) for r in have]
+            # a run on a box with fewer than c cores skipped level c
+            vals = [_lvl(r, key, c) for r in have if str(c) in r[key] or c in r[key]]
             if key == "graph_marg":
                 # t(k iters) - t(1 iter) can clamp to ~0 when per-iteration
                 # cost sinks below setup run-to-run variance (measured at
@@ -460,10 +463,7 @@ def main():
                 # cache-build whose variance swamps them). Such values are
                 # "unmeasurable here", not "instant" — never best-merge them.
                 vals = [v for v in vals if v > 1.0]
-                if not vals:
-                    out[c] = None
-                    continue
-            out[c] = min(vals)
+            out[c] = min(vals) if vals else None
         return out
 
     t = _best("flagship")
@@ -489,14 +489,15 @@ def main():
     # query is ever structurally widened under the same name, rename it
     # in bench.py so stale fast times can't mask the accepted slowdown.
     def _qmerge(level):
-        latest = max(qruns, key=lambda r: r["ts"])["qbench"][level]
+        qruns_at = [r for r in qruns if level in r["qbench"]]
+        latest = max(qruns_at, key=lambda r: r["ts"])["qbench"][level]
         qset = set(latest["queries"])
         # epoch guard: same query set AND same input scale — a run at a
         # different sf/n_pages (the tool takes sf_dir positionally) must
         # never donate times to a table labeled sf0.1
         epoch = [
             r["qbench"][level]
-            for r in qruns
+            for r in qruns_at
             if set(r["qbench"][level]["queries"]) == qset
             and r["qbench"][level].get("sf") == latest.get("sf")
             and r["qbench"][level].get("n_pages") == latest.get("n_pages")
