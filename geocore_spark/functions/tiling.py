@@ -9,9 +9,9 @@ hexagon geometry — only on the *index contract*:
   encode(lat, lon, res) -> cell          (G1)
   cell -> centroid lat/lon               (G2, base for G7 distance joins)
   cell -> resolution                     (G3, uniformity gate build.py:330-341)
-  cell -> parent / children              (blockCV rollup, skew splitting)
-  grid_disk(cell, k) / ring_offsets      (k-ring covers for distance/kNN joins)
-  polygon -> covering cells              (PIP join candidate generation)
+  cell -> parent                         (blockCV rollup)
+  ring_offsets(res, k)                   (k-ring covers for distance/kNN joins)
+  bbox -> covering (ix, iy) cells        (PIP join candidate generation)
 
 This module implements that contract with a **pure-arithmetic equal-angle
 quadtree grid** ("geocell"): at resolution r the world is a 2^(r+1) x 2^r
@@ -31,7 +31,9 @@ same API over real H3 cells via Arrow-batched pandas UDFs.
 
 Cell id forms:
 - string ``"r:ix:iy"`` (decimal) — mirrors the reference's string ids and is
-  reproducible in ANSI SQL for the DuckDB oracle;
+  reproducible in ANSI SQL for the DuckDB oracle. This module is the only
+  engine module that formats (:func:`format_cell`, :func:`cell_strings`)
+  or parses (:func:`cell_parts`) it; ``oracle.py`` holds the SQL twins;
 - packed int64 ``(r << 56) | (ix << 28) | iy`` (:func:`pack_cell`; 28 bits
   each side supports res <= 26) — the join key of the spatial joins: the
   k-ring candidates of ``spatial_join.ring_join`` (distance, buffer-anti,
@@ -49,6 +51,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 DEFAULT_RES = 13  # ~2.4 km squares — H3 res-7-equivalent (north rule)
+KM_PER_DEG = 111.195  # great-circle km per degree on the mean earth radius
 
 
 def edge_deg(res: int) -> float:
@@ -75,7 +78,7 @@ def cell_ix(lon: Column, res: int = DEFAULT_RES) -> Column:
     NaN propagate as NULL. Without the guard, least/greatest SKIP nulls
     and floor(NaN) casts to 0, so every bad-coordinate row silently
     encoded to the valid corner cell — one phantom hot cell at (-90,-180)
-    corrupting rollups, grid_disk joins and kNN."""
+    corrupting rollups, k-ring joins and kNN."""
     e = edge_deg(res)
     ix = F.floor((lon + F.lit(180.0)) / F.lit(e)).cast("long")
     clamped = F.least(F.greatest(ix, F.lit(0)), F.lit(ncols(res) - 1))
@@ -97,9 +100,13 @@ def latlng_to_cell(lat: Column, lon: Column, res: int = DEFAULT_RES) -> Column:
     concat_ws SKIPS null arguments (a null ix would otherwise yield a
     malformed two-part id, not NULL)."""
     ix, iy = cell_ix(lon, res), cell_iy(lat, res)
-    return F.when(
-        ix.isNotNull() & iy.isNotNull(), F.concat_ws(":", F.lit(res), ix, iy)
-    )
+    return F.when(ix.isNotNull() & iy.isNotNull(), format_cell(res, ix, iy))
+
+
+def format_cell(res: int, ix: Column, iy: Column) -> Column:
+    """Cell-id string ``"res:ix:iy"`` from bigint index Columns. concat_ws
+    skips NULL arguments, so callers guard NULL indices themselves."""
+    return F.concat_ws(":", F.lit(res), ix, iy)
 
 
 _RES_SHIFT, _IX_SHIFT = 56, 28  # the packed int64 layout: res | ix | iy
@@ -119,16 +126,6 @@ def latlng_to_cell_long(lat: Column, lon: Column, res: int = DEFAULT_RES) -> Col
     return pack_cell(res, cell_ix(lon, res), cell_iy(lat, res))
 
 
-def cell_long_to_string(cell: Column) -> Column:
-    # exact bitwise unpack — double division + floor was only
-    # accident-of-range safe (ulp up to 256 at res 26 rested on a
-    # non-obvious boundary proof; shifts cannot drift)
-    r = F.shiftright(cell, _RES_SHIFT)
-    ix = F.shiftright(cell, _IX_SHIFT) % F.lit(1 << _IX_SHIFT)
-    iy = cell % F.lit(1 << _IX_SHIFT)
-    return F.concat_ws(":", r, ix, iy)
-
-
 def ring_offsets(res: int, k: int) -> list[tuple[int, int]]:
     """The ``(dx, dy)`` cell offsets of a Chebyshev k-ring at ``res``.
 
@@ -141,7 +138,8 @@ def ring_offsets(res: int, k: int) -> list[tuple[int, int]]:
     return [(dx, dy) for dx in dxs for dy in range(-k, k + 1)]
 
 
-def _parts(cell: Column) -> tuple[Column, Column, Column]:
+def cell_parts(cell: Column) -> tuple[Column, Column, Column]:
+    """(res int, ix bigint, iy bigint) Columns of a string cell id."""
     p = F.split(cell, ":")
     return (
         p.getItem(0).cast("int"),
@@ -152,12 +150,12 @@ def _parts(cell: Column) -> tuple[Column, Column, Column]:
 
 def cell_resolution(cell: Column) -> Column:
     """Resolution of a string cell id (G3; h3.h3_get_resolution analogue)."""
-    return _parts(cell)[0]
+    return cell_parts(cell)[0]
 
 
 def cell_to_latlng(cell: Column) -> Column:
     """cell -> struct(lat, lon) centroid (G2; H3_CELL_TO_POINT + ST_X/ST_Y)."""
-    r, ix, iy = _parts(cell)
+    r, ix, iy = cell_parts(cell)
     e = F.lit(180.0) / F.pow(F.lit(2.0), r.cast("double"))
     lat = F.lit(-90.0) + (iy.cast("double") + F.lit(0.5)) * e
     lon = F.lit(-180.0) + (ix.cast("double") + F.lit(0.5)) * e
@@ -173,83 +171,25 @@ def cell_to_parent(cell: Column, parent_res: int) -> Column:
     negative exponent made shift 0 and the division aborted the whole
     stage with DIVIDE_BY_ZERO under ANSI mode.
     """
-    r, ix, iy = _parts(cell)
+    r, ix, iy = cell_parts(cell)
     shift = F.pow(F.lit(2.0), (r - F.lit(parent_res)).cast("double")).cast("long")
-    coarsened = F.concat_ws(
-        ":", F.lit(parent_res), F.floor(ix / shift), F.floor(iy / shift)
-    )
+    coarsened = format_cell(parent_res, F.floor(ix / shift), F.floor(iy / shift))
     return F.when(r > F.lit(parent_res), coarsened).when(
         r == F.lit(parent_res), cell
     )
 
 
-def cell_to_children(cell: Column, child_res: int) -> Column:
-    """cell -> array of child cell ids at ``child_res`` (skew splitting).
-
-    4^(child_res - r) children; generated JVM-side with sequence + transform
-    (no UDF). Intended for small deltas (1-2 levels), as in adaptive
-    mega-cell splitting.
-    """
-    r, ix, iy = _parts(cell)
-    k = F.pow(F.lit(2.0), (F.lit(child_res) - r).cast("double")).cast("long")
-    return F.flatten(
-        F.transform(
-            F.sequence(F.lit(0).cast("long"), k - F.lit(1)),
-            lambda dx: F.transform(
-                F.sequence(F.lit(0).cast("long"), k - F.lit(1)),
-                lambda dy: F.concat_ws(
-                    ":", F.lit(child_res), ix * k + dx, iy * k + dy
-                ),
-            ),
-        )
-    )
-
-
-def grid_disk(cell: Column, k: int) -> Column:
-    """All cells within Chebyshev ring-distance k (h3.grid_disk analogue).
-
-    (2k+1)^2 ids built with sequence/transform — JVM-side, explode-ready.
-    Longitude wraps modulo the column count; latitude clamps at the poles
-    (out-of-range rows dropped by the filter).
-    """
-    r, ix, iy = _parts(cell)
-    ncol = F.pow(F.lit(2.0), (r + F.lit(1)).cast("double")).cast("long")
-    nrow = F.pow(F.lit(2.0), r.cast("double")).cast("long")
-    rng = F.sequence(F.lit(-k), F.lit(k))
-    # array_distinct: at coarse res the longitude wrap can alias two dx
-    # offsets to one column (2k+1 > ncol) — without dedup a consumer that
-    # explodes the disk would double-count pairs (e.g. the same neighbor
-    # twice in a kNN top-k).
-    return F.array_distinct(
-        F.filter(
-            F.flatten(
-                F.transform(
-                    rng,
-                    lambda dx: F.transform(
-                        rng,
-                        lambda dy: F.when(
-                            (iy + dy >= 0) & (iy + dy < nrow),
-                            F.concat_ws(":", r, F.pmod(ix + dx, ncol), iy + dy),
-                        ),
-                    ),
-                )
-            ),
-            lambda c: c.isNotNull(),
-        )
-    )
-
-
 def rings_for_km(distance_km: float, res: int, max_abs_lat: float = 66.0) -> int:
-    """Ring count k such that grid_disk(cell, k) covers ``distance_km``.
+    """Ring count k such that the k-ring of :func:`ring_offsets` around a
+    cell covers every point within ``distance_km`` of the cell.
 
     Uses the narrowest cell width in the latitude band (cos shrinks
     east-west extent). ``spatial_join.ring_plan`` calls this to size the
     k-ring cover of the distance joins (G7); those joins raise on rows
     above ``max_abs_lat``, so callers with polar data pass their band.
     """
-    km_per_deg = 111.195  # mean earth radius great-circle km per degree
-    width = edge_deg(res) * km_per_deg * max(np.cos(np.radians(max_abs_lat)), 1e-9)
-    height = edge_deg(res) * km_per_deg
+    width = edge_deg(res) * KM_PER_DEG * max(np.cos(np.radians(max_abs_lat)), 1e-9)
+    height = edge_deg(res) * KM_PER_DEG
     return int(np.ceil(distance_km / min(width, height)))
 
 
@@ -266,11 +206,13 @@ def np_encode(lat: np.ndarray, lon: np.ndarray, res: int = DEFAULT_RES):
     return ix, iy
 
 
+def cell_strings(res: int, ix, iy) -> list[str]:
+    """Cell-id strings ``"res:ix:iy"`` of integer index sequences."""
+    return [f"{res}:{x}:{y}" for x, y in zip(ix, iy)]
+
+
 def np_cell_strings(lat, lon, res: int = DEFAULT_RES) -> np.ndarray:
-    ix, iy = np_encode(lat, lon, res)
-    return np.char.add(
-        np.char.add(f"{res}:", ix.astype(str)), np.char.add(":", iy.astype(str))
-    )
+    return np.array(cell_strings(res, *np_encode(lat, lon, res)))
 
 
 def np_centroid(ix: np.ndarray, iy: np.ndarray, res: int = DEFAULT_RES):
@@ -280,9 +222,10 @@ def np_centroid(ix: np.ndarray, iy: np.ndarray, res: int = DEFAULT_RES):
 
 def bbox_to_cells(
     lat_min: float, lat_max: float, lon_min: float, lon_max: float, res: int = DEFAULT_RES
-) -> list[str]:
-    """All cell ids intersecting a bounding box (driver-side; polygon covers
-    start from this then refine). Matches h3.polygon_to_cells' role (G9).
+) -> tuple[np.ndarray, np.ndarray]:
+    """``(ix, iy)`` int64 arrays of every cell intersecting a bounding box,
+    row by row (driver-side; polygon covers start from this then refine).
+    Matches h3.polygon_to_cells' role (G9).
 
     ``lon_min > lon_max`` means the box crosses the antimeridian: the
     column range wraps (…, ncols-1, 0, …) — previously this silently
@@ -300,4 +243,4 @@ def bbox_to_cells(
         xs = np.arange(ix0[0], ix1[0] + 1)
     ys = np.arange(iy0[0], iy1[0] + 1)
     gx, gy = np.meshgrid(xs, ys)
-    return [f"{res}:{x}:{y}" for x, y in zip(gx.ravel(), gy.ravel())]
+    return gx.ravel(), gy.ravel()

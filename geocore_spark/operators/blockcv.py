@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from geocore_spark import oracle as orc
 from geocore_spark.functions import tiling as tl
 
 
@@ -52,15 +53,12 @@ def fold_parity_expr(block: Column, n_folds: int) -> Column:
     """Deterministic arithmetic fold id from the block cell indices —
     spatially striped (adjacent blocks land in different folds), exactly
     reproducible in ANSI SQL."""
-    p = F.split(block, ":")
-    return F.pmod(
-        p.getItem(1).cast("long") + p.getItem(2).cast("long"), F.lit(n_folds)
-    ).cast("int")
+    _, ix, iy = tl.cell_parts(block)
+    return F.pmod(ix + iy, F.lit(n_folds)).cast("int")
 
 
 def fold_parity_sql(block_sql: str, n_folds: int) -> str:
-    ix = f"CAST(string_split({block_sql}, ':')[2] AS BIGINT)"
-    iy = f"CAST(string_split({block_sql}, ':')[3] AS BIGINT)"
+    _, ix, iy = orc.cell_parts_sql(block_sql)
     return f"CAST((({ix} + {iy}) % {n_folds} + {n_folds}) % {n_folds} AS INT)"
 
 

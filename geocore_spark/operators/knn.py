@@ -84,7 +84,7 @@ def knn_join(
         # guaranteed covered radius at this query's latitude: ring *
         # edge, shrunk by cos of the worst-case |lat| inside the disk
         edge_deg = tl.edge_deg(res)
-        edge_km = edge_deg * 111.195
+        edge_km = edge_deg * tl.KM_PER_DEG
         worst_lat = F.least(F.abs(F.col("__qlat")) + F.lit(ring * edge_deg), F.lit(90.0))
         safe_km = F.lit(ring * edge_km) * F.cos(F.radians(worst_lat))
         counts = topk.groupBy(query_id).agg(

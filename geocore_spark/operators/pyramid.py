@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from geocore_spark import oracle as orc
 from geocore_spark.functions import tiling as tl
 
 
@@ -59,12 +60,7 @@ def tile_pyramid(
     iy = tl.cell_iy(la, res_max)
     cells = F.array(
         *[
-            F.concat_ws(
-                ":",
-                F.lit(r),
-                F.shiftright(ix, res_max - r),
-                F.shiftright(iy, res_max - r),
-            )
+            tl.format_cell(r, F.shiftright(ix, res_max - r), F.shiftright(iy, res_max - r))
             for r in range(res_min, res_max + 1)
         ]
     )
@@ -75,7 +71,7 @@ def tile_pyramid(
         aggs.append(F.sum(value).alias(f"sum_{value}"))
     return exploded.groupBy("cell").agg(*aggs).select(
         "cell",
-        F.split("cell", ":").getItem(0).cast("int").alias("res"),
+        tl.cell_resolution(F.col("cell")).alias("res"),
         *(["n_points"] + ([f"sum_{value}"] if value is not None else [])),
     )
 
@@ -90,8 +86,6 @@ def tile_pyramid_sql(
     """DuckDB twin: one per-res quantizer SELECT per level, UNION ALL,
     then the same GROUP BY — value-identical to the shift derivation
     (see module docstring)."""
-    from geocore_spark import oracle as orc
-
     levels = " UNION ALL ".join(
         f"SELECT {orc.cell_sql(lat, lon, r)} AS cell FROM {from_clause} "
         f"WHERE ({lat}) IS NOT NULL AND ({lon}) IS NOT NULL "
@@ -99,6 +93,6 @@ def tile_pyramid_sql(
         for r in range(res_min, res_max + 1)
     )
     return (
-        "SELECT cell, CAST(string_split(cell, ':')[1] AS INT) AS res, "
+        f"SELECT cell, {orc.cell_parts_sql('cell')[0]} AS res, "
         f"COUNT(*) AS n_points FROM ({levels}) GROUP BY 1, 2"
     )

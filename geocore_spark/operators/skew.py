@@ -17,9 +17,9 @@ Two complementary strategies:
    decimal accumulation when comparing.
 
 2. **Adaptive cell splitting** (holistic work, e.g. per-cell pandas UDFs):
-   cells whose count exceeds a threshold are re-encoded at finer
-   resolution via ``cell_to_children``-style re-indexing, processed, then
-   re-parented with ``cell_to_parent`` — SURVEY §4.2.
+   cells whose count exceeds a threshold are re-encoded from their
+   coordinates at a finer resolution, processed, then re-parented with
+   ``cell_to_parent`` — SURVEY §4.2.
 
 AQE's skew-join splitting handles *join* skew automatically
 (``spark.sql.adaptive.skewJoin.enabled`` set in the session factory);

@@ -112,10 +112,13 @@ def _segments_cross_cells(
     return out
 
 
+_MAX_COVER_CELLS = 2048
+
+
 def polygon_cover_cells(
     polygons_pdf: pd.DataFrame,
     res: int = tl.DEFAULT_RES,
-    max_cover_cells: int = 2048,
+    max_cover_cells: int = _MAX_COVER_CELLS,
 ) -> pd.DataFrame:
     """Driver-side cover table: (cell, polygon_id, full_flag, res).
 
@@ -129,6 +132,20 @@ def polygon_cover_cells(
     coastline), so this is cheap driver work; the result is broadcast.
     """
     out_cell, out_pid, out_full, out_res = [], [], [], []
+    for pid, r, ix, iy, full in _cover(polygons_pdf, res, max_cover_cells):
+        out_cell.extend(tl.cell_strings(r, ix, iy))
+        out_pid.extend([pid] * len(ix))
+        out_full.extend(bool(b) for b in full)
+        out_res.extend([r] * len(ix))
+    return pd.DataFrame(
+        {"cell": out_cell, "polygon_id": out_pid, "full": out_full, "res": out_res}
+    )
+
+
+def _cover(polygons_pdf: pd.DataFrame, res: int, max_cover_cells: int = _MAX_COVER_CELLS):
+    """Yield ``(polygon_id, res, ix, iy, full)`` per polygon: the cover
+    cells of :func:`polygon_cover_cells` as int64 index arrays, with their
+    full flags, without building a cell-id string."""
     for _, row in polygons_pdf.iterrows():
         wkb = bytes(row["wkb"])
         lon0, lat0, lon1, lat1 = wkb_mod.polygon_bbox(wkb)
@@ -139,11 +156,7 @@ def polygon_cover_cells(
             if n_est <= max_cover_cells:
                 break
             r -= 1
-        cells = tl.bbox_to_cells(lat0, lat1, lon0, lon1, r)
-        if not cells:
-            continue
-        parts = np.array([c.split(":") for c in cells], dtype=np.int64)
-        ix, iy = parts[:, 1], parts[:, 2]
+        ix, iy = tl.bbox_to_cells(lat0, lat1, lon0, lon1, r)
         e = tl.edge_deg(r)
         cx = -180.0 + ix * e
         cy = -90.0 + iy * e
@@ -155,8 +168,8 @@ def polygon_cover_cells(
         # inside the slit (silent false positives).
         gtype, polys = wkb_mod.decode(wkb)
         simple = gtype == "Polygon" and len(polys) == 1 and len(polys[0]) == 1
-        all_in = np.full(len(cells), simple)
-        any_corner = np.zeros(len(cells), dtype=bool)
+        all_in = np.full(len(ix), simple)
+        any_corner = np.zeros(len(ix), dtype=bool)
         for dx in (0.0, 1.0):
             for dy in (0.0, 1.0):
                 inside = pip_mod.points_in_wkb(cx + dx * e, cy + dy * e, wkb)
@@ -174,7 +187,7 @@ def polygon_cover_cells(
         # demotes full flags, so the join stays exact.
         m = _encode_margin(e)
         bx, by, be = cx - m, cy - m, e + 2 * m
-        boundary = np.zeros(len(cells), dtype=bool)
+        boundary = np.zeros(len(ix), dtype=bool)
         for rings in polys:
             for ring in rings:
                 vx, vy = ring[:-1, 0], ring[:-1, 1]
@@ -184,13 +197,7 @@ def polygon_cover_cells(
                 boundary |= _segments_cross_cells(ring, bx, by, be, skip=boundary)
         all_in &= ~boundary
         keep = any_corner | boundary
-        out_cell.extend(np.asarray(cells, dtype=object)[keep])
-        out_pid.extend([row["polygon_id"]] * int(keep.sum()))
-        out_full.extend(bool(b) for b in all_in[keep])
-        out_res.extend([r] * int(keep.sum()))
-    return pd.DataFrame(
-        {"cell": out_cell, "polygon_id": out_pid, "full": out_full, "res": out_res}
-    )
+        yield row["polygon_id"], r, ix[keep], iy[keep], all_in[keep]
 
 
 _RINGS_TYPE = (
@@ -276,21 +283,21 @@ def _cover_frame(spark, polygons: DataFrame, res: int) -> tuple[DataFrame, list[
     if dups:
         raise ValueError(f"polygon layer has duplicate polygon_id values: {dups}")
     blobs = [bytes(r["wkb"]) for r in rows]
-    cover = polygon_cover_cells(pd.DataFrame({"polygon_id": ids, "wkb": blobs}), res)
     attrs = [f for f in polygons.schema.fields if f.name not in ("polygon_id", "wkb")]
     values = {pid: tuple(r[f.name] for f in attrs) for pid, r in zip(ids, rows)}
     edges = {pid: _ring_edges(blob) for pid, blob in zip(ids, blobs)}
     strips = {}  # (polygon_id, iy) -> ring entries, shared by the cells of a row
-    out = []
-    for cell, pid, full, r in cover[["cell", "polygon_id", "full", "res"]].itertuples(index=False):
-        pid, full, r = int(pid), bool(full), int(r)
-        _, ix, iy = (int(p) for p in cell.split(":"))
-        rings = None
-        if not full:
-            if (pid, iy) not in strips:
-                strips[(pid, iy)] = _strip_rings(edges[pid], *_strip_bounds(iy, r))
-            rings = strips[(pid, iy)]
-        out.append((tl.pack_cell(r, ix, iy), pid, full, rings, *values[pid]))
+    out, cover_res = [], set()
+    for pid, r, ixs, iys, fulls in _cover(pd.DataFrame({"polygon_id": ids, "wkb": blobs}), res):
+        pid = int(pid)
+        for ix, iy, full in zip(ixs.tolist(), iys.tolist(), fulls.tolist()):
+            rings = None
+            if not full:
+                if (pid, iy) not in strips:
+                    strips[(pid, iy)] = _strip_rings(edges[pid], *_strip_bounds(iy, r))
+                rings = strips[(pid, iy)]
+            out.append((tl.pack_cell(r, ix, iy), pid, full, rings, *values[pid]))
+            cover_res.add(r)
     schema = T.StructType(
         [
             T.StructField("__cover_key", T.LongType()),
@@ -301,7 +308,7 @@ def _cover_frame(spark, polygons: DataFrame, res: int) -> tuple[DataFrame, list[
         ]
     )
     frame = spark.createDataFrame(out, schema, verifySchema=False).persist()
-    return frame, sorted(int(r) for r in cover["res"].unique())
+    return frame, sorted(cover_res)
 
 
 _COVER_CACHE: OrderedDict[tuple, tuple[DataFrame, list[int]]] = OrderedDict()

@@ -61,6 +61,13 @@ def cell_sql(lat_sql: str, lon_sql: str, res: int = tl.DEFAULT_RES) -> str:
     )
 
 
+def cell_parts_sql(cell_sql: str) -> tuple[str, str, str]:
+    """(res INT, ix BIGINT, iy BIGINT) of a string cell id: the SQL twin of
+    ``tiling.cell_parts``."""
+    p = f"string_split({cell_sql}, ':')"
+    return f"CAST({p}[1] AS INT)", f"CAST({p}[2] AS BIGINT)", f"CAST({p}[3] AS BIGINT)"
+
+
 def cell_iy_sql(lat_sql: str, res: int = tl.DEFAULT_RES) -> str:
     e = f"CAST({tl.edge_deg(res)!r} AS DOUBLE)"
     return (

@@ -20,9 +20,6 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
-
 def get_spark(
     app_name: str = "geocore_spark",
     master: str | None = None,

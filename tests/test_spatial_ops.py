@@ -1,5 +1,6 @@
 """Spatial operators vs brute-force ground truth on synthetic points."""
 
+import hashlib
 import struct
 
 import numpy as np
@@ -123,6 +124,9 @@ def test_ring_join_is_the_chebyshev_ring_exactly_once(spark, res, k, polar):
     """ring_join's pairs are exactly the pairs whose cells lie within
     Chebyshev ring distance k (columns wrapping), each pair once; a NULL
     or NaN coordinate on either side yields no candidate."""
+    offsets = tl.ring_offsets(res, k)
+    assert (0, 0) in offsets and len(set(offsets)) == len(offsets)
+    assert len(offsets) == min(2 * k + 1, tl.ncols(res)) * (2 * k + 1)  # 20 at res 1, 25 at res 4
     rng = np.random.default_rng(res)
     n = 150
     if polar:
@@ -149,8 +153,28 @@ def test_ring_join_is_the_chebyshev_ring_exactly_once(spark, res, k, polar):
     dx = np.minimum(dx, tl.ncols(res) - dx)
     near = (dx <= k) & (np.abs(iy[:, None] - iy[None, :]) <= k)
     assert set(got) == {(int(i), int(j)) for i, j in zip(*np.nonzero(near))}
+    assert any(abs(ix[i] - ix[j]) > k for i, j in got)  # pairs across the antimeridian
     if polar:
         assert {0, tl.nrows(res) - 1} <= set(iy.tolist())
+
+
+def _slit_polygon(res: int) -> tuple[bytes, float, float, float]:
+    """A big square around the cell holding (2, 2) at ``res``, with a thin
+    slit cut from its left edge to the cell's center band: the slit
+    enters the cell and touches none of its corners. Returns the WKB, the
+    cell's lower-left corner and its edge."""
+    e = tl.edge_deg(res)
+    cx = (2.0 + 180.0) // e * e - 180.0
+    cy = (2.0 + 90.0) // e * e - 90.0
+    slit_y0, slit_y1 = cy + 0.45 * e, cy + 0.55 * e
+    ring = np.array([
+        (cx - 2 * e, cy - 2 * e), (cx + 3 * e, cy - 2 * e),
+        (cx + 3 * e, cy + 3 * e), (cx - 2 * e, cy + 3 * e),
+        (cx - 2 * e, slit_y1), (cx + 0.5 * e, slit_y1),
+        (cx + 0.5 * e, slit_y0), (cx - 2 * e, slit_y0),
+        (cx - 2 * e, cy - 2 * e),
+    ])
+    return wkb_mod.encode_polygon([ring]), cx, cy, e
 
 
 def test_pip_slit_polygon_not_marked_full(spark):
@@ -164,21 +188,7 @@ def test_pip_slit_polygon_not_marked_full(spark):
     )
 
     res = 5  # edge 5.625 deg
-    e = tl.edge_deg(res)
-    # cell containing the origin-ish area: pick the cell for (2.0, 2.0)
-    cx = (2.0 + 180.0) // e * e - 180.0
-    cy = (2.0 + 90.0) // e * e - 90.0
-    # big square around the cell, with a slit cut from the left edge to
-    # the cell's center band (enters the cell, touches no corner)
-    slit_y0, slit_y1 = cy + 0.45 * e, cy + 0.55 * e
-    ring = np.array([
-        (cx - 2 * e, cy - 2 * e), (cx + 3 * e, cy - 2 * e),
-        (cx + 3 * e, cy + 3 * e), (cx - 2 * e, cy + 3 * e),
-        (cx - 2 * e, slit_y1), (cx + 0.5 * e, slit_y1),
-        (cx + 0.5 * e, slit_y0), (cx - 2 * e, slit_y0),
-        (cx - 2 * e, cy - 2 * e),
-    ])
-    wkb = wkb_mod.encode_polygon([ring])
+    wkb, cx, cy, e = _slit_polygon(res)
     pdf = pd.DataFrame({"polygon_id": [1], "wkb": [wkb]})
     cover = polygon_cover_cells(pdf, res=res, max_cover_cells=4096)
     cell_id = f"{res}:{int((cx + 180) / e)}:{int((cy + 90) / e)}"
@@ -193,6 +203,53 @@ def test_pip_slit_polygon_not_marked_full(spark):
     polys = spark.createDataFrame(pdf.assign(wkb=[bytearray(wkb)]))
     got = {r["id"] for r in pip_polygon_join(pts, polys, res=res).collect()}
     assert got == {1}
+
+
+def _digest(rows) -> str:
+    return hashlib.sha256(repr(rows).encode()).hexdigest()[:16]
+
+
+# (rows, digest) of polygon_cover_cells' (cell, polygon_id, full, res) rows
+# and of _cover_frame's (__cover_key, polygon_id, full, rings) rows, in
+# output order, recorded when both built string cell ids and split them
+# back; the integer (ix, iy) cover path must reproduce them exactly
+_COVER_PINS = {
+    "polygons_120": ((57794, "e7fd889e788ba0db"), (57794, "2aec6ff1ad2c8953")),
+    "slit": ((36, "d1c623df1f572b75"), (36, "a8318740d8ae1a58")),
+}
+
+
+@pytest.mark.parametrize("layer", sorted(_COVER_PINS))
+def test_cover_rows_and_strip_rings_are_pinned(spark, layer):
+    if layer == "slit":
+        res = 5
+        polys = spark.createDataFrame(
+            pd.DataFrame({"polygon_id": [1], "wkb": [bytearray(_slit_polygon(res)[0])]})
+        )
+    else:
+        res = tl.DEFAULT_RES
+        polys = pgn.polygon_layer(spark, 120)
+    rows = polys.select("polygon_id", "wkb").collect()
+    pdf = pd.DataFrame(
+        {"polygon_id": [r["polygon_id"] for r in rows], "wkb": [bytes(r["wkb"]) for r in rows]}
+    )
+    cover = [
+        (c, int(p), bool(f), int(r))
+        for c, p, f, r in spatial_join.polygon_cover_cells(pdf, res)[
+            ["cell", "polygon_id", "full", "res"]
+        ].itertuples(index=False)
+    ]
+    frame, _ = spatial_join._cover_frame(spark, polys, res)
+    keyed = [
+        (
+            r["__cover_key"], r["polygon_id"], r["full"],
+            None if r["rings"] is None else [tuple(x) for x in r["rings"]],
+        )
+        for r in frame.select("__cover_key", "polygon_id", "full", "rings").collect()
+    ]
+    frame.unpersist()
+    got = ((len(cover), _digest(cover)), (len(keyed), _digest(keyed)))
+    assert got == _COVER_PINS[layer]
 
 
 def _multipolygon(*parts) -> bytes:

@@ -1,6 +1,10 @@
-"""Tiling grid: Column exprs vs numpy mirror, hierarchy, k-ring."""
+"""Tiling grid: Column exprs vs numpy mirror, hierarchy, cell-id codec."""
+
+import re
+from pathlib import Path
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from geocore_spark.functions import tiling as tl
@@ -24,15 +28,15 @@ def test_numpy_mirror_matches_column_expr(spark):
 
 
 def test_long_and_string_forms_agree(spark):
-    df = spark.createDataFrame([(10.5, 20.25), (-45.0, 170.1)], "lat double, lon double")
-    out = df.select(
-        tl.latlng_to_cell(F.col("lat"), F.col("lon"), 13).alias("s"),
-        tl.cell_long_to_string(
-            tl.latlng_to_cell_long(F.col("lat"), F.col("lon"), 13)
-        ).alias("from_long"),
-    ).collect()
-    for r in out:
-        assert r["s"] == r["from_long"]
+    lat, lon = np.array([10.5, -45.0, 90.0]), np.array([20.25, 170.1, 180.0])
+    df = spark.createDataFrame(
+        [(float(a), float(b)) for a, b in zip(lat, lon)], "lat double, lon double"
+    )
+    got = [
+        r[0]
+        for r in df.select(tl.latlng_to_cell_long(F.col("lat"), F.col("lon"), 13)).collect()
+    ]
+    assert got == tl.pack_cell(13, *tl.np_encode(lat, lon, 13)).tolist()
 
 
 def test_centroid_within_cell(spark):
@@ -52,11 +56,16 @@ def test_parent_and_children_roundtrip(spark):
         cell.alias("cell"),
         tl.cell_to_parent(cell, 11).alias("parent"),
         tl.latlng_to_cell(F.col("lat"), F.col("lon"), 11).alias("direct11"),
-        tl.cell_to_children(tl.cell_to_parent(cell, 11), 13).alias("children"),
     ).first()
     assert row["parent"] == row["direct11"]
-    assert len(row["children"]) == 16
-    assert row["cell"] in row["children"]
+    # the 16 res-13 children of the parent all re-parent to it, the cell among them
+    _, px, py = (int(p) for p in row["parent"].split(":"))
+    kids = [f"13:{4 * px + dx}:{4 * py + dy}" for dx in range(4) for dy in range(4)]
+    assert len(set(kids)) == 16 and row["cell"] in kids
+    df = spark.createDataFrame([(k,) for k in kids], "cell string")
+    assert {r[0] for r in df.select(tl.cell_to_parent(F.col("cell"), 11)).collect()} == {
+        row["parent"]
+    }
 
 
 def test_null_and_nan_coords_encode_to_null(spark):
@@ -112,39 +121,12 @@ def test_cell_to_parent_guards(spark):
 
 
 def test_bbox_to_cells_antimeridian_wraps(spark):
-    cells = tl.bbox_to_cells(10.0, 11.0, 179.5, -179.5, res=9)
-    assert cells  # previously silently empty
-    xs = {int(c.split(":")[1]) for c in cells}
+    ix, iy = tl.bbox_to_cells(10.0, 11.0, 179.5, -179.5, res=9)
+    assert len(ix) == len(iy) > 0  # previously silently empty
+    xs = set(ix.tolist())
     assert max(xs) == tl.ncols(9) - 1 and min(xs) == 0  # both sides of the seam
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="lat_min"):
+    with pytest.raises(ValueError, match="lat_min"):
         tl.bbox_to_cells(11.0, 10.0, 0.0, 1.0, res=9)
-
-
-def test_grid_disk_counts_and_membership(spark):
-    df = spark.createDataFrame([(37.77, -122.42)], "lat double, lon double")
-    cell = tl.latlng_to_cell(F.col("lat"), F.col("lon"), 13)
-    row = df.select(cell.alias("c"), tl.grid_disk(cell, 2).alias("disk")).first()
-    assert len(row["disk"]) == 25
-    assert row["c"] in row["disk"]
-    assert len(set(row["disk"])) == 25
-
-
-def test_grid_disk_wraps_longitude(spark):
-    df = spark.createDataFrame([(0.0, 179.999)], "lat double, lon double")
-    cell = tl.latlng_to_cell(F.col("lat"), F.col("lon"), 5)
-    row = df.select(tl.grid_disk(cell, 1).alias("d")).first()
-    assert len(row["d"]) == 9
-    ixs = {int(c.split(":")[1]) for c in row["d"]}
-    assert 0 in ixs  # wrapped across the antimeridian
-
-
-def test_grid_disk_clamps_poles(spark):
-    df = spark.createDataFrame([(89.99, 0.0)], "lat double, lon double")
-    cell = tl.latlng_to_cell(F.col("lat"), F.col("lon"), 5)
-    row = df.select(tl.grid_disk(cell, 1).alias("d")).first()
-    assert len(row["d"]) == 6  # top row clipped
 
 
 def test_rings_for_km():
@@ -161,13 +143,23 @@ def test_resolution_extraction(spark):
     assert row["r"] == 9
 
 
-def test_grid_disk_distinct_when_ring_wraps_whole_globe(spark):
-    """At coarse res the lon wrap can alias two dx offsets to one column
-    (2k+1 > ncol); the disk must still contain each cell once — duplicate
-    cover cells would double-count join pairs (e.g. kNN top-k slots)."""
-    df = spark.createDataFrame([(10.0, 20.0)], "lat double, lon double")
-    cell = tl.latlng_to_cell(F.col("lat"), F.col("lon"), 2)  # ncol=8 < 2*4+1
-    row = df.select(tl.grid_disk(cell, 4).alias("d")).first()
-    assert len(row["d"]) == len(set(row["d"]))
-    ixs = {int(c.split(":")[1]) for c in row["d"]}
-    assert ixs == set(range(8))  # full wrap covers every column exactly once
+def test_only_tiling_and_oracle_know_the_cell_id_layout():
+    """Under geocore_spark/, only functions/tiling.py and its SQL twins in
+    oracle.py split or format the "r:ix:iy" separator; every other module
+    goes through them."""
+    pkg = Path(tl.__file__).resolve().parents[1]
+    code = {
+        "split on ':'": r"split\((?:[^\n]*?,\s*)?[\"']:[\"']",
+        "concat_ws(':'": r"concat_ws\(\s*[\"']:[\"']",
+        "SQL concat(.., ':', ..)": r"\bconcat\([^\n]*?,\s*[\"']:[\"']\s*,",
+        "f-string layout": r"\{[^{}\n]*\}:(?:\{|[\"'])",
+    }
+    seen = set()
+    for path in sorted(pkg.rglob("*.py")):
+        name = path.relative_to(pkg).as_posix()
+        text = path.read_text()
+        for what, pattern in code.items():
+            if re.search(pattern, text):
+                assert name in ("functions/tiling.py", "oracle.py"), (name, what)
+                seen.add(what)
+    assert seen == set(code)  # each pattern still matches the codec itself
